@@ -90,6 +90,21 @@ def _logical_code(lt: str):
     )
 
 
+def _decode_once(spark, path: str) -> tuple:
+    """(rows, physical types) of a Jelly file: the resolved rows are
+    checkpointed eagerly, and that one decode job also observes the
+    stream's declared physical types."""
+    from pyspark.sql import Observation
+
+    from . import jelly as J
+
+    obs = Observation()
+    rows = J.decode_frames(J.read_jelly_file(spark, path)).observe(
+        obs, J.physical_types_metric().alias("phys")
+    ).localCheckpoint()
+    return rows, set(obs.get["phys"])
+
+
 def _inspect_options(path: str) -> dict:
     """The declared stream options as the reference's inspect YAML block
     (MetricsPrinter.formatOptions, printed FIRST in both aggregate and
@@ -921,6 +936,7 @@ def _dispatch(spark, args) -> int:
             format_detail,
             per_frame_metrics_full,
             render_yaml,
+            stream_totals,
             wire_term_detail,
         )
 
@@ -977,14 +993,7 @@ def _dispatch(spark, args) -> int:
                     ))
             out = {"stream_options": _inspect_options(args.input), "frames": frames}
         else:
-            agg = pf.agg(
-                F.count(F.lit(1)).alias("frame_count"),
-                *[
-                    F.sum(c).alias(c)
-                    for c in pf.columns
-                    if c not in ("seg", "frame_index")
-                ],
-            ).collect()[0]
+            agg = stream_totals(pf).collect()[0]
             stream = {k: int(v) for k, v in agg.asDict().items()}
             if args.detail:
                 stream.update(format_detail(
@@ -1014,7 +1023,9 @@ def _dispatch(spark, args) -> int:
                 file=sys.stderr,
             )
             return 1
-        rows = J.decode_frames(J.read_jelly_file(spark, args.input)).cache()
+        # the structural checks, the term check and the compare all read
+        # the one decode
+        rows, phys = _decode_once(spark, args.input)
         problems = validate_stream(rows)
         if args.validate_terms != "false":
             # eager term validation defaults to TRUE for validate
@@ -1022,11 +1033,10 @@ def _dispatch(spark, args) -> int:
             # so graph terms are checked too
             from .compare import term_violations
 
-            phys_v = J.stream_physical_types(rows) - {None}
-            if phys_v & {J.PHYSICAL_QUADS, J.PHYSICAL_GRAPHS}:
+            if phys & {J.PHYSICAL_QUADS, J.PHYSICAL_GRAPHS}:
                 decoded_v = (
                     J.decode_quads(rows)
-                    if J.PHYSICAL_QUADS in phys_v
+                    if J.PHYSICAL_QUADS in phys
                     else J.decode_quads_graphs(rows)
                 )
             else:
@@ -1078,10 +1088,7 @@ def _dispatch(spark, args) -> int:
                 # jelly-vs-jelly comparison: the reference reads the
                 # comparison file through Jena RIOT, which speaks Jelly
                 # — decode by ITS declared physical type, graph kept
-                exp_rows = J.decode_frames(
-                    J.read_jelly_file(spark, args.compare_to_rdf_file)
-                )
-                phys_e = J.stream_physical_types(exp_rows) - {None}
+                exp_rows, phys_e = _decode_once(spark, args.compare_to_rdf_file)
                 if phys_e & {J.PHYSICAL_QUADS, J.PHYSICAL_GRAPHS}:
                     expected = (
                         J.decode_quads(exp_rows)
@@ -1111,7 +1118,6 @@ def _dispatch(spark, args) -> int:
             # full-dataset comparison (RdfValidate.scala:173-181 uses an
             # AnyStatementHandler — quads included): decode by declared
             # physical type, keep the graph column
-            phys = J.stream_physical_types(rows) - {None}
             if phys & {J.PHYSICAL_QUADS, J.PHYSICAL_GRAPHS}:
                 decoded = (
                     J.decode_quads(rows, take_frames=take)

@@ -148,6 +148,9 @@ def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> D
             F.col(other).alias("neighbor"),
         )
         occ = e if occ is None else occ.unionByName(e)
+    # occ feeds every refinement round; each round's labels are
+    # checkpointed, so after the loop nothing reads occ (with rounds=0
+    # the returned plan reads it once) and its cache is released here
     occ = occ.persist()
     # initial signature: degree-ish — hash of sorted incident (dir, pred,
     # non-bnode neighbor) multiset; bnode neighbors start as "?"
@@ -184,13 +187,9 @@ def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> D
                 )
             ).alias("h")
         ).localCheckpoint()
-    from .session import release_on_gc
-
-    return release_on_gc(
-        labels.select(
-            "graph", "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
-        ),
-        occ,
+    occ.unpersist()
+    return labels.select(
+        "graph", "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
     )
 
 

@@ -55,6 +55,17 @@ def per_frame_metrics_full(rows: DataFrame) -> DataFrame:
     )
 
 
+def stream_totals(per_frame: DataFrame) -> DataFrame:
+    """One-row roll-up of a per-frame table (count or size statistic):
+    every counter column summed under its own name, led by
+    ``frame_count``. The count table already carries ``frame_count`` (1
+    per frame), so it is summed like the rest; the size table leads with
+    ``frame_size``, so the frame count is counted in front of it."""
+    cols = [c for c in per_frame.columns if c not in ("seg", "frame_index")]
+    lead = [] if "frame_count" in cols else [F.count(F.lit(1)).alias("frame_count")]
+    return per_frame.agg(*lead, *[F.sum(c).alias(c) for c in cols])
+
+
 def per_frame_metrics(rows: DataFrame, use_size: bool = False) -> DataFrame:
     """(seg, frame_index, option_count, name_count, triple_count,
     row_count[, *_size]) — A1 counters; `use_size` switches to the

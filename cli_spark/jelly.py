@@ -55,7 +55,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -997,19 +997,23 @@ def _encode_segments_fused(
 ) -> DataFrame:
     """Fused fast path (see :func:`_encode_statements`): one shuffle on
     the uniform ``seg`` key, dictionaries built per-task. The frames
-    persist once so a single tiny job learns the global used maxima;
-    the options row — identical for every segment, declared sizes =
-    max(configured, used) — is then prepended to each segment's first
-    frame (a pure bytes concat, no re-encode)."""
+    are checkpointed eagerly, and that one job also observes the global
+    used maxima; the options row — identical for every segment,
+    declared sizes = max(configured, used) — is then prepended to each
+    segment's first frame (a pure bytes concat, no re-encode)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
     enc = ordered.groupBy("seg").applyInPandas(
         _encode_segment_fn(physical, rows_per_frame, prefix_table),
         _FRAME_USED_SCHEMA,
-    ).persist()
-    mx = enc.groupBy().agg(
+    ).observe(
+        obs,
         F.max("used_name").alias("n"),
         F.max("used_prefix").alias("p"),
         F.max("used_dt").alias("d"),
-    ).collect()[0]
+    ).localCheckpoint()
+    mx = obs.get
     declared_name = max(options.max_name_table, mx["n"] or 0, 8)
     declared_dt = max(options.max_dt_table, mx["d"] or 0, 8)
     declared_prefix = (
@@ -1035,9 +1039,7 @@ def _encode_segments_fused(
                 pdf.loc[m, "n_rows"] += 1
             yield pdf[["seg", "frame_index", "n_rows", "frame_bytes"]]
 
-    from .session import release_on_gc
-
-    return release_on_gc(enc.mapInPandas(patch, FRAME_SCHEMA), enc)
+    return enc.mapInPandas(patch, FRAME_SCHEMA)
 
 
 def _encode_statements(
@@ -1111,6 +1113,15 @@ def _encode_statements(
     )
 
 
+def _checkpoint_with_max(df: DataFrame, col: str) -> tuple[DataFrame, int]:
+    """Eager checkpoint of ``df``; the same job observes max(``col``)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = df.observe(obs, F.max(col).alias("mx")).localCheckpoint()
+    return df, obs.get["mx"] or 0
+
+
 def _encode_statements_joins(
     ordered: DataFrame,
     physical: int,
@@ -1180,23 +1191,24 @@ def _encode_statements_joins(
             F.min("first_rn").alias("first_rn")
         )
         wp = W.partitionBy("seg").orderBy("first_rn", "prefix")
-        prefix_dict = prefixes.withColumn("pid", F.dense_rank().over(wp)).persist()
-        dict_full = (
-            split.join(prefix_dict.select("seg", "prefix", "pid"), ["seg", "prefix"])
-            .select(
-                "seg", "term", "term_id", "first_rn",
-                F.col("pid"),
-                F.expr("substring(term, length(prefix) + 1)").alias("local"),
-            )
-            .persist()
+        prefix_dict, used_prefix = _checkpoint_with_max(
+            prefixes.withColumn("pid", F.dense_rank().over(wp)), "pid"
+        )
+        dict_full = split.join(
+            prefix_dict.select("seg", "prefix", "pid"), ["seg", "prefix"]
+        ).select(
+            "seg", "term", "term_id", "first_rn",
+            F.col("pid"),
+            F.expr("substring(term, length(prefix) + 1)").alias("local"),
         )
     else:
-        prefix_dict = None
+        prefix_dict, used_prefix = None, 0
         dict_full = dictionary.select(
             "seg", "term", "term_id", "first_rn",
             F.lit(None).cast("long").alias("pid"),
             F.col("term").alias("local"),
-        ).persist()
+        )
+    dict_full, used_name = _checkpoint_with_max(dict_full, "term_id")
 
     # datatype table: literal datatypes (top-level + atoms)
     dt_feed = None
@@ -1210,38 +1222,22 @@ def _encode_statements_joins(
             "seg", F.col("a_dtv").alias("dtv"), F.col("rn").alias("use_rn")
         )
     )
-    dt_dict = (
+    dt_dict, used_dt = _checkpoint_with_max(
         dt_feed.groupBy("seg", "dtv")
         .agg(F.min("use_rn").alias("first_rn"))
         .withColumn(
             "dt_id",
             F.dense_rank().over(W.partitionBy("seg").orderBy("first_rn", "dtv")),
-        )
-        .persist()
+        ),
+        "dt_id",
     )
 
     # declared table sizes = max(configured, used): explicit ids stay
-    # within the declared bound for ANY input. ONE fused aggregate job
-    # (union of the per-dictionary maxima) instead of three — the
-    # persisted dictionaries all materialize concurrently under it.
-    sizes = dict_full.groupBy().agg(F.max("term_id").alias("mx")).select(
-        F.lit("name").alias("which"), "mx"
-    ).unionByName(
-        dt_dict.groupBy().agg(F.max("dt_id").alias("mx")).select(
-            F.lit("dt").alias("which"), "mx"
-        )
-    )
-    if prefix_table:
-        sizes = sizes.unionByName(
-            prefix_dict.groupBy().agg(F.max("pid").alias("mx")).select(
-                F.lit("prefix").alias("which"), "mx"
-            )
-        )
-    used = {r.which: (r.mx or 0) for r in sizes.collect()}
-    declared_name = max(options.max_name_table, used["name"], 8)
-    declared_dt = max(options.max_dt_table, used["dt"], 8)
+    # within the declared bound for ANY input
+    declared_name = max(options.max_name_table, used_name, 8)
+    declared_dt = max(options.max_dt_table, used_dt, 8)
     declared_prefix = (
-        max(options.max_prefix_table, used["prefix"]) if prefix_table else 0
+        max(options.max_prefix_table, used_prefix) if prefix_table else 0
     )
     version = VERSION_MAX if namespaces is not None else options.version
 
@@ -1486,15 +1482,9 @@ def _encode_statements_joins(
         all_rows = all_rows.unionByName(b)
     # seg_rows is a multiple of rows_per_frame ⇒ each frame belongs to
     # exactly one segment; grouping carries both for the output schema.
-    from .session import release_on_gc
-
-    frames_out = all_rows.groupBy("seg", "frame_index").applyInPandas(
+    return all_rows.groupBy("seg", "frame_index").applyInPandas(
         _encode_group_fn(), FRAME_SCHEMA
     )
-    cached = [dict_full, dt_dict] + (
-        [prefix_dict] if prefix_dict is not None else []
-    )
-    return release_on_gc(frames_out, *cached)
 
 
 def encode_triples(
@@ -1858,15 +1848,18 @@ def assign_segments(rows: DataFrame) -> DataFrame:
     )
 
 
+def physical_types_metric() -> Column:
+    """Aggregate: the distinct physical types declared by a rows table's
+    options rows. A job that already reads the rows can carry it as an
+    ``observe()`` metric instead of running :func:`stream_physical_types`."""
+    return F.collect_set(
+        F.when(F.col("row_kind") == KIND_OPTIONS, F.col("opt_physical"))
+    )
+
+
 def stream_physical_types(rows: DataFrame) -> set[int]:
     """Distinct physical types declared by the stream's options rows."""
-    return {
-        r[0]
-        for r in rows.filter(F.col("row_kind") == KIND_OPTIONS)
-        .select("opt_physical")
-        .distinct()
-        .collect()
-    }
+    return set(rows.agg(physical_types_metric()).first()[0])
 
 
 def _raise_physical(bad: set[int], context: str) -> None:
@@ -2003,16 +1996,11 @@ def roundtrip(spark: SparkSession, triples: DataFrame, **kw) -> DataFrame:
     The P4 guard runs as the frames-level tag-peek: `strict=True` on the
     rows table would re-run the whole per-segment resolution just to
     read the options rows (measured: it doubled q50's decode cost). The
-    frames persist first — they are the in-memory analog of the .jelly
-    file both jobs would otherwise read — so the peek does not re-run
-    the encode."""
-    from .session import release_on_gc
-
-    frames = encode_triples(spark, triples, **kw).persist()
+    encoder checkpoints its per-segment frames, so the peek and the
+    decode each re-run only the options-row patch, not the encode."""
+    frames = encode_triples(spark, triples, **kw)
     ensure_physical_frames(frames, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    return release_on_gc(
-        decode_triples(decode_frames(frames), strict=False), frames
-    )
+    return decode_triples(decode_frames(frames), strict=False)
 
 
 def roundtrip_quads(spark: SparkSession, quads: DataFrame, **kw) -> DataFrame:
@@ -2374,7 +2362,8 @@ def transcode_frames(
     for i, frames in enumerate(frames_list):
         t = frames.withColumn("stream", F.lit(i))
         tagged = t if tagged is None else tagged.unionByName(t)
-    tagged = tagged.persist()
+    # read by the maxima pass here and by the returned shift pass
+    tagged = tagged.localCheckpoint()
 
     # pass 1: per-block maxima + frame counts + options (id-level parse)
     def maxima_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -2523,12 +2512,7 @@ def transcode_frames(
             out, columns=["seg", "frame_index", "n_rows", "frame_bytes"]
         )
 
-    from .session import release_on_gc
-
-    return release_on_gc(
-        tagged.groupBy("stream", "seg").applyInPandas(shift_fn, FRAME_SCHEMA),
-        tagged,
-    )
+    return tagged.groupBy("stream", "seg").applyInPandas(shift_fn, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

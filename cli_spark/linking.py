@@ -310,12 +310,13 @@ def link_near_dup_files(
     files, the same failure class as an LSH false positive, which the
     scoring threshold already tolerates.
     """
-    # Signatures feed both the banding join and the scoring join —
-    # persist so the signature kernel runs once (spills to disk at scale).
+    # Signatures feed both banding sides, both scoring sides and the two
+    # IRI-decode joins: checkpoint eagerly so the signature kernel runs
+    # once, in one job, before any of them (spills to disk at scale).
     sigs = (
         minhash_signatures(repos, engine=engine)
         .withColumn("fid", F.xxhash64("file_iri"))
-        .persist()
+        .localCheckpoint()
     )
     pairs = score_pairs(
         lsh_candidate_pairs(sigs, id_col="fid"), sigs, threshold, id_col="fid"
@@ -328,16 +329,11 @@ def link_near_dup_files(
         ids.select(F.col("fid").alias("right_fid"), F.col("file_iri").alias("right_iri")),
         "right_fid",
     )
-    from .session import release_on_gc
-
-    return release_on_gc(
-        decoded.select(
-            F.col("left_iri").alias("subj"),
-            F.lit(PRED_SAME_AS).alias("pred"),
-            F.col("right_iri").alias("obj"),
-            F.lit(KIND_IRI).alias("obj_kind"),
-        ),
-        sigs,
+    return decoded.select(
+        F.col("left_iri").alias("subj"),
+        F.lit(PRED_SAME_AS).alias("pred"),
+        F.col("right_iri").alias("obj"),
+        F.lit(KIND_IRI).alias("obj_kind"),
     )
 
 

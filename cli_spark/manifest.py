@@ -10,6 +10,7 @@ output; resume skips any stage whose manifest exists.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
@@ -87,6 +88,32 @@ def write_stage(
     return reread
 
 
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def _under_stage_job_group(run):
+    """Run a stage runner's Spark jobs under the job group named after its
+    ``stage`` argument, then restore the caller's group (or none)."""
+
+    @functools.wraps(run)
+    def wrapped(spark: SparkSession, workdir, stage: str, *args, **kwargs):
+        sc = spark.sparkContext
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        sc.setJobGroup(stage, stage)
+        try:
+            return run(spark, workdir, stage, *args, **kwargs)
+        finally:
+            for key, value in zip(_JOB_GROUP_PROPS, saved):
+                sc.setLocalProperty(key, value)
+
+    return wrapped
+
+
+@_under_stage_job_group
 def run_stage(
     spark: SparkSession,
     workdir: str | None,
@@ -115,6 +142,7 @@ def _chunk_manifest_path(workdir: str, stage: str, chunk: int) -> str:
     return os.path.join(_stage_dir(workdir, stage), f"manifest_chunk_{chunk:05d}.json")
 
 
+@_under_stage_job_group
 def run_stage_chunked(
     spark: SparkSession,
     workdir: str | None,

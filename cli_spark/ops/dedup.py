@@ -165,7 +165,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """(left_id, right_id, score): near-duplicate pairs by estimated
     Jaccard ≥ threshold."""
-    sigs = minhash_signatures(df, id_col, text_col, num_perm).persist()
+    # read by both banding sides and both scoring sides
+    sigs = minhash_signatures(df, id_col, text_col, num_perm).localCheckpoint()
     n_bands = num_perm // band_rows
     bands = sigs.select(
         "id",
@@ -200,13 +201,8 @@ def minhash_lsh_pairs(
             / F.lit(num_perm),
         )
     )
-    from ..session import release_on_gc
-
-    return release_on_gc(
-        scored.filter(F.col("score") >= threshold).select(
-            "left_id", "right_id", "score"
-        ),
-        sigs,
+    return scored.filter(F.col("score") >= threshold).select(
+        "left_id", "right_id", "score"
     )
 
 
@@ -283,7 +279,12 @@ def ngram_jaccard(
     ids = pairs.select(F.col("left_id").alias("id")).unionByName(
         pairs.select(F.col("right_id").alias("id"))
     ).distinct()
-    sh = shingles(df, id_col, text_col, n).join(ids, "id", "left_semi").persist()
+    # read by the size count and by both intersection sides
+    sh = (
+        shingles(df, id_col, text_col, n)
+        .join(ids, "id", "left_semi")
+        .localCheckpoint()
+    )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         pairs.join(sh.select(F.col("id").alias("left_id"), "h"), "left_id")
@@ -301,11 +302,7 @@ def ngram_jaccard(
             F.col("n_inter") / (F.col("n_left") + F.col("n_right") - F.col("n_inter")),
         )
     )
-    from ..session import release_on_gc
-
-    return release_on_gc(
-        out.select("left_id", "right_id", "n_inter", "jaccard"), sh
-    )
+    return out.select("left_id", "right_id", "n_inter", "jaccard")
 
 
 def select_survivors(

@@ -351,7 +351,8 @@ def ivf_topk(
         centroids = seeded_centroids(corpus, n_cells, id_col, vec_col)
         for _ in range(lloyd_rounds):
             centroids = lloyd_round(corpus, centroids, id_col, vec_col)
-    centroids = centroids.persist()
+    # read by the cell assignment and by the query probe
+    centroids = centroids.localCheckpoint()
     cells = assign_cells(corpus, centroids, id_col, vec_col, exact_fold=exact_fold)
     # queries probe their n_probe nearest centroids
     qe = with_norm(
@@ -389,14 +390,11 @@ def ivf_topk(
     else:
         scored = arrow_cosine(cand, "qv", "nv")
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    from ..session import release_on_gc
-
-    return release_on_gc(
+    return (
         scored.dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk"),
-        centroids,
+        .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 

@@ -1595,18 +1595,14 @@ def q25_jellytext_roundtrip(spark, sf_dir):
     t = doc_triples(spark, sf_dir)
     frames = encode_triples(spark, t, prefix_table=True)
     text = render_jelly_text(frames)
-    # parsed frames persist (the in-memory analog of the .jelly.txt file
-    # both jobs would read); the P4 guard is the tag-peek — strict=True
-    # on the rows table would re-run the whole resolution as a probe job
-    parsed = parse_jelly_text(text).persist()
+    # parsed frames are checkpointed (the in-memory analog of the
+    # .jelly.txt file both jobs would read); the P4 guard is the
+    # tag-peek — strict=True on the rows table would re-run the whole
+    # resolution as a probe job
+    parsed = parse_jelly_text(text).localCheckpoint()
     ensure_physical_frames(parsed, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    from .session import release_on_gc
-
-    return release_on_gc(
-        decode_triples(decode_frames(parsed), strict=False).select(
-            "subj", "pred", "obj", "obj_kind"
-        ),
-        parsed,
+    return decode_triples(decode_frames(parsed), strict=False).select(
+        "subj", "pred", "obj", "obj_kind"
     )
 
 
@@ -1825,11 +1821,10 @@ def q44_embedding_neardup(spark, sf_dir):
         ),
         "rv",
     ).withColumnRenamed("_norm", "rnorm")
-    # both legs consume the pair table; persist so the cell join + fold
-    # runs once, not once per leg (the candidate set is tiny — bounded
-    # by the ≥ 0.4 filter — while its parent join is the expensive part)
-    from cli_spark.session import release_on_gc
-
+    # both legs consume the pair table; checkpoint so the cell join +
+    # fold runs once, not once per leg (the candidate set is tiny —
+    # bounded by the ≥ 0.4 filter — while its parent join is the
+    # expensive part)
     pairs = (
         l.join(
             r,
@@ -1838,7 +1833,7 @@ def q44_embedding_neardup(spark, sf_dir):
         .withColumn("cosine", _dot(F.col("lv"), F.col("rv")) / (F.col("lnorm") * F.col("rnorm")))
         .filter(F.col("cosine") >= 0.4)
         .select("cell_id", "left_id", "right_id", "cosine")
-        .persist()
+        .localCheckpoint()
     )
     # SemDeDup keep-rule on the pair table: left < right, so "an earlier
     # member reaches tau" ≡ the id appears as right_id of a ≥ tau pair;
@@ -1854,11 +1849,10 @@ def q44_embedding_neardup(spark, sf_dir):
             "cosine",
         )
     )
-    return release_on_gc(
+    return (
         pairs.withColumn("leg", F.lit("pair"))
         .unionByName(dups.withColumn("leg", F.lit("dup")))
-        .select("leg", "cell_id", "left_id", "right_id", "cosine"),
-        pairs,
+        .select("leg", "cell_id", "left_id", "right_id", "cosine")
     )
 
 

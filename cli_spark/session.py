@@ -6,6 +6,17 @@ AQE (runtime re-planning + skew-join splitting), Arrow for every
 pandas UDF exchange, shuffle partitions sized to parallelism instead
 of the 200 default, and UTC timestamps so results compare bit-for-bit
 against the DuckDB oracle.
+
+Caching rule: an intermediate that is read more than once is
+materialized eagerly with ``localCheckpoint()`` where it is built, and
+any driver-side aggregate over it rides that same job as an
+``observe()`` metric. Every later reader, including the lazy plans a
+function returns, reads the checkpointed blocks instead of re-running
+the intermediate's plan; Spark's ContextCleaner frees the blocks once
+the last plan derived from them is garbage-collected on the JVM, so no
+``persist()`` needs a matching ``unpersist()`` in Python. A plain
+``persist()`` stays only where every reader runs before the function
+returns and an explicit ``unpersist()`` follows them.
 """
 
 from __future__ import annotations
@@ -114,35 +125,3 @@ def warmup_python_workers(spark: SparkSession, partitions: int | None = None) ->
         "noop"
     ).mode("overwrite").save()
 
-
-def release_on_gc(result, *cached):
-    """Unpersist ``cached`` DataFrames when ``result`` is garbage-collected.
-
-    Library functions that persist an intermediate AND return a lazy
-    DataFrame built on it cannot unpersist eagerly (the cache is the
-    point — e.g. roundtrip()'s encoded frames feed both the P4 peek and
-    the decode). But never unpersisting leaks executor storage in a
-    long-lived session that calls them in a loop. CPython refcounting
-    frees the returned handle as soon as the caller drops it, and this
-    finalizer releases the parents' storage at that moment.
-
-    ONLY safe when the parent recomputes deterministically: unpersist
-    means a later action may recompute the parent, and if driver-side
-    values were collected from the first materialization and baked into
-    the returned plan (offsets, declared sizes), a nondeterministic
-    recompute silently invalidates them. cli_spark.order pins pid
-    assignments exactly this way (repartitionByRange re-samples per
-    job) and therefore must NOT use this helper; the codec dictionaries
-    and signature kernels are pure functions of their input and may.
-    """
-    import weakref
-
-    def _release(dfs=cached):
-        for df in dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped / interpreter shutdown
-
-    weakref.finalize(result, _release)
-    return result

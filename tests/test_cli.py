@@ -81,6 +81,21 @@ def test_cli_validate_detects_mismatch(spark, nq_file, tmp_path):
     assert main(["rdf", "validate", jelly, "--delimited", "true"]) == 0
 
 
+def test_cli_validate_rereads_overwritten_stream(spark, nq_file, tmp_path):
+    """Two validates of one path in one session: the second must check
+    the stream now at that path, not rows decoded by the first."""
+    jelly = str(tmp_path / "s.jelly")
+    assert main(["rdf", "to-jelly", nq_file, "--to", jelly]) == 0
+    assert main(["rdf", "validate", jelly, "--compare-to-rdf-file", nq_file]) == 0
+    other = str(tmp_path / "other.nq")
+    with open(nq_file) as fh:
+        lines = fh.read().splitlines()
+    with open(other, "w") as fh:
+        fh.write("\n".join(lines[5:]) + "\n")
+    assert main(["rdf", "to-jelly", other, "--to", jelly]) == 0
+    assert main(["rdf", "validate", jelly, "--compare-to-rdf-file", nq_file]) == 1
+
+
 def test_cli_validate_frame_indices(spark, nq_file, tmp_path):
     """--compare-frame-indices restricts the comparison to a frame
     slice while the skipped frames still feed decoder state — mirrors

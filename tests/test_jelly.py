@@ -134,6 +134,23 @@ def test_inspect_metrics(spark, triples):
     assert "triple_count:" in yaml_text and '\\"' in yaml_text
 
 
+def test_stream_totals_names_each_counter_once(spark, triples):
+    """The aggregate report's roll-up: one column per counter, led by
+    frame_count, for both the count and the size statistic."""
+    from cli_spark.inspect_metrics import per_frame_metrics_full, stream_totals
+
+    frames = J.encode_triples(spark, triples, rows_per_frame=64)
+    n_frames = frames.count()
+    for pf in (
+        per_frame_metrics_full(J.decode_frames(frames)),
+        J.frame_wire_size_stats(frames),
+    ):
+        totals = stream_totals(pf)
+        assert len(set(totals.columns)) == len(totals.columns), totals.columns
+        assert totals.columns[0] == "frame_count"
+        assert totals.first()["frame_count"] == n_frames
+
+
 def test_varint_edge_values():
     import io
 

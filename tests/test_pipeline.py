@@ -59,6 +59,25 @@ def test_resume_skips_complete_stage(spark, tmp_path):
     assert df2.count() == 5
 
 
+def test_stage_jobs_run_under_stage_job_group(spark, tmp_path):
+    """Each stage's jobs carry the stage name as their job group, and the
+    caller's own group is back in place after the run."""
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    stages = ("10_extract", "20_link", "30_canonicalize")
+    before = {s: set(sc.statusTracker().getJobIdsForGroup(s)) for s in stages}
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        run_kg_pipeline(spark, generate_repos(spark, 20), workdir=str(tmp_path / "kg"))
+        for s in stages:
+            assert set(sc.statusTracker().getJobIdsForGroup(s)) - before[s], s
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        for k in props:
+            sc.setLocalProperty(k, None)
+
+
 def test_lineage_violation_detected(spark, repos):
     from cli_spark.extract import extract_triples
 
