@@ -734,7 +734,12 @@ def _options_row_blob(
     return b"\x0a" + _vb(len(row)) + row
 
 
-def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
+def _encode_segment_fn(
+    physical: int,
+    rows_per_frame: int,
+    prefix_table: bool,
+    namespaces: list[tuple[str, str]] | None = None,
+):
     """groupBy(seg).applyInPandas encoder: one SEGMENT's canonical
     statement rows → that segment's frames (minus the options row,
     prepended by the caller once global declared sizes are known).
@@ -790,6 +795,9 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
             md = pd.notna(dtvs)
             if md.any():
                 dt_pairs.extend(zip(rns[md].tolist(), dtvs[md].tolist()))
+        # namespace IRIs enter the seg-0 dictionary ahead of first use
+        ns_here = namespaces if (seg == 0 and namespaces) else []
+        iri_pairs.extend((0, iri) for _name, iri in ns_here)
 
         # RDF-star: atomize quoted terms in-task; atoms feed the dicts
         trees: dict = {}
@@ -924,6 +932,24 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
                 entry_rows(pfx_items, _MINOR_PREFIX, KIND_PREFIX, lambda v: v)
             )
 
+        # --- namespace declarations: head of frame 0, after the entries
+        # their IRIs reference, in declaration order
+        if ns_here:
+            pre_parts.append(
+                pd.DataFrame(
+                    {
+                        "seg": seg,
+                        "frame_index": 0,
+                        "sort_key": 1,
+                        "minor": _MINOR_NAMESPACE,
+                        "row_kind": KIND_NAMESPACE,
+                        "name": [name for name, _ in ns_here],
+                        "g_nid": [term_ids[iri] for _, iri in ns_here],
+                        "g_pid": [term_pid.get(iri) for _, iri in ns_here],
+                    }
+                )
+            )
+
         # --- graph runs (GRAPHS): contiguous by construction (W3 —
         # ordering is graph-first), so change points delimit runs
         if is_graphs:
@@ -994,6 +1020,7 @@ def _encode_segments_fused(
     seg_rows: int,
     options: StreamOptions,
     prefix_table: bool,
+    namespaces: list[tuple[str, str]] | None,
 ) -> DataFrame:
     """Fused fast path (see :func:`_encode_statements`): one shuffle on
     the uniform ``seg`` key, dictionaries built per-task. The frames
@@ -1005,7 +1032,7 @@ def _encode_segments_fused(
 
     obs = Observation()
     enc = ordered.groupBy("seg").applyInPandas(
-        _encode_segment_fn(physical, rows_per_frame, prefix_table),
+        _encode_segment_fn(physical, rows_per_frame, prefix_table, namespaces),
         _FRAME_USED_SCHEMA,
     ).observe(
         obs,
@@ -1014,13 +1041,20 @@ def _encode_segments_fused(
         F.max("used_dt").alias("d"),
     ).localCheckpoint()
     mx = obs.get
+    if namespaces and mx["n"] is None:
+        raise ValueError(
+            f"{len(namespaces)} namespace declaration(s) but no statements: "
+            "the encoder places declarations in the first segment, which "
+            "an empty stream does not have"
+        )
     declared_name = max(options.max_name_table, mx["n"] or 0, 8)
     declared_dt = max(options.max_dt_table, mx["d"] or 0, 8)
     declared_prefix = (
         max(options.max_prefix_table, mx["p"] or 0) if prefix_table else 0
     )
+    version = VERSION_MAX if namespaces is not None else options.version
     blob = _options_row_blob(
-        options, physical, options.version, declared_name, declared_prefix,
+        options, physical, version, declared_name, declared_prefix,
         declared_dt,
     )
     # each segment's first frame is at a deterministic global index:
@@ -1103,13 +1137,13 @@ def _encode_statements(
         "seg", F.floor((F.col("rn") - 1) / seg_rows).cast("long")
     )
 
-    if namespaces is None:
-        return _encode_segments_fused(
-            ordered, physical, rows_per_frame, seg_rows, options, prefix_table
-        )
-    return _encode_statements_joins(
+    ns_list = (
+        None if namespaces is None
+        else [(r["name"], r["iri"]) for r in namespaces.collect()]
+    )
+    return _encode_segments_fused(
         ordered, physical, rows_per_frame, seg_rows, options, prefix_table,
-        namespaces,
+        ns_list,
     )
 
 
