@@ -1,19 +1,18 @@
 """Golden-fixture gate for the Jelly encoder.
 
-The fused per-segment encoder (one applyInPandas task per segment,
+The per-segment encoder (one applyInPandas task per segment,
 dictionaries built in-task — `cli_spark.jelly._encode_segments_fused`)
-must reproduce, byte for byte, the streams the join-based encoder
-(`_encode_statements_joins`) wrote. Those streams are stored as
-delimited `.jelly` files under `tests/fixtures/encoder/`, one per
-config: prefix table on/off, large/small name tables (small tables
-exercise multi-segment streams and RDF-star atoms overflowing the
-declared bound), and the TRIPLES/QUADS/GRAPHS namespace-declaration
-matrix. Each test checks both encoders against the fixture; the
-namespace fixtures pin every byte but the order of the namespace rows
-among themselves (see `test_fused_namespaces_match_joins_bytes`).
-
-Recapture (from the join-based encoder) from the repo root with
-``PYTHONPATH=. python tests/test_jelly_fused_diff.py``.
+must reproduce, byte for byte, the streams the join-based encoder it
+replaced wrote. Those streams were captured before that encoder was
+deleted and are stored as delimited `.jelly` files under
+`tests/fixtures/encoder/`, one per config: prefix table on/off,
+large/small name tables (small tables exercise multi-segment streams
+and RDF-star atoms overflowing the declared bound), and the
+TRIPLES/QUADS/GRAPHS namespace-declaration matrix. The namespace
+fixtures pin every byte but the order of the namespace rows among
+themselves (see `test_fused_namespaces_match_joins_bytes`). They are
+frozen: regenerating them from the encoder under test would check
+nothing.
 """
 from __future__ import annotations
 
@@ -28,9 +27,6 @@ from cli_spark.jelly import (
     PHYSICAL_QUADS,
     PHYSICAL_TRIPLES,
     StreamOptions,
-    _canonical_terms,
-    _encode_statements_joins,
-    _TERM_COLS,
 )
 from cli_spark.jellywire import (
     K_NAMESPACE,
@@ -39,7 +35,6 @@ from cli_spark.jellywire import (
     split_delimited,
     write_varint,
 )
-from cli_spark.order import global_row_number
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "encoder")
 ROWS_PER_FRAME = 16
@@ -51,7 +46,6 @@ NAMESPACES = [
     ("lbl", "http://ex.org/p/label"),
     ("ex", "http://ex.org/s/"),
 ]
-PLAIN = [(mnt, pt) for mnt in (4096, 64) for pt in (False, True)]
 NS_CONFIGS = [
     (phys, pt, mnt)
     for phys in ("triples", "quads", "graphs")
@@ -64,7 +58,16 @@ PHYSICAL = {
 }
 
 
-def _triples(spark):
+def _with_graph(triples):
+    return triples.withColumn(
+        "graph",
+        F.when(F.col("obj_kind") == 0, F.lit("http://ex.org/g/1"))
+        .otherwise(F.lit(None)),
+    )
+
+
+@pytest.fixture(scope="module")
+def triples(spark):
     rows = []
     for i in range(300):
         rows.append((f"http://ex.org/s/{i % 97}", f"http://ex.org/p/{i % 13}",
@@ -88,19 +91,6 @@ def _triples(spark):
     ).persist()
 
 
-def _with_graph(triples):
-    return triples.withColumn(
-        "graph",
-        F.when(F.col("obj_kind") == 0, F.lit("http://ex.org/g/1"))
-        .otherwise(F.lit(None)),
-    )
-
-
-@pytest.fixture(scope="module")
-def triples(spark):
-    return _triples(spark)
-
-
 def _namespaces(spark, decls):
     return spark.createDataFrame(decls, "name string, iri string")
 
@@ -121,25 +111,6 @@ def _encode(spark, triples, phys, pt, mnt, ns):
                               options=opts, prefix_table=pt, namespaces=ns)
     return J.encode_quads_graphs(spark, quads, rows_per_frame=ROWS_PER_FRAME,
                                  options=opts, namespaces=ns)
-
-
-def _encode_joins(spark, triples, phys, pt, mnt, ns):
-    """The join-based encoder behind `_encode_statements`' prologue."""
-    physical = PHYSICAL[phys]
-    stmts = triples if phys == "triples" else _with_graph(triples)
-    nterms = 3 if phys == "triples" else 4
-    seg_rows_raw = max(1, mnt // nterms)
-    rpf = min(ROWS_PER_FRAME, seg_rows_raw)
-    seg_rows = (seg_rows_raw // rpf) * rpf
-    canon = _canonical_terms(stmts, phys != "triples").dropDuplicates()
-    positions = ["s", "p", "o"] + ([] if phys == "triples" else ["g"])
-    keys = [c for p in positions for c in _TERM_COLS(p)]
-    if phys == "graphs":
-        keys = _TERM_COLS("g") + [c for p in ("s", "p", "o") for c in _TERM_COLS(p)]
-    ordered = global_row_number(canon, keys).withColumn(
-        "seg", F.floor((F.col("rn") - 1) / seg_rows).cast("long"))
-    return _encode_statements_joins(ordered, physical, rpf, seg_rows,
-                                    _options(phys, mnt), pt, ns)
 
 
 def _stream_bytes(frames) -> bytes:
@@ -213,7 +184,6 @@ def test_fused_matches_joins_bytes(spark, triples, prefix_table, max_name_table)
     want = _fixture(_plain_name(max_name_table, prefix_table))
     args = ("triples", prefix_table, max_name_table, None)
     assert _stream_bytes(_encode(spark, triples, *args)) == want
-    assert _stream_bytes(_encode_joins(spark, triples, *args)) == want
 
 
 @pytest.mark.parametrize("phys,prefix_table,max_name_table", NS_CONFIGS)
@@ -230,8 +200,6 @@ def test_fused_namespaces_match_joins_bytes(
     got = _stream_bytes(_encode(spark, triples, *args))
     assert _namespace_order_free(got) == want
     assert _declared_names(got) == [name for name, _ in NAMESPACES]
-    joins = _stream_bytes(_encode_joins(spark, triples, *args))
-    assert _namespace_order_free(joins) == want
 
 
 def test_fused_empty_namespace_list_matches_joins_bytes(spark, triples):
@@ -239,7 +207,6 @@ def test_fused_empty_namespace_list_matches_joins_bytes(spark, triples):
     want = _fixture(EMPTY_NS)
     args = ("triples", True, 4096, _namespaces(spark, []))
     assert _stream_bytes(_encode(spark, triples, *args)) == want
-    assert _stream_bytes(_encode_joins(spark, triples, *args)) == want
     assert decode_frame(split_delimited(want)[1][0])[0]["version"] == J.VERSION_MAX
 
 
@@ -262,26 +229,3 @@ def test_fused_graphs_roundtrip(spark, triples):
             for r in quads.dropDuplicates(
                 ["subj", "pred", "obj", "obj_kind", "graph"]).collect()}
     assert got == want
-
-
-def _capture() -> None:
-    """Write every fixture from the join-based encoder."""
-    from cli_spark.session import get_spark
-
-    spark = get_spark("capture_encoder_fixtures", master="local[8]",
-                      shuffle_partitions=8)
-    os.makedirs(FIXTURES, exist_ok=True)
-    trip = _triples(spark)
-    jobs = [(_plain_name(mnt, pt), ("triples", pt, mnt, None))
-            for mnt, pt in PLAIN]
-    jobs += [(_ns_name(*cfg), (*cfg, _namespaces(spark, NAMESPACES)))
-             for cfg in NS_CONFIGS]
-    jobs.append((EMPTY_NS, ("triples", True, 4096, _namespaces(spark, []))))
-    for name, args in jobs:
-        with open(os.path.join(FIXTURES, name + ".jelly"), "wb") as fh:
-            fh.write(_stream_bytes(_encode_joins(spark, trip, *args)))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    _capture()
