@@ -940,6 +940,9 @@ def _dispatch(spark, args) -> int:
             wire_term_detail,
         )
 
+        # a zero-frame stream has nothing to report: the same typed
+        # error `rdf validate` gives
+        J.probe_delimited(args.input)
         frames_df = J.read_jelly_file(spark, args.input)
         sfx = "size" if args.size else "count"
         rows = None

@@ -21,6 +21,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
+def _offset(offsets: dict[int, int]):
+    """Per-partition offset column ``offsets[_pid]``. An empty input has
+    no offsets, and ``create_map()`` with no pairs cannot be indexed by
+    ``_pid``, so it gets a constant that no row reads."""
+    if not offsets:
+        return F.lit(0)
+    return F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])[
+        F.col("_pid")
+    ]
+
+
 def global_row_number(
     df: DataFrame, keys: list[str], rn_col: str = "rn", num_partitions: int | None = None
 ) -> DataFrame:
@@ -44,16 +55,13 @@ def global_row_number(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    mapping = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
     # NOTE: `local` must stay persisted for the life of the returned
     # plan — NOT auto-released on GC. The offsets collected above are
     # baked into the plan; repartitionByRange + spark_partition_id
     # re-sample boundaries on recompute, so an unpersist-then-recompute
     # silently pairs new pids with stale offsets (wrong ranks).
     return (
-        local.withColumn(rn_col, mapping[F.col("_pid")] + F.col("_lidx"))
+        local.withColumn(rn_col, _offset(offsets) + F.col("_lidx"))
         .drop("_pid", "_lidx")
     )
 
@@ -94,10 +102,9 @@ def global_prefix_sum(
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += totals[pid] or 0
-    mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
     # same pinning contract as global_row_number: offsets are baked into
     # the plan against THIS pid assignment — never auto-release `local`
     return (
-        local.withColumn(out_col, mapping[F.col("_pid")] + F.col("_lcum"))
+        local.withColumn(out_col, _offset(offsets) + F.col("_lcum"))
         .drop("_pid", "_lcum")
     )

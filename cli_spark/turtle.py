@@ -472,8 +472,9 @@ def scan_namespaces(spark: SparkSession, path: str) -> DataFrame:
     resolves relative prefix IRIs declared after it. The last
     declaration of a name within a file wins (Jena PrefixMap override);
     across files, ties break to the lexicographic-min IRI so the
-    result is partitioning-independent."""
-    raw = spark.read.format("binaryFile").load(path).select("content")
+    result is partitioning-independent. Rows come back in document
+    order of the winning declarations: by (file path, offset)."""
+    raw = spark.read.format("binaryFile").load(path).select("path", "content")
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -481,7 +482,7 @@ def scan_namespaces(spark: SparkSession, path: str) -> DataFrame:
         rx = re.compile(_DIRECTIVE_RX)
         for pdf in batches:
             rows: list[tuple] = []
-            for content in pdf["content"]:
+            for fpath, content in zip(pdf["path"], pdf["content"]):
                 text = bytes(content).decode("utf-8")
                 base, seen = None, {}
                 for m in rx.finditer(text):
@@ -496,12 +497,21 @@ def scan_namespaces(spark: SparkSession, path: str) -> DataFrame:
                             r"^[A-Za-z][A-Za-z0-9+.\-]*:", iri
                         ):
                             iri = _urljoin_keep_empty(base, iri)
-                        seen[m.group(1)] = iri
-                rows.extend(seen.items())
-            yield pd.DataFrame(rows, columns=["name", "iri"])
+                        seen[m.group(1)] = (iri, m.start())
+                rows.extend(
+                    (name, iri, fpath, off) for name, (iri, off) in seen.items()
+                )
+            yield pd.DataFrame(rows, columns=["name", "iri", "path", "offset"])
 
-    decls = raw.mapInPandas(scan, "name string, iri string")
-    return decls.groupBy("name").agg(F.min("iri").alias("iri"))
+    decls = raw.mapInPandas(
+        scan, "name string, iri string, path string, offset long"
+    )
+    return (
+        decls.groupBy("name")
+        .agg(F.min(F.struct("iri", "path", "offset")).alias("w"))
+        .orderBy("w.path", "w.offset")
+        .select("name", "w.iri")
+    )
 
 
 def scan_namespaces_ordered(path: str) -> list:

@@ -1103,3 +1103,69 @@ def test_cli_validate_jelly_vs_jelly(spark, tmp_path, capsys):
         "--compare-ordered",
     ]) == 1  # ordered: the target carries no namespace rows
     assert "Expected 0 namespace declarations, but got 1" in capsys.readouterr().err
+
+
+def test_cli_empty_input_roundtrip(spark, tmp_path, capsys):
+    """An input with no statements (an empty .nq, a comment-only .nt)
+    encodes to a zero-frame stream and decodes back to zero
+    statements; both commands exit 0."""
+    for name, text in (("empty.nq", ""), ("comments.nt", "# nothing here\n")):
+        src = tmp_path / name
+        src.write_text(text)
+        jelly = str(tmp_path / (name + ".jelly"))
+        assert main(["rdf", "to-jelly", str(src), "--to", jelly]) == 0
+        assert os.path.getsize(jelly) == 0
+        out = tmp_path / (name + "_back")
+        assert main(["rdf", "from-jelly", jelly, "--to", str(out)]) == 0
+        lines = [
+            line
+            for p in os.listdir(out) if p.startswith("part-")
+            for line in (out / p).read_text().splitlines() if line.strip()
+        ]
+        assert lines == []
+
+
+def test_cli_namespace_declarations_without_statements(spark, tmp_path, capsys):
+    """Declarations ride in the first segment, which a stream with no
+    statements does not have: a typed error, never a silent drop."""
+    ttl = tmp_path / "prefixes.ttl"
+    ttl.write_text("@prefix ex: <http://ex.org/> .\n")
+    assert main([
+        "rdf", "to-jelly", str(ttl), "--to", str(tmp_path / "p.jelly"),
+        "--enable-namespace-declarations",
+    ]) == 1
+    err = capsys.readouterr().err
+    assert "namespace declaration" in err and "no statements" in err
+    assert "Traceback" not in err
+
+
+def test_cli_namespace_declarations_keep_document_order(spark, tmp_path, capsys):
+    """The stream carries the declarations in document order, so an
+    ordered validate against the source Turtle passes."""
+    names = ["n9", "n3", "n7", "n1", "n5", "n0", "n8", "n2"]
+    ttl = tmp_path / "order.ttl"
+    ttl.write_text(
+        "".join(f"@prefix {n}: <http://ex.org/{n}/> .\n" for n in names)
+        + "n9:s n3:p n7:o .\n"
+    )
+    jelly = str(tmp_path / "order.jelly")
+    assert main([
+        "rdf", "to-jelly", str(ttl), "--to", jelly,
+        "--enable-namespace-declarations",
+    ]) == 0
+    assert main([
+        "rdf", "validate", jelly, "--compare-to-rdf-file", str(ttl),
+        "--compare-ordered",
+    ]) == 0, capsys.readouterr().err
+
+
+def test_cli_inspect_empty_stream(spark, tmp_path, capsys):
+    """A zero-frame stream is the typed `empty stream` error that
+    `rdf validate` gives, not an unknown error with a traceback."""
+    empty = tmp_path / "empty.jelly"
+    empty.write_bytes(b"")
+    capsys.readouterr()
+    assert main(["rdf", "inspect", str(empty)]) == 1
+    err = capsys.readouterr().err
+    assert "error: empty stream" in err
+    assert "Unknown error" not in err and "Traceback" not in err
