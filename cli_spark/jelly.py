@@ -595,7 +595,7 @@ def _encode_segment_fn(
     physical: int,
     rows_per_frame: int,
     prefix_table: bool,
-    namespaces: list[tuple[str, str]] | None = None,
+    namespaces: list[tuple[str, str]] | None,
 ):
     """groupBy(seg).applyInPandas encoder: one SEGMENT's canonical
     statement rows → that segment's frames (minus the options row,
@@ -675,6 +675,11 @@ def _encode_segment_fn(
 
         term_ids, term_items = first_use_ids(iri_pairs)
         dt_ids, dt_items = first_use_ids(dt_pairs)
+        # prefix table (F1): greedy split at the last / or #. On the
+        # wire, prefix id 0 in a statement means "same prefix as the
+        # previous IRI", so every IRI references its prefix explicitly;
+        # unsplittable terms reference an entry whose value is "" (what
+        # jelly-jvm does)
         if prefix_table:
             term_pfx = {}
             pfx_first: dict = {}

@@ -1105,7 +1105,7 @@ def test_cli_validate_jelly_vs_jelly(spark, tmp_path, capsys):
     assert "Expected 0 namespace declarations, but got 1" in capsys.readouterr().err
 
 
-def test_cli_empty_input_roundtrip(spark, tmp_path, capsys):
+def test_cli_empty_input_roundtrip(spark, tmp_path):
     """An input with no statements (an empty .nq, a comment-only .nt)
     encodes to a zero-frame stream and decodes back to zero
     statements; both commands exit 0."""
@@ -1164,7 +1164,6 @@ def test_cli_inspect_empty_stream(spark, tmp_path, capsys):
     `rdf validate` gives, not an unknown error with a traceback."""
     empty = tmp_path / "empty.jelly"
     empty.write_bytes(b"")
-    capsys.readouterr()
     assert main(["rdf", "inspect", str(empty)]) == 1
     err = capsys.readouterr().err
     assert "error: empty stream" in err
