@@ -16,6 +16,7 @@ nothing.
 """
 from __future__ import annotations
 
+import io
 import os
 
 import pyspark.sql.functions as F
@@ -115,8 +116,6 @@ def _encode(spark, triples, phys, pt, mnt, ns):
 
 def _stream_bytes(frames) -> bytes:
     """Frames table → the delimited stream `write_jelly_file` writes."""
-    import io
-
     buf = io.BytesIO()
     for r in frames.orderBy("seg", "frame_index").collect():
         write_varint(buf, len(r.frame_bytes))
