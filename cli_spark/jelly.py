@@ -26,7 +26,7 @@ Spark shape:
   ``floor((rn-1)/rows_per_frame)`` (W2) and packs the protobuf bytes →
   frames table ``(seg, frame_index, n_rows, frame_bytes)``. One
   shuffle on the uniform ``seg`` key; no dictionary joins. Namespace
-  declarations are a small driver-side list handed to the segment-0
+  declarations are collected into a small list handed to the segment-0
   task, whose dictionaries take their IRIs ahead of first use. Every
   id is written EXPLICITLY
   (legal Jelly), so any conformant decoder — including a
@@ -961,10 +961,10 @@ def _encode_statements(
     (segments are bounded by the declared name table, so per-task work
     is small and constant; segments are the embarrassingly-parallel
     unit at 100 TB, mirroring the decode side's per-segment resolver).
-    ``namespaces`` is collected on the driver in its row order and
-    handed to the segment-0 task (declarations are few, one per
-    prefix directive); any ``namespaces`` frame, even an empty one,
-    marks the stream version 2.
+    ``namespaces`` is collected in its row order and handed to the
+    segment-0 task (declarations are few, one per prefix directive);
+    any ``namespaces`` frame, even an empty one, marks the stream
+    version 2.
 
     Declared table sizes are max(configured, used), kept identical
     across every segment's options row (P10 later-options equality)."""
