@@ -134,6 +134,23 @@ def test_inspect_metrics(spark, triples):
     assert "triple_count:" in yaml_text and '\\"' in yaml_text
 
 
+def test_per_frame_metrics_is_projection_of_full(spark, triples):
+    """The 4-counter battery table equals the full counter table
+    projected onto its six columns, values and types alike."""
+    from cli_spark.inspect_metrics import per_frame_metrics_full
+
+    cols = ["seg", "frame_index", "option_count", "name_count",
+            "triple_count", "row_count"]
+    frames = J.encode_triples(spark, triples, rows_per_frame=64)
+    rows = J.decode_frames(frames).cache()
+    pf = per_frame_metrics(rows)
+    full = per_frame_metrics_full(rows).select(*cols)
+    assert pf.columns == cols
+    assert pf.dtypes == full.dtypes
+    _assert_equal_sets(pf, full)
+    rows.unpersist()
+
+
 def test_stream_totals_names_each_counter_once(spark, triples):
     """The aggregate report's roll-up: one column per counter, led by
     frame_count, for both the count and the size statistic."""
