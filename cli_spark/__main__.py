@@ -12,7 +12,7 @@ re-expressed as Spark jobs:
                                        [--options-file F.jelly]
                                        [--delimited true|false|either]
     python -m cli_spark rdf transcode  IN1.jelly [IN2.jelly ...] --to out.jelly
-    python -m cli_spark pipeline       --n-files N [--workdir DIR] [--engine sql|pandas]
+    python -m cli_spark pipeline       --n-files N [--workdir DIR]
     python -m cli_spark version | v | --version
     python -m cli_spark completions bash|zsh
 
@@ -502,7 +502,6 @@ def main(argv: list[str] | None = None) -> int:
     pl = sub.add_parser("pipeline")
     pl.add_argument("--n-files", type=int, default=1000)
     pl.add_argument("--workdir", default=None)
-    pl.add_argument("--engine", choices=["sql", "pandas"], default="sql")
     pl.add_argument("--link-threshold", type=float, default=0.7)
     pl.add_argument("--extract-chunks", type=int, default=1,
                     help="hash-split extraction into N per-chunk-committed "
@@ -582,7 +581,6 @@ def _dispatch(spark, args) -> int:
             spark,
             repos,
             workdir=args.workdir,
-            engine=args.engine,
             link_threshold=args.link_threshold,
             check_input=True,
             extract_chunks=args.extract_chunks,

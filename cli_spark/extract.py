@@ -7,16 +7,10 @@ is per-language mention detection over file content, emitting entity
 triples (repo, file, commit, import, symbol-def/use) with the fixed
 vocabulary of :mod:`cli_spark.corpus`.
 
-Two interchangeable engines, identical output:
-
-- ``engine="sql"`` (default): ``regexp_extract_all`` columnar
-  expressions — whole-stage-codegen'd, zero Python in the hot path.
-  This is the 100 TB path: the scan, regex, explode, and dedup all
-  stay JVM-side and pipeline inside one stage.
-- ``engine="pandas"``: an Arrow-batched ``mapInPandas`` extractor
-  (vectorized ``Series.str.findall``, no per-row Python) — the shape
-  mandated for extractors that need real per-lang tokenizers/AST
-  walks; the regex set here is the stand-in for that logic.
+Extraction is ``regexp_extract_all`` columnar expressions —
+whole-stage-codegen'd, zero Python in the hot path: the scan, regex,
+explode and dedup all stay JVM-side and pipeline inside one stage.
+The regex set is the stand-in for real per-language tokenizers.
 
 Output schema (FIXTURES.md §2): subj, pred, obj, obj_kind, graph,
 src_repo, src_path, src_commit. Triples are set-semantics, matching
@@ -25,9 +19,6 @@ Jena's DatasetGraph-is-a-set behavior (StreamRdfBatchWriter.scala:18-19)
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,9 +34,6 @@ from .corpus import (
     PRED_PROVIDES,
     PRED_USES,
 )
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 # (mention_type, regex-with-one-capture-group) per language. Multiline
 # anchors via inline (?m). These are the "per-lang regex extractors" of
@@ -77,15 +65,12 @@ LANG_PATTERNS: dict[str, list[tuple[str, str]]] = {
     ],
 }
 
-MENTION_SCHEMA = (
-    "repo string, path string, commit string, lang string, "
-    "mention_type string, name string"
-)
 
+def extract_mentions(repos: DataFrame) -> DataFrame:
+    """(repo, path, commit, lang, mention_type, name) — one row per hit.
 
-def _mentions_sql(repos: DataFrame) -> DataFrame:
-    """Columnar mention extraction: one regexp_extract_all per pattern,
-    concatenated per language, exploded once. All JVM-side."""
+    One regexp_extract_all per pattern, concatenated per language,
+    exploded once. All JVM-side."""
     def one_pattern(mtype: str, rx: str) -> Column:
         # NB: the lambda must be unary — F.transform passes (elem, idx)
         # to two-arg lambdas, so a default-arg closure would capture the
@@ -116,69 +101,13 @@ def _mentions_sql(repos: DataFrame) -> DataFrame:
     ).select("repo", "path", "commit", "lang", "m.mention_type", "m.name")
 
 
-def _mentions_pandas(repos: DataFrame) -> DataFrame:
-    """Arrow-batched extractor: vectorized pandas str ops per batch.
-
-    Stand-in for real tokenizer/AST extractors — batch shape and UDF
-    signature are the production ones (iterator of pandas DataFrames in
-    and out, never row-at-a-time Python).
-    """
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for lang, patterns in LANG_PATTERNS.items():
-                sub = pdf[pdf["lang"] == lang]
-                if sub.empty:
-                    continue
-                sub_outs = []
-                for mtype, rx in patterns:
-                    # findall is vectorized across the batch (Python re
-                    # honors the inline (?m) flag); explode flattens the
-                    # per-row match lists.
-                    hits = sub["content"].str.findall(rx)
-                    frame = sub[["repo", "path", "commit", "lang"]].copy()
-                    frame["name"] = hits
-                    frame = frame.explode("name").dropna(subset=["name"])
-                    frame["mention_type"] = mtype
-                    sub_outs.append(
-                        frame[["repo", "path", "commit", "lang", "mention_type", "name"]]
-                    )
-                # row-local set semantics, mirroring the SQL engine's
-                # array_distinct (provenance keys make rows independent)
-                outs.append(
-                    pd.concat(sub_outs, ignore_index=True).drop_duplicates()
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    columns=["repo", "path", "commit", "lang", "mention_type", "name"]
-                )
-
-    return repos.select("repo", "path", "commit", "lang", "content").mapInPandas(
-        extract, schema=MENTION_SCHEMA
-    )
-
-
-def extract_mentions(repos: DataFrame, engine: str = "sql") -> DataFrame:
-    """(repo, path, commit, lang, mention_type, name) — one row per hit."""
-    if engine == "sql":
-        return _mentions_sql(repos)
-    if engine == "pandas":
-        return _mentions_pandas(repos)
-    raise ValueError(f"unknown extraction engine: {engine!r}")
-
-
 def _file_iri() -> Column:
     return F.format_string("kg:file/%s/%s@%s", F.col("repo"), F.col("path"), F.col("commit"))
 
 
-def extract_triples(repos: DataFrame, engine: str = "sql") -> DataFrame:
+def extract_triples(repos: DataFrame) -> DataFrame:
     """Full stage-1 output: metadata triples (columnar, no parsing) ∪
-    mention triples (regex engines above), deduplicated.
+    mention triples (the regex extractor above), deduplicated.
 
     Scale notes: the metadata arm is a pure projection; the mention arm
     is scan → regex → explode (no shuffle until the final dedup, which
@@ -214,7 +143,7 @@ def extract_triples(repos: DataFrame, engine: str = "sql") -> DataFrame:
         F.col("commit").alias("src_commit"),
     ).select("t.subj", "t.pred", "t.obj", "t.obj_kind", "src_repo", "src_path", "src_commit")
 
-    mentions = extract_mentions(repos, engine=engine)
+    mentions = extract_mentions(repos)
     pred = (
         F.when(F.col("mention_type") == "imports", F.lit(PRED_IMPORTS))
         .when(F.col("mention_type") == "provides", F.lit(PRED_PROVIDES))
@@ -238,9 +167,9 @@ def extract_triples(repos: DataFrame, engine: str = "sql") -> DataFrame:
     # carries (src_repo, src_path, src_commit), and that provenance key is
     # unique per source row — so duplicates can only arise within one row
     # (a mention matched twice in the same file). Those are removed
-    # row-locally (array_distinct in the SQL engine, drop_duplicates per
-    # sub-batch in the pandas engine), which makes extraction a pure
-    # narrow map: at corpus scale this is the difference between
-    # shuffling the whole triple table once and not shuffling at all.
+    # row-locally (array_distinct in extract_mentions), which makes
+    # extraction a pure narrow map: at corpus scale this is the
+    # difference between shuffling the whole triple table once and not
+    # shuffling at all.
     out = meta.unionByName(mention_triples)
     return out.withColumn("graph", F.format_string("kg:graph/%s", F.col("src_repo")))

@@ -106,24 +106,6 @@ def file_shingles(repos: DataFrame) -> DataFrame:
     )
 
 
-def _sig_expr(num_perm: int):
-    """Pure-JVM fallback: K x array_min(transform(...)) — correct but
-    interpreted per element (HOFs don't codegen), ~12x slower than the
-    Arrow path in steady state."""
-
-    def perm_min(a: int, b: int):
-        # factory keeps the lambda unary: F.transform passes (elem, idx)
-        # to multi-arg callables, which would bind the index to `a`.
-        return F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE)),
-            )
-        )
-
-    return F.array(*[perm_min(a, b) for a, b in _perm_params(num_perm)])
-
-
 def _sig_arrow_kernel(num_perm: int):
     """Arrow-native signature kernel (mapInArrow): the list<int64> hash
     column is consumed zero-copy — ``values`` is the flat int64 buffer,
@@ -181,9 +163,7 @@ def _sig_arrow_kernel(num_perm: int):
     return kernel
 
 
-def minhash_signatures(
-    repos: DataFrame, num_perm: int = NUM_PERM, engine: str = "arrow"
-) -> DataFrame:
+def minhash_signatures(repos: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     """(file_iri, sig: array<long>) — **zero-shuffle** narrow map.
 
     MinHash is a per-document reduction, so instead of exploding
@@ -191,22 +171,17 @@ def minhash_signatures(
     shuffle at 20k files; unbounded at 100 TB), the whole signature is
     computed row-local: shingle hashes as a per-row array
     (:func:`shingle_hash_arrays`), then the K permutation-mins in one
-    Arrow batch kernel (``engine="arrow"``, default — the north-star's
-    "vectorized pandas/Arrow UDFs" path) or as pure JVM array exprs
-    (``engine="expr"``). Duplicate shingles are harmless under MIN, so
-    no ``distinct()`` shuffle either. Both engines are bit-identical:
-    uint64 arithmetic is exact for a*h+b < 2^62.
+    Arrow batch kernel (the north-star's "vectorized pandas/Arrow UDFs"
+    path). Duplicate shingles are harmless under MIN, so no
+    ``distinct()`` shuffle either.
 
     Replaces the reference's sequential per-stream dictionary/encoder
     state (RdfToJelly.scala:130-199) shape with stateless per-row
     sketches — no shuffle, no skew, no cross-partition state.
     """
-    base = shingle_hash_arrays(repos)
-    if engine == "arrow":
-        return base.mapInArrow(
-            _sig_arrow_kernel(num_perm), "file_iri string, sig array<long>"
-        )
-    return base.select("file_iri", _sig_expr(num_perm).alias("sig"))
+    return shingle_hash_arrays(repos).mapInArrow(
+        _sig_arrow_kernel(num_perm), "file_iri string, sig array<long>"
+    )
 
 
 def lsh_candidate_pairs(
@@ -297,9 +272,7 @@ def score_pairs(
     )
 
 
-def link_near_dup_files(
-    repos: DataFrame, threshold: float = 0.7, engine: str = "arrow"
-) -> DataFrame:
+def link_near_dup_files(repos: DataFrame, threshold: float = 0.7) -> DataFrame:
     """sameAs triples between near-duplicate files (FIXTURES.md clones).
 
     The banding and scoring joins run on **64-bit hashed file ids**
@@ -314,7 +287,7 @@ def link_near_dup_files(
     # IRI-decode joins: checkpoint eagerly so the signature kernel runs
     # once, in one job, before any of them (spills to disk at scale).
     sigs = (
-        minhash_signatures(repos, engine=engine)
+        minhash_signatures(repos)
         .withColumn("fid", F.xxhash64("file_iri"))
         .localCheckpoint()
     )

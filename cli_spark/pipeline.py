@@ -118,8 +118,6 @@ def run_kg_pipeline(
     repos: DataFrame,
     workdir: str | None = None,
     link_threshold: float = 0.7,
-    engine: str = "sql",
-    check_lineage: bool = True,
     check_input: bool = False,
     extract_chunks: int = 1,
 ) -> int:
@@ -148,8 +146,8 @@ def run_kg_pipeline(
     _cached: list[DataFrame] = [repos]
     try:
         return _run_kg_pipeline_body(
-            spark, repos, workdir, link_threshold, engine, check_lineage,
-            check_input, extract_chunks, _cached,
+            spark, repos, workdir, link_threshold, check_input,
+            extract_chunks, _cached,
         )
     finally:
         for df in _cached:
@@ -164,8 +162,6 @@ def _run_kg_pipeline_body(
     repos: DataFrame,
     workdir: str | None,
     link_threshold: float,
-    engine: str,
-    check_lineage: bool,
     check_input: bool,
     extract_chunks: int,
     _cached: list[DataFrame],
@@ -190,7 +186,7 @@ def _run_kg_pipeline_body(
             workdir,
             "10_extract",
             repos,
-            lambda df: extract_triples(df, engine=engine),
+            extract_triples,
             n_chunks=extract_chunks,
             chunk_cols=["repo", "path", "commit"],
             lineage_cols=["subj", "pred", "obj"],
@@ -200,7 +196,7 @@ def _run_kg_pipeline_body(
             spark,
             workdir,
             "10_extract",
-            lambda: extract_triples(repos, engine=engine),
+            lambda: extract_triples(repos),
             lineage_cols=["subj", "pred", "obj"],
         )
     if workdir is None:
@@ -232,8 +228,13 @@ def _run_kg_pipeline_body(
         canon = canon.persist()
         _cached.append(canon)
 
-    if check_lineage:
-        assert lineage_violations(repos, canon) == 0, "lineage invariant violated"
+    bad = lineage_violations(repos, canon)
+    if bad:
+        raise ValueError(
+            f"lineage invariant violated: {bad} provenance rows in the "
+            "canonical triples map to a source row that is missing or "
+            "whose content no longer hashes to its content_sha"
+        )
 
     same_as_triples = same_as.select(
         "subj", "pred", "obj", "obj_kind",

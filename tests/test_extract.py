@@ -1,5 +1,5 @@
-"""Extraction stage: both engines must reproduce the closed-form golden
-triples exactly (P = R = 1.0 on the synthetic corpus) and preserve the
+"""Extraction stage: must reproduce the closed-form golden triples
+exactly (P = R = 1.0 on the synthetic corpus) and preserve the
 content-sha lineage invariant (BASELINE.json input_hint)."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cli_spark.corpus import expected_triples, generate_repos
-from cli_spark.extract import extract_mentions, extract_triples
+from cli_spark.extract import extract_triples
 
 N = 60
 KEY = ["subj", "pred", "obj", "obj_kind"]
@@ -24,9 +24,8 @@ def golden(spark):
     return expected_triples(spark, N).select(*KEY).distinct().cache()
 
 
-@pytest.mark.parametrize("engine", ["sql", "pandas"])
-def test_extraction_precision_recall(spark, repos, golden, engine):
-    actual = extract_triples(repos, engine=engine).select(*KEY).distinct()
+def test_extraction_precision_recall(spark, repos, golden):
+    actual = extract_triples(repos).select(*KEY).distinct()
     n_exp = golden.count()
     n_act = actual.count()
     n_inter = golden.join(actual, KEY).count()
@@ -34,13 +33,6 @@ def test_extraction_precision_recall(spark, repos, golden, engine):
     precision = n_inter / n_act
     recall = n_inter / n_exp
     assert precision == 1.0 and recall == 1.0, (precision, recall)
-
-
-def test_engines_agree(spark, repos):
-    a = extract_mentions(repos, engine="sql")
-    b = extract_mentions(repos, engine="pandas")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 def test_lineage_invariant_after_extraction(spark, repos):

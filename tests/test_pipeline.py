@@ -89,6 +89,23 @@ def test_lineage_violation_detected(spark, repos):
     assert lineage_violations(tampered, triples) > 0
 
 
+def test_pipeline_raises_on_lineage_violation(spark, repos):
+    """One source row whose content_sha no longer matches its content:
+    the pipeline stops with a typed error naming the violation count
+    (an explicit raise, which ``python -O`` keeps)."""
+    first = repos.select("repo", "path", "commit").orderBy("repo", "path").first()
+    hit = (
+        (F.col("repo") == first.repo)
+        & (F.col("path") == first.path)
+        & (F.col("commit") == first.commit)
+    )
+    tampered = repos.withColumn(
+        "content_sha", F.when(hit, F.lit("0" * 64)).otherwise(F.col("content_sha"))
+    )
+    with pytest.raises(ValueError, match=r"lineage invariant violated: 1 provenance rows"):
+        run_kg_pipeline(spark, tampered)
+
+
 def test_materialize_iceberg_flag(spark, repos, tmp_path):
     """SPARK_GRAFT_ICEBERG=1 routes to writeTo(...).partitionedBy(
     bucket(N, subj)).createOrReplace() — exercised for real where the
