@@ -33,14 +33,14 @@ _FULL_COUNTERS = (
     ("prefix", KIND_PREFIX),
     ("datatype", KIND_DATATYPE),
 )
+
+
 def per_frame_metrics_full(rows: DataFrame) -> DataFrame:
     """(seg, frame_index, frame_count, row_count, option_count, ...,
     datatype_count) — the reference's FULL 11-counter battery in its
     printer order (FrameInfo.format, MetricsPrinter.scala:35-112),
-    CountStatistic strategy. The CLI count-report path; the 4-counter
-    :func:`per_frame_metrics` stays the battery/oracle surface (its
-    schema is pinned by q13/q16/q17/q51), and the SizeStatistic path is
-    the exact wire tag-walk `jelly.frame_wire_size_stats`."""
+    CountStatistic strategy. The CLI count-report path; the SizeStatistic
+    path is the exact wire tag-walk `jelly.frame_wire_size_stats`."""
     aggs = [
         F.sum(
             F.when(F.col("row_kind") == kind, 1).otherwise(0)
@@ -66,52 +66,14 @@ def stream_totals(per_frame: DataFrame) -> DataFrame:
     return per_frame.agg(*lead, *[F.sum(c).alias(c) for c in cols])
 
 
-def per_frame_metrics(rows: DataFrame, use_size: bool = False) -> DataFrame:
+def per_frame_metrics(rows: DataFrame) -> DataFrame:
     """(seg, frame_index, option_count, name_count, triple_count,
-    row_count[, *_size]) — A1 counters; `use_size` switches to the
-    SizeStatistic strategy (A2): serialized byte size instead of count."""
-    if use_size:
-        weight = (
-            F.when(F.col("row_kind") == KIND_NAME, F.length(F.coalesce("name", F.lit(""))) + 4)
-            .when(
-                F.col("row_kind") == KIND_TRIPLE,
-                # 4 ref varints + o_kind + dt ref + langtag bytes
-                F.lit(16) + F.length(F.coalesce("obj_lang", F.lit(""))) + 2,
-            )
-            .otherwise(F.lit(8))
-        )
-    else:
-        weight = F.lit(1)
-    return (
-        rows.withColumn("_w", weight)
-        .groupBy("seg", "frame_index")
-        .agg(
-            F.sum(F.when(F.col("row_kind") == KIND_OPTIONS, F.col("_w")).otherwise(0)).alias(
-                "option_count"
-            ),
-            F.sum(F.when(F.col("row_kind") == KIND_NAME, F.col("_w")).otherwise(0)).alias(
-                "name_count"
-            ),
-            F.sum(F.when(F.col("row_kind") == KIND_TRIPLE, F.col("_w")).otherwise(0)).alias(
-                "triple_count"
-            ),
-            F.sum("_w").alias("row_count"),
-        )
+    row_count) — the A1 counters the battery and oracle pin (q51), a
+    projection of :func:`per_frame_metrics_full`."""
+    return per_frame_metrics_full(rows).select(
+        "seg", "frame_index", "option_count", "name_count", "triple_count",
+        "row_count",
     )
-
-
-def aggregate_metrics(rows: DataFrame, use_size: bool = False) -> dict:
-    """Global roll-up (A3: the FrameInfo `+=` merge is Spark's
-    partial+final agg). Driver-side dict, one row."""
-    pf = per_frame_metrics(rows, use_size)
-    r = pf.agg(
-        F.count(F.lit(1)).alias("frame_count"),
-        F.sum("option_count").alias("option_count"),
-        F.sum("name_count").alias("name_count"),
-        F.sum("triple_count").alias("triple_count"),
-        F.sum("row_count").alias("row_count"),
-    ).collect()[0]
-    return {k: int(v) for k, v in r.asDict().items()}
 
 
 # NodeDetailInfo taxonomy (MetricsPrinter.scala:123-147): wire term

@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from cli_spark import jelly as J
 from cli_spark.compare import validate_stream
-from cli_spark.inspect_metrics import aggregate_metrics, per_frame_metrics, render_yaml
+from cli_spark.inspect_metrics import (
+    per_frame_metrics,
+    per_frame_metrics_full,
+    render_yaml,
+    stream_totals,
+)
 
 KEY = ["subj", "pred", "obj", "obj_kind"]
 
@@ -122,14 +127,12 @@ def test_inspect_metrics(spark, triples):
     n = triples.count()
     frames = J.encode_triples(spark, triples, rows_per_frame=64)
     rows = J.decode_frames(frames).cache()
-    agg = aggregate_metrics(rows)
+    agg = stream_totals(per_frame_metrics_full(rows)).collect()[0].asDict()
     assert agg["triple_count"] == n
     assert agg["frame_count"] == frames.count()
     assert agg["option_count"] >= 1
     pf = per_frame_metrics(rows)
     assert pf.agg(F.sum("triple_count")).collect()[0][0] == n
-    sz = aggregate_metrics(rows, use_size=True)
-    assert sz["triple_count"] == 18 * n  # SizeStatistic: 18 bytes/plain triple
     yaml_text = render_yaml({"frames": agg, "note": 'has "quotes"'})
     assert "triple_count:" in yaml_text and '\\"' in yaml_text
 
@@ -137,8 +140,6 @@ def test_inspect_metrics(spark, triples):
 def test_per_frame_metrics_is_projection_of_full(spark, triples):
     """The 4-counter battery table equals the full counter table
     projected onto its six columns, values and types alike."""
-    from cli_spark.inspect_metrics import per_frame_metrics_full
-
     cols = ["seg", "frame_index", "option_count", "name_count",
             "triple_count", "row_count"]
     frames = J.encode_triples(spark, triples, rows_per_frame=64)
@@ -154,8 +155,6 @@ def test_per_frame_metrics_is_projection_of_full(spark, triples):
 def test_stream_totals_names_each_counter_once(spark, triples):
     """The aggregate report's roll-up: one column per counter, led by
     frame_count, for both the count and the size statistic."""
-    from cli_spark.inspect_metrics import per_frame_metrics_full, stream_totals
-
     frames = J.encode_triples(spark, triples, rows_per_frame=64)
     n_frames = frames.count()
     for pf in (
