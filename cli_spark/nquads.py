@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 # optional datatype/langtag. Quoted triples nest recursively in the
 # reference (OrderedRdfCompare.scala:45-51); a regular expression cannot
 # count brackets, so the JVM tokenizer unrolls the recursion to
-# QT_MAX_DEPTH levels; deeper lines route to the unbounded Python
-# tokenizer when parse_lines(deep_star=True) (see _tokenize_terms_py).
+# QT_MAX_DEPTH levels; parse_lines routes deeper lines to the unbounded
+# Python tokenizer (see _tokenize_terms_py).
 # Downstream is depth-independent: the term value stays the
 # self-delimiting "<< ... >>" source text, render passes it through,
 # and compare masks bnode labels textually at any depth.
@@ -285,24 +285,24 @@ def _parse_lines_py(lines: DataFrame, text_col: str) -> DataFrame:
     return lines.mapInPandas(parse, schema)
 
 
-def parse_lines(
-    lines: DataFrame, text_col: str = "value", deep_star: bool = False
-) -> DataFrame:
+def parse_lines(lines: DataFrame, text_col: str = "value") -> DataFrame:
     """N-Triples/N-Quads lines → term-model triples. Lines that are blank
     or comments are dropped; 3 terms ⇒ default graph (null), 4 ⇒ quad.
 
-    ``deep_star=True`` adds a rescue branch for quoted triples nested
-    deeper than QT_MAX_DEPTH: lines with more than QT_MAX_DEPTH "<<"
-    occurrences (a conservative JVM-side filter — breadth can trip it,
-    depth always does) are parsed by the unbounded Python tokenizer and
-    unioned back. Default off: the extra branch re-scans the source, a
-    cost real N-Quads corpora (depth ≤ 1-2) should not pay."""
-    if deep_star:
-        deep = (
-            F.size(F.split(F.col(text_col), F.lit("<<"), -1)) - 1
-        ) > QT_MAX_DEPTH
-        shallow = parse_lines(lines.filter(~deep), text_col)
-        return shallow.unionByName(_parse_lines_py(lines.filter(deep), text_col))
+    Quoted triples nested deeper than QT_MAX_DEPTH are beyond the JVM
+    regex, so lines with more than QT_MAX_DEPTH "<<" occurrences (a
+    conservative JVM-side filter — breadth can trip it, depth always
+    does) are parsed by the unbounded Python tokenizer and unioned after
+    the rest. The union re-scans the source; on inputs without such
+    lines the Python branch sees no rows."""
+    deep = (F.size(F.split(F.col(text_col), F.lit("<<"), -1)) - 1) > QT_MAX_DEPTH
+    return _parse_lines_jvm(lines.filter(~deep), text_col).unionByName(
+        _parse_lines_py(lines.filter(deep), text_col)
+    )
+
+
+def _parse_lines_jvm(lines: DataFrame, text_col: str) -> DataFrame:
+    """The regex tokenizer: quoted triples up to QT_MAX_DEPTH."""
     terms = F.regexp_extract_all(F.col(text_col), F.lit(TERM_RX), F.lit(1))
     rows = (
         lines.filter(~F.col(text_col).rlike(r"^\s*(#.*)?$"))
@@ -334,10 +334,8 @@ def parse_lines(
     )
 
 
-def read_nquads(
-    spark: SparkSession, path: str, deep_star: bool = False
-) -> DataFrame:
-    return parse_lines(spark.read.text(path), deep_star=deep_star)
+def read_nquads(spark: SparkSession, path: str) -> DataFrame:
+    return parse_lines(spark.read.text(path))
 
 
 def _render_term(value: Column, kind: Column, datatype: Column, lang: Column) -> Column:

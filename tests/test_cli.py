@@ -1125,6 +1125,34 @@ def test_cli_empty_input_roundtrip(spark, tmp_path):
         assert lines == []
 
 
+def test_cli_deeply_nested_quoted_triple_roundtrip(spark, tmp_path):
+    """A quoted triple nested deeper than the regex tokenizer reaches
+    survives to-jelly then from-jelly next to two shallow lines."""
+    from cli_spark.nquads import QT_MAX_DEPTH
+
+    t = "<kg:s0> <kg:p> <kg:o>"
+    for d in range(1, QT_MAX_DEPTH + 4):
+        t = f"<kg:s{d}> <kg:p> << {t} >>"
+    src = tmp_path / "deep.nt"
+    src.write_text(
+        f"{t} .\n"
+        '<kg:plain> <kg:p> "v" .\n'
+        "<kg:a> <kg:claims> << <kg:s> <kg:p> <kg:o> >> .\n"
+    )
+    jelly = str(tmp_path / "deep.jelly")
+    assert main(["rdf", "to-jelly", str(src), "--to", jelly]) == 0
+    out = tmp_path / "deep_back"
+    assert main(["rdf", "from-jelly", jelly, "--to", str(out)]) == 0
+    lines = [
+        line
+        for p in os.listdir(out) if p.startswith("part-")
+        for line in (out / p).read_text().splitlines() if line.strip()
+    ]
+    assert len(lines) == 3
+    deep = [line for line in lines if line.startswith(f"<kg:s{QT_MAX_DEPTH + 3}>")]
+    assert len(deep) == 1 and deep[0].count("<<") == QT_MAX_DEPTH + 3
+
+
 def test_cli_namespace_declarations_without_statements(spark, tmp_path, capsys):
     """Declarations ride in the first segment, which a stream with no
     statements does not have: a typed error, never a silent drop."""

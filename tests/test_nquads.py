@@ -152,14 +152,14 @@ def test_python_tokenizer_malformed_and_charset(spark):
 
 
 def test_jvm_and_python_parsers_agree_randomized(spark):
-    """The JVM regex path (parse_lines) and the Python fallback tokenizer
-    (_parse_lines_py) are unioned by deep_star=True — they must agree
+    """The JVM regex path (_parse_lines_jvm) and the Python fallback
+    tokenizer (_parse_lines_py) are unioned by parse_lines — they must agree
     EXACTLY on every line both can parse. 300 seeded-random lines sweep
     unicode IRIs, bnode charsets, escaped literals, datatypes, langtags,
     graphs, and quoted triples nested up to QT_MAX_DEPTH."""
     import random
 
-    from cli_spark.nquads import QT_MAX_DEPTH, _parse_lines_py, parse_lines
+    from cli_spark.nquads import QT_MAX_DEPTH, _parse_lines_jvm, _parse_lines_py
     from cli_spark.turtle import _nt_term_text
 
     rng = random.Random(20260817)
@@ -217,7 +217,7 @@ def test_jvm_and_python_parsers_agree_randomized(spark):
         lines.append(" ".join(parts) + " .")
 
     src = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    jvm = sorted(map(tuple, parse_lines(src).collect()))
+    jvm = sorted(map(tuple, _parse_lines_jvm(src, "value").collect()))
     py = sorted(map(tuple, _parse_lines_py(src, "value").collect()))
     assert len(jvm) == 300
     assert jvm == py

@@ -157,15 +157,18 @@ def _nest(depth: int, obj: str = "<kg:o>") -> str:
 
 def test_deep_star_beyond_regex_depth(spark):
     """Nesting deeper than QT_MAX_DEPTH routes to the unbounded Python
-    tokenizer under deep_star=True and round-trips; the shallow lines in
-    the same input still take the JVM regex path (union plan)."""
+    tokenizer and round-trips; the shallow lines in the same input still
+    take the JVM regex path (union plan) and parse as before."""
     from cli_spark.nquads import QT_MAX_DEPTH
 
+    shallow = parse_lines(
+        spark.createDataFrame([(ln,) for ln in STAR_LINES], "value string")
+    )
+    assert shallow.count() == 3
     deep_line = _nest(QT_MAX_DEPTH + 3) + " ."
     lines = [deep_line, "<kg:plain> <kg:p> \"v\" .", _nest(2) + " ."]
     df = parse_lines(
-        spark.createDataFrame([(ln,) for ln in lines], "value string"),
-        deep_star=True,
+        spark.createDataFrame([(ln,) for ln in lines], "value string")
     )
     rows = df.collect()
     assert len(rows) == 3
@@ -174,18 +177,8 @@ def test_deep_star_beyond_regex_depth(spark):
     # the quoted term is the self-delimiting source text at full depth
     assert deep[0].obj.count("<<") == QT_MAX_DEPTH + 3
     # render ∘ parse identity at unbounded depth
-    back = parse_lines(render_lines(df), "line", deep_star=True)
+    back = parse_lines(render_lines(df), "line")
     key = ["subj", "subj_kind", "pred", "obj", "obj_kind"]
     assert {tuple(r) for r in back.select(*key).collect()} == {
         tuple(r) for r in df.select(*key).collect()
     }
-
-
-def test_deep_star_default_off_unchanged(spark):
-    """Without the flag, shallow parses are byte-identical to before
-    (no Python branch in the plan)."""
-    df = parse_lines(
-        spark.createDataFrame([(ln,) for ln in STAR_LINES], "value string")
-    )
-    assert df.count() == 3
-    assert "mapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
