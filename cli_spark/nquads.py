@@ -293,9 +293,12 @@ def parse_lines(lines: DataFrame, text_col: str = "value") -> DataFrame:
     regex, so lines with more than QT_MAX_DEPTH "<<" occurrences (a
     conservative JVM-side filter — breadth can trip it, depth always
     does) are parsed by the unbounded Python tokenizer and unioned after
-    the rest. The union re-scans the source; on inputs without such
-    lines the Python branch sees no rows."""
+    the rest. One JVM-side probe job looks for such lines first: an
+    input without them keeps a Python-free plan, so readers that scan
+    it many times (validate, the encoder) pay no Python task per scan."""
     deep = (F.size(F.split(F.col(text_col), F.lit("<<"), -1)) - 1) > QT_MAX_DEPTH
+    if lines.filter(deep).isEmpty():
+        return _parse_lines_jvm(lines, text_col)
     return _parse_lines_jvm(lines.filter(~deep), text_col).unionByName(
         _parse_lines_py(lines.filter(deep), text_col)
     )

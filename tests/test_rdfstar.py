@@ -158,13 +158,9 @@ def _nest(depth: int, obj: str = "<kg:o>") -> str:
 def test_deep_star_beyond_regex_depth(spark):
     """Nesting deeper than QT_MAX_DEPTH routes to the unbounded Python
     tokenizer and round-trips; the shallow lines in the same input still
-    take the JVM regex path (union plan) and parse as before."""
+    take the JVM regex path (union plan)."""
     from cli_spark.nquads import QT_MAX_DEPTH
 
-    shallow = parse_lines(
-        spark.createDataFrame([(ln,) for ln in STAR_LINES], "value string")
-    )
-    assert shallow.count() == 3
     deep_line = _nest(QT_MAX_DEPTH + 3) + " ."
     lines = [deep_line, "<kg:plain> <kg:p> \"v\" .", _nest(2) + " ."]
     df = parse_lines(
@@ -182,3 +178,13 @@ def test_deep_star_beyond_regex_depth(spark):
     assert {tuple(r) for r in back.select(*key).collect()} == {
         tuple(r) for r in df.select(*key).collect()
     }
+
+
+def test_deep_star_default_off_unchanged(spark):
+    """An input with no line beyond the regex depth parses on the JVM
+    path alone (no Python branch in the plan)."""
+    df = parse_lines(
+        spark.createDataFrame([(ln,) for ln in STAR_LINES], "value string")
+    )
+    assert df.count() == 3
+    assert "mapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
