@@ -533,7 +533,11 @@ def main(argv: list[str] | None = None) -> int:
     existing = SparkSession.getActiveSession()
     spark = existing or get_spark("cli_spark_cli")
     try:
-        rc = _dispatch(spark, args)
+        from .manifest import job_group
+
+        label = "pipeline" if args.cmd == "pipeline" else f"rdf {args.rdf_cmd}"
+        with job_group(spark, label):
+            rc = _dispatch(spark, args)
         if rc == 0 and stdout_target is not None:
             _emit_stdout(stdout_target)
         return rc

@@ -1,15 +1,21 @@
 """RDF comparison battery — the distributed re-expression of
 ``rdf validate`` (SURVEY.md §2.3, §3.3). Unlike the reference, which
 materializes every frame in memory (RdfValidate.scala:101, documented
-OOM), every comparison here is a join.
+OOM), every comparison here is a join or an aggregate, and each check
+battery ends in ONE Spark action whatever the number of checks: the
+reference's single pass over the stream (RdfValidate.scala:101-200)
+becomes one aggregate over the rows, not one action per check.
 
 - :func:`ordered_compare`     J1: positional equality with blank-node
-  bijection (OrderedRdfCompare.scala:10-75)
+  bijection (OrderedRdfCompare.scala:10-75) — sizes and per-column
+  position mismatches in one aggregate over a full join on ``idx``
 - :func:`unordered_compare`   J2: per-graph isomorphism via iterative
   hash-refinement canonical bnode labeling (UnorderedRdfCompare.scala:10-34)
+  — both sides refined in one loop, the verdict in one aggregate
 - :func:`containment`         J3: expected ⊆ actual via left-anti join
 - :func:`precision_recall`    north-rule P/R scorer over canonicalized triples
-- :func:`validate_stream`     P5/P8/P10 structural checks over a frames/rows table
+- :func:`validate_stream`     P5/P8/P10 structural checks over a rows
+  table, all in one aggregate
 """
 
 from __future__ import annotations
@@ -18,7 +24,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 BNODE_PREFIX = "_:"
 REFINE_ROUNDS = 5
@@ -48,6 +53,13 @@ def ordered_compare(
     quads (pass a 4th graph column, nulls coalesced by the caller —
     the reference compares full datasets via its AnyStatementHandler,
     RdfValidate.scala:173-181).
+
+    Both sides' sizes and every column's count of differing positions
+    come from one aggregate over a full join on ``idx`` (with unique
+    1..n ranks and equal sizes, the rows present on both sides are the
+    inner join); the first failing check in the order size, ``cols``,
+    bijection is reported. The bijection is a second action, run only
+    when the positions agree.
     """
     def with_idx(df):
         if "idx" in df.columns:
@@ -64,10 +76,8 @@ def ordered_compare(
         return global_row_number(tagged, ["_src_pos"], rn_col="idx").drop("_src_pos")
 
     e, a = with_idx(expected).alias("e"), with_idx(actual).alias("a")
-    ne, na = e.count(), a.count()
-    if ne != na:
-        return CompareResult(False, f"size mismatch: expected {ne} != actual {na}")
-    j = e.join(a, "idx")
+    j = e.join(a, F.col("e.idx") == F.col("a.idx"), "full")
+    paired = F.col("e.idx").isNotNull() & F.col("a.idx").isNotNull()
 
     # Positional equality with bnode labels MASKED — this recurses into
     # RDF-star quoted-triple terms for free (OrderedRdfCompare.scala:45-51):
@@ -84,14 +94,24 @@ def ordered_compare(
             needs, F.regexp_replace(col, _LABEL_RX, "_:ω")
         ).otherwise(col)
 
-    for c in cols:
-        bad = j.filter(
-            ~(
-                masked(F.col(f"e.{c}")).eqNullSafe(masked(F.col(f"a.{c}")))
-            )
-        ).count()
-        if bad:
-            return CompareResult(False, f"{bad} positions differ in {c}")
+    counts = j.agg(
+        F.count("e.idx").alias("ne"),
+        F.count("a.idx").alias("na"),
+        *[
+            F.count(F.when(
+                paired & ~masked(F.col(f"e.{c}")).eqNullSafe(masked(F.col(f"a.{c}"))),
+                1,
+            )).alias(f"bad{i}")
+            for i, c in enumerate(cols)
+        ],
+    ).first()
+    if counts["ne"] != counts["na"]:
+        return CompareResult(
+            False, f"size mismatch: expected {counts['ne']} != actual {counts['na']}"
+        )
+    for i, c in enumerate(cols):
+        if counts[f"bad{i}"]:
+            return CompareResult(False, f"{counts[f'bad{i}']} positions differ in {c}")
     # bnode bijection (functional e→a): every expected label pairs with
     # exactly one actual label across all positions, including labels
     # inside quoted triples (zipped in source order — masked equality
@@ -100,7 +120,7 @@ def ordered_compare(
     for c in cols:
         has_labels = _is_bnode(F.col(f"e.{c}")) | F.col(f"e.{c}").startswith("<<")
         p = (
-            j.filter(has_labels)
+            j.filter(paired & has_labels)
             .select(
                 F.explode(
                     F.arrays_zip(
@@ -126,22 +146,22 @@ def ordered_compare(
     return CompareResult(True, "equal")
 
 
-def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> DataFrame:
-    """Canonical bnode labeling by iterative hash refinement (color
-    refinement over the bnode incidence structure) — SURVEY.md §7 hard
-    part 1. Correct for graphs without automorphic bnode clusters; the
-    refinement hash folds each bnode's multiset of (pred, direction,
-    neighbor-signature) per round.
+def _with_graph(triples: DataFrame) -> DataFrame:
+    return triples.withColumn("graph", F.coalesce(F.col("graph"), F.lit("")))
 
-    Returns (graph, label, canon) for every bnode label per graph.
-    """
-    g = triples.withColumn("graph", F.coalesce(F.col("graph"), F.lit("")))
+
+def _refined_labels(g: DataFrame, scope: list[str], rounds: int) -> DataFrame:
+    """(*scope, label, h): the refinement hash of every bnode label of
+    ``g`` within its ``scope`` key. The scope key only partitions the
+    graph — it never enters the md5 input — so refining two sides at
+    once under (side, graph) gives each side the labels it gets alone
+    under (graph)."""
     # edges incident to bnodes, both directions
     occ = None
     for c, d in (("subj", "s"), ("obj", "o")):
         other = "obj" if c == "subj" else "subj"
         e = g.filter(_is_bnode(F.col(c))).select(
-            "graph",
+            *scope,
             F.col(c).alias("label"),
             F.lit(d).alias("dir"),
             F.col("pred"),
@@ -152,88 +172,126 @@ def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> D
     # checkpointed, so after the loop nothing reads occ (with rounds=0
     # the returned plan reads it once) and its cache is released here
     occ = occ.persist()
-    # initial signature: degree-ish — hash of sorted incident (dir, pred,
-    # non-bnode neighbor) multiset; bnode neighbors start as "?"
-    sig = occ.select(
-        "graph",
-        "label",
-        F.when(_is_bnode(F.col("neighbor")), F.lit("?")).otherwise(F.col("neighbor")).alias(
-            "nsig"
-        ),
-        "dir",
-        "pred",
-    )
-    labels = (
-        sig.groupBy("graph", "label")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_list(
-            F.concat_ws(":", "dir", "pred", "nsig"))))).alias("h"))
-    )
-    for _ in range(rounds):
-        nb = occ.join(
-            labels.select("graph", F.col("label").alias("neighbor"), F.col("h").alias("nh")),
-            ["graph", "neighbor"],
-            "left",
-        ).select(
-            "graph",
-            "label",
-            "dir",
-            "pred",
-            F.coalesce(F.col("nh"), F.col("neighbor")).alias("nsig"),
-        )
-        labels = nb.groupBy("graph", "label").agg(
+
+    def fold(nb):
+        # hash of the sorted multiset of (dir, pred, neighbor signature)
+        return nb.groupBy(*scope, "label").agg(
             F.md5(
                 F.concat_ws(
                     "|", F.sort_array(F.collect_list(F.concat_ws(":", "dir", "pred", "nsig")))
                 )
             ).alias("h")
-        ).localCheckpoint()
+        )
+
+    # initial signature: degree-ish — bnode neighbors start as "?"
+    labels = fold(occ.withColumn(
+        "nsig",
+        F.when(_is_bnode(F.col("neighbor")), F.lit("?")).otherwise(F.col("neighbor")),
+    ))
+    for _ in range(rounds):
+        nb = occ.join(
+            labels.select(*scope, F.col("label").alias("neighbor"), F.col("h").alias("nh")),
+            [*scope, "neighbor"],
+            "left",
+        ).withColumn("nsig", F.coalesce(F.col("nh"), F.col("neighbor")))
+        labels = fold(nb).localCheckpoint()
     occ.unpersist()
-    return labels.select(
+    return labels
+
+
+def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> DataFrame:
+    """Canonical bnode labeling by iterative hash refinement (color
+    refinement over the bnode incidence structure) — SURVEY.md §7 hard
+    part 1. Correct for graphs without automorphic bnode clusters; the
+    refinement hash folds each bnode's multiset of (pred, direction,
+    neighbor-signature) per round.
+
+    Returns (graph, label, canon) for every bnode label per graph.
+    """
+    return _refined_labels(_with_graph(triples), ["graph"], rounds).select(
         "graph", "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
+    )
+
+
+def _canonicalized(g: DataFrame, scope: list[str], keep: list[str]) -> DataFrame:
+    """Rewrite ``g``'s bnode labels to their canonical refinement hashes
+    within ``scope``; IRIs and literals pass through. Output:
+    (*scope, subj, pred, obj, *keep)."""
+    labels = _refined_labels(g, scope, REFINE_ROUNDS).select(
+        *scope, "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
+    )
+    return (
+        g.join(
+            labels.select(*scope, F.col("label").alias("subj"), F.col("canon").alias("sc")),
+            [*scope, "subj"],
+            "left",
+        )
+        .join(
+            labels.select(*scope, F.col("label").alias("obj"), F.col("canon").alias("oc")),
+            [*scope, "obj"],
+            "left",
+        )
+        .select(
+            *scope,
+            F.coalesce("sc", "subj").alias("subj"),
+            "pred",
+            F.coalesce("oc", "obj").alias("obj"),
+            *keep,
+        )
     )
 
 
 def canonicalize_bnodes(triples: DataFrame) -> DataFrame:
     """Rewrite bnode labels to canonical refinement hashes; IRIs and
     literals pass through. Output: (graph, subj, pred, obj, obj_kind?)."""
-    has_kind = "obj_kind" in triples.columns
-    g = triples.withColumn("graph", F.coalesce(F.col("graph"), F.lit("")))
-    labels = canonical_bnode_labels(triples)
-    out = (
-        g.join(
-            labels.select("graph", F.col("label").alias("subj"), F.col("canon").alias("sc")),
-            ["graph", "subj"],
-            "left",
-        )
-        .join(
-            labels.select("graph", F.col("label").alias("obj"), F.col("canon").alias("oc")),
-            ["graph", "obj"],
-            "left",
-        )
-        .select(
-            "graph",
-            F.coalesce("sc", "subj").alias("subj"),
-            "pred",
-            F.coalesce("oc", "obj").alias("obj"),
-            *(["obj_kind"] if has_kind else []),
-        )
-    )
-    return out
+    keep = ["obj_kind"] if "obj_kind" in triples.columns else []
+    return _canonicalized(_with_graph(triples), ["graph"], keep)
 
 
 def unordered_compare(expected: DataFrame, actual: DataFrame) -> CompareResult:
     """Per-graph isomorphism check (J2): graph sets equal, each graph's
-    canonicalized triple multiset equal (exceptAll both ways)."""
-    e = canonicalize_bnodes(expected)
-    a = canonicalize_bnodes(actual)
-    ge = e.select("graph").distinct()
-    ga = a.select("graph").distinct()
-    missing_g = ge.exceptAll(ga).count() + ga.exceptAll(ge).count()
-    if missing_g:
-        return CompareResult(False, f"graph sets differ ({missing_g} unmatched)")
-    diff = e.exceptAll(a).count() + a.exceptAll(e).count()
-    if diff:
-        return CompareResult(False, f"{diff} canonicalized triples unmatched")
+    canonicalized triple multiset equal.
+
+    Both sides are tagged ``side`` 0/1 and refined in ONE loop scoped by
+    (side, graph), each side's labels byte-identical to its
+    :func:`canonicalize_bnodes` labels. The verdict is one aggregate:
+    per canonical row the two sides' multiplicities, per graph
+    Σ|ne − na| and which sides have rows there, then one global row with
+    the number of graphs on one side only and the total difference —
+    the same counts as exceptAll both ways over the graph sets and the
+    triple multisets."""
+    keep = (
+        ["obj_kind"]
+        if "obj_kind" in expected.columns and "obj_kind" in actual.columns
+        else []
+    )
+    cols = ["graph", "subj", "pred", "obj", *keep]
+    both = expected.select(*cols, F.lit(0).alias("side")).unionByName(
+        actual.select(*cols, F.lit(1).alias("side"))
+    )
+    canon = _canonicalized(_with_graph(both), ["side", "graph"], keep)
+    verdict = (
+        canon.groupBy(*cols)
+        .agg(
+            F.count(F.when(F.col("side") == 0, 1)).alias("ne"),
+            F.count(F.when(F.col("side") == 1, 1)).alias("na"),
+        )
+        .groupBy("graph")
+        .agg(
+            F.sum(F.abs(F.col("ne") - F.col("na"))).alias("d"),
+            (F.sum("ne") > 0).alias("in_e"),
+            (F.sum("na") > 0).alias("in_a"),
+        )
+        .agg(
+            F.count(F.when(F.col("in_e") != F.col("in_a"), 1)).alias("graphs"),
+            F.sum("d").alias("diff"),
+        )
+        .first()
+    )
+    if verdict["graphs"]:
+        return CompareResult(False, f"graph sets differ ({verdict['graphs']} unmatched)")
+    if verdict["diff"]:
+        return CompareResult(False, f"{verdict['diff']} canonicalized triples unmatched")
     return CompareResult(True, "isomorphic")
 
 
@@ -274,142 +332,124 @@ def validate_stream(rows: DataFrame) -> list[str]:
     - statement rows are fully resolved (the resolver inlines every
       table ref and elided term; a NULL s/p/o value on a statement row
       means the stream was malformed)
+    - dictionary entry ids stay within the table sizes their
+      sub-stream's options row declares
     - P8 flag conformance (RdfValidate.scala:159-182, isGeneralized /
       isRdfStar in StatementUtils.scala:14-25): statements whose
       explicit term kinds exceed what the stream options declare; the
       first offending frame is named, like the reference's
-      CriticalException. (Declared-table-bound conformance is enforced
-      during decode by the strict resolver — jellywire.StreamState.)
+      CriticalException.
+
+    Two actions whatever the number of checks: one small groupBy over
+    the options rows, broadcast to the rows, then ONE aggregate that
+    computes every check.
     """
     from .jelly import (
+        KIND_DATATYPE,
         KIND_NAME,
         KIND_OPTIONS,
+        KIND_PREFIX,
         KIND_QUAD,
         KIND_TRIPLE,
-        assign_segments,
     )
 
-    rows = assign_segments(rows)  # per-options-row sub-stream ids
-    problems: list[str] = []
-    # first row of each sub-stream: a groupBy min-of-struct (map-side
-    # partial agg, scales with segments), not a row_number window —
-    # a single-file import would serialize that window into one task.
-    # (frame_index, row_pos) is unique within a segment, so the
-    # trailing row_kind field never decides the ordering; it just
-    # rides along to be read back out of the min.
-    first_rows = (
-        rows.groupBy("seg")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("frame_index"), F.col("row_pos"),
-                    F.col("row_kind").alias("k"),
-                )
-            ).alias("first")
-        )
-        .filter(F.col("first.k") != KIND_OPTIONS)
-        .count()
+    kind = F.col("row_kind")
+    frame, row_pos = F.col("frame_index"), F.col("row_pos")
+    # Sub-streams: each options row starts one, so a row's sub-stream
+    # index is the number of its file segment's options rows at or
+    # before it, minus one (−1: before the segment's first options row).
+    # Options rows are rare, so their positions and declared table sizes
+    # are collected per segment, sorted, and broadcast — the big side
+    # never shuffles and no window serializes a single-file import.
+    opts = (
+        rows.filter(kind == KIND_OPTIONS)
+        .groupBy("seg")
+        .agg(F.sort_array(F.collect_list(F.struct(
+            frame.alias("f"), row_pos.alias("p"),
+            F.col("opt_max_name").alias("name"),
+            F.col("opt_max_prefix").alias("prefix"),
+            F.col("opt_max_dt").alias("dt"),
+        ))).alias("_opts"))
     )
-    if first_rows:
-        problems.append(f"{first_rows} segment(s) do not start with an options row")
-    stmts = rows.filter(F.col("row_kind").isin(KIND_TRIPLE, KIND_QUAD))
-    # fully-resolved contract: IRI/bnode/literal/quoted terms carry a
-    # value; only a default-graph term is legitimately NULL
-    unresolved = stmts.filter(
-        F.col("subj").isNull()
-        | F.col("pred").isNull()
-        | F.col("obj").isNull()
-        | ((F.col("row_kind") == KIND_QUAD)
-           & F.col("graph").isNull()
-           & (F.col("graph_kind") != 4))
-    ).count()
-    if unresolved:
-        problems.append(f"{unresolved} statement(s) with unresolved terms")
+    with_opts = rows.join(F.broadcast(opts), "seg", "left").withColumn(
+        "_opts", F.coalesce("_opts", F.array().cast(opts.schema["_opts"].dataType))
+    )
+    sub = F.size(F.filter(
+        "_opts", lambda o: (o["f"] < frame) | ((o["f"] == frame) & (o["p"] <= row_pos))
+    )) - 1
+    # a sub-stream's own options row, null before the first one
+    declared = F.get(F.col("_opts"), sub)
     # Re-assigning a previously-used entry id is LEGAL Jelly (bounded
     # tables overwrite slots once full), so id reuse is not a problem.
     # What IS a violation: an entry id above the table size the stream's
     # own options declared — no decoder can store it.
-    from .jelly import KIND_DATATYPE, KIND_PREFIX
-
-    seg_limits = F.broadcast(
-        rows.filter(F.col("row_kind") == KIND_OPTIONS)
-        .groupBy("seg")
-        .agg(
-            F.max("opt_max_name").alias("_max_name"),
-            F.max("opt_max_prefix").alias("_max_prefix"),
-            F.max("opt_max_dt").alias("_max_dt"),
-        )
-    )
     entry_limit = (
-        F.when(F.col("row_kind") == KIND_NAME, F.col("_max_name"))
-        .when(F.col("row_kind") == KIND_PREFIX, F.col("_max_prefix"))
-        .otherwise(F.col("_max_dt"))
+        F.when(kind == KIND_NAME, declared["name"])
+        .when(kind == KIND_PREFIX, declared["prefix"])
+        .when(kind == KIND_DATATYPE, declared["dt"])
     )
-    oob_ids = (
-        rows.filter(
-            F.col("row_kind").isin(KIND_NAME, KIND_PREFIX, KIND_DATATYPE)
-        )
-        .join(seg_limits, "seg")
-        .filter(
-            entry_limit.isNotNull()
-            & (entry_limit > 0)
-            & (F.col("name_id") > entry_limit)
-        )
-        .count()
-    )
-    if oob_ids:
-        problems.append(
-            f"{oob_ids} dictionary entry id(s) exceed the declared "
-            f"lookup-table size"
-        )
-    if "opt_flags" in rows.columns:
-        s_kind = F.col("subj_kind")
-        p_kind = F.col("pred_kind")
-        o_kind = F.col("obj_kind")
-        g_kind = F.col("graph_kind")
-
-        def _declared(bit: int) -> bool:
-            return (
-                rows.filter(F.col("row_kind") == KIND_OPTIONS)
-                .filter(F.col("opt_flags").bitwiseAND(bit) != 0)
-                .limit(1)
-                .count()
-                > 0
-            )
-
-        def _first_frame(pred):
-            hit = (
-                stmts.filter(pred)
-                .orderBy("seg", "frame_index", "row_pos")
-                .select("frame_index")
-                .limit(1)
-                .collect()
-            )
-            return hit[0].frame_index if hit else None
-
-        if not _declared(1):
+    is_stmt = kind.isin(KIND_TRIPLE, KIND_QUAD)
+    s_kind, p_kind = F.col("subj_kind"), F.col("pred_kind")
+    o_kind, g_kind = F.col("obj_kind"), F.col("graph_kind")
+    # the first offender in (seg, sub-stream, frame, row) order
+    first = lambda pred: F.min(F.when(is_stmt & pred, F.struct(  # noqa: E731
+        F.col("seg"), sub.alias("sub"), frame, row_pos,
+    )))
+    has_flags = "opt_flags" in rows.columns
+    flags = F.when(kind == KIND_OPTIONS, F.col("opt_flags")) if has_flags else None
+    checks = with_opts.agg(
+        # for every sub-stream ≥ 0 the first row is its own options row,
+        # so only the rows ahead of a segment's first one can fail
+        F.count_distinct(F.when(sub < 0, F.col("seg"))).alias("unstarted"),
+        # fully-resolved contract: IRI/bnode/literal/quoted terms carry a
+        # value; only a default-graph term is legitimately NULL
+        F.count(F.when(is_stmt & (
+            F.col("subj").isNull()
+            | F.col("pred").isNull()
+            | F.col("obj").isNull()
+            | ((kind == KIND_QUAD) & F.col("graph").isNull() & (g_kind != 4))
+        ), 1)).alias("unresolved"),
+        F.count(F.when(
+            entry_limit.isNotNull() & (entry_limit > 0) & (F.col("name_id") > entry_limit),
+            1,
+        )).alias("oob"),
+        *([
+            F.max(flags.bitwiseAND(1)).alias("generalized"),
+            F.max(flags.bitwiseAND(2)).alias("rdf_star"),
             # isGeneralized: literal subject, non-IRI predicate, or (quad)
             # literal graph name (StatementUtils.scala:14-21)
-            frame = _first_frame(
-                (s_kind == 2)
-                | (p_kind != 0)
-                | ((F.col("row_kind") == KIND_QUAD) & (g_kind == 2))
-            )
-            if frame is not None:
-                problems.append(
-                    f"generalized statement in frame {frame} but the "
-                    f"stream options do not declare the generalized-RDF flag"
-                )
-        if not _declared(2):
+            first(
+                (s_kind == 2) | (p_kind != 0) | ((kind == KIND_QUAD) & (g_kind == 2))
+            ).alias("first_generalized"),
             # isRdfStar: any quoted-triple term (StatementUtils.scala:23-25)
-            frame = _first_frame(
+            first(
                 (o_kind == 3) | (s_kind == 3) | (p_kind == 3) | (g_kind == 3)
+            ).alias("first_rdf_star"),
+        ] if has_flags else []),
+    ).first()
+
+    problems: list[str] = []
+    if checks["unstarted"]:
+        problems.append(f"{checks['unstarted']} segment(s) do not start with an options row")
+    if checks["unresolved"]:
+        problems.append(f"{checks['unresolved']} statement(s) with unresolved terms")
+    if checks["oob"]:
+        problems.append(
+            f"{checks['oob']} dictionary entry id(s) exceed the declared "
+            f"lookup-table size"
+        )
+    if has_flags:
+        if not checks["generalized"] and checks["first_generalized"] is not None:
+            problems.append(
+                f"generalized statement in frame "
+                f"{checks['first_generalized']['frame_index']} but the "
+                f"stream options do not declare the generalized-RDF flag"
             )
-            if frame is not None:
-                problems.append(
-                    f"RDF-star statement in frame {frame} "
-                    f"but the stream options do not declare the rdf-star flag"
-                )
+        if not checks["rdf_star"] and checks["first_rdf_star"] is not None:
+            problems.append(
+                f"RDF-star statement in frame {checks['first_rdf_star']['frame_index']} "
+                f"but the stream options do not declare the rdf-star flag"
+            )
     return problems
 
 

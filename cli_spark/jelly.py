@@ -1324,49 +1324,6 @@ def decode_frames(frames: DataFrame, strict: bool = False) -> DataFrame:
     return frames.groupBy("seg").applyInPandas(resolve, ROW_SCHEMA)
 
 
-def assign_segments(rows: DataFrame) -> DataFrame:
-    """Sub-stream ids for multi-stream files: each options row starts a
-    new sub-stream — cumulative count per file segment. (Decode no
-    longer needs this — the resolver resets at options rows — but
-    structural validation still reports per-sub-stream.)
-
-    Options rows are rare (one per concatenated sub-stream), so the
-    running count is NOT a window — a window partitioned by seg would
-    serialize a single-file import into one task. Instead: aggregate
-    the tiny set of options-row positions per segment, broadcast it,
-    and count boundaries at-or-before each row columnar-side. The big
-    side never shuffles."""
-    pos = F.struct(F.col("frame_index").alias("f"), F.col("row_pos").alias("p"))
-    opt_pos = (
-        rows.filter(F.col("row_kind") == KIND_OPTIONS)
-        .groupBy("seg")
-        .agg(F.sort_array(F.collect_list(pos)).alias("_opt_pos"))
-    )
-    sub = (
-        F.size(
-            F.filter(
-                F.coalesce(F.col("_opt_pos"), F.array().cast(
-                    "array<struct<f:long,p:int>>"
-                )),
-                lambda b: b <= pos,
-            )
-        )
-        - 1
-    )
-    # composite struct key, NOT seg*K+sub arithmetic: file segs come from
-    # monotonically_increasing_id (partitionId<<33 | row), so any
-    # multiplier overflows int64 once partition ids reach the thousands —
-    # exactly the many-file scan this exists for. Struct keys group,
-    # join, and order (field-wise) like any other column.
-    return (
-        rows.join(F.broadcast(opt_pos), "seg", "left")
-        .withColumn(
-            "seg", F.struct(F.col("seg").alias("file"), sub.alias("sub"))
-        )
-        .drop("_opt_pos")
-    )
-
-
 def physical_types_metric() -> Column:
     """Aggregate: the distinct physical types declared by a rows table's
     options rows. A job that already reads the rows can carry it as an

@@ -10,6 +10,7 @@ output; resume skips any stage whose manifest exists.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -95,20 +96,28 @@ _JOB_GROUP_PROPS = (
 )
 
 
+@contextlib.contextmanager
+def job_group(spark: SparkSession, name: str):
+    """Run the body's Spark jobs under the job group ``name``, then
+    restore the caller's group (or none)."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        for key, value in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(key, value)
+
+
 def _under_stage_job_group(run):
     """Run a stage runner's Spark jobs under the job group named after its
-    ``stage`` argument, then restore the caller's group (or none)."""
+    ``stage`` argument."""
 
     @functools.wraps(run)
     def wrapped(spark: SparkSession, workdir, stage: str, *args, **kwargs):
-        sc = spark.sparkContext
-        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
-        sc.setJobGroup(stage, stage)
-        try:
+        with job_group(spark, stage):
             return run(spark, workdir, stage, *args, **kwargs)
-        finally:
-            for key, value in zip(_JOB_GROUP_PROPS, saved):
-                sc.setLocalProperty(key, value)
 
     return wrapped
 

@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .nquads import KIND_BNODE, KIND_IRI, KIND_LITERAL, KIND_QUOTED, TRIPLE_COLS
-from .turtle import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE
+from .turtle import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, standalone_parts
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -539,19 +539,6 @@ def write_rdfxml(
     # @prefix header: the old header/footer-as-union-rows design left
     # the rdf:RDF wrapper and the Descriptions in different parts — a
     # directory neither this reader nor any XML parser could consume);
-    # a directory of N documents unions to the same graph
-    def envelope(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        emitted = False
-        for pdf in batches:
-            if not emitted and len(pdf):
-                yield pd.DataFrame({"line": [header]})
-                emitted = True
-            yield pdf
-        if emitted:
-            yield pd.DataFrame({"line": [footer]})
-
-    out.mapInPandas(envelope, "line string").select("line").write.mode(
-        "overwrite"
-    ).text(path)
+    # a directory of N documents unions to the same graph, and an empty
+    # graph is one empty rdf:RDF document
+    standalone_parts(out, [header], [footer]).write.mode("overwrite").text(path)

@@ -687,17 +687,36 @@ def write_turtle(
     if single_file:
         out = out.coalesce(1)
     if header:
-        hdr_lines = list(header)
-
-        def prepend(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            import pandas as pd
-
-            emitted = False
-            for pdf in batches:
-                if not emitted and len(pdf):
-                    yield pd.DataFrame({"line": hdr_lines})
-                    emitted = True
-                yield pdf
-
-        out = out.mapInPandas(prepend, "line string")
+        out = standalone_parts(out, header)
     out.write.mode("overwrite").text(path)
+
+
+def standalone_parts(
+    lines: DataFrame, header: list[str], footer: list[str] | None = None
+) -> DataFrame:
+    """``lines`` with ``header`` ahead of and ``footer`` after the lines of
+    every non-empty partition, and of partition 0 even when it is empty:
+    each part file is a standalone document, and an empty graph still
+    writes one. A trailing one-partition empty input is partition 0 only
+    when ``lines`` has no partitions at all (an empty local relation);
+    otherwise it is an empty partition past 0, which writes no part file."""
+    pad = lines.sparkSession.range(0, 1, 1, 1).filter(F.col("id") < 0).select(
+        F.lit(None).cast("string").alias("line")
+    )
+
+    def wrap(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        import pandas as pd
+        from pyspark import TaskContext
+
+        emitted = TaskContext.get().partitionId() == 0
+        if emitted:
+            yield pd.DataFrame({"line": header})
+        for pdf in batches:
+            if not emitted and len(pdf):
+                yield pd.DataFrame({"line": header})
+                emitted = True
+            yield pdf
+        if emitted and footer:
+            yield pd.DataFrame({"line": footer})
+
+    return lines.unionByName(pad).mapInPandas(wrap, "line string")

@@ -1196,3 +1196,26 @@ def test_cli_inspect_empty_stream(spark, tmp_path, capsys):
     err = capsys.readouterr().err
     assert "error: empty stream" in err
     assert "Unknown error" not in err and "Traceback" not in err
+
+
+def test_cli_validate_job_budget(spark, tmp_path):
+    """`rdf validate` labels its Spark jobs with the command and runs a
+    fixed handful of them: the structural checks are one aggregate, both
+    sides of the isomorphism compare share one refinement loop and the
+    verdict is one aggregate."""
+    nq = tmp_path / "bn.nq"
+    nq.write_text("".join(
+        f"_:b{i} <http://x/p> _:b{i + 1} <http://g/{i % 3}> .\n"
+        f"_:b{i} <http://x/v> \"{i}\"^^<http://www.w3.org/2001/XMLSchema#int> .\n"
+        f"<http://x/s{i}> <http://x/q> \"t{i}\"@en <http://g/{i % 2}> .\n"
+        for i in range(30)
+    ))
+    jelly = str(tmp_path / "bn.jelly")
+    assert main(["rdf", "to-jelly", str(nq), "--to", jelly, "--rows-per-frame", "16"]) == 0
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup("rdf validate"))
+    assert main(["rdf", "validate", jelly, "--compare-to-rdf-file", str(nq)]) == 0
+    jobs = set(tracker.getJobIdsForGroup("rdf validate")) - before
+    assert 0 < len(jobs) <= 24, len(jobs)
+    # the caller's job group is restored afterwards
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -293,3 +293,37 @@ def test_write_rdfxml_multipart_parts_are_standalone(spark, tmp_path):
         assert text.rstrip().endswith("</rdf:RDF>"), f
     assert nonempty >= 2
     assert read_rdfxml(spark, d).count() == 40
+
+
+@pytest.mark.parametrize("single_file", [True, False])
+@pytest.mark.parametrize("shape", ["no_partitions", "empty_partitions"])
+def test_write_rdfxml_empty_graph_keeps_envelope(spark, tmp_path, single_file, shape):
+    """An empty graph is one well-formed empty rdf:RDF document, as the
+    reference writes it; it reads back as zero statements. An empty
+    local relation has no partitions at all; a filtered frame has
+    several, all empty."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from cli_spark.rdfxml import read_rdfxml, write_rdfxml
+
+    schema = "subj string, pred string, obj string, obj_kind int"
+    if shape == "no_partitions":
+        empty = spark.createDataFrame([], schema)
+    else:
+        empty = spark.createDataFrame(
+            [("http://e/s", "http://e/p", "v", 2)] * 8, schema
+        ).repartition(4).filter(F.col("obj_kind") > 2)
+    d = str(tmp_path / "empty_xml")
+    write_rdfxml(empty, d, single_file=single_file)
+    texts = [
+        open(os.path.join(d, f)).read() for f in sorted(os.listdir(d))
+        if f.startswith("part-") and f.endswith(".txt")
+    ]
+    assert [t for t in texts if t.strip()] == [
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">\n'
+        "</rdf:RDF>\n"
+    ]
+    assert read_rdfxml(spark, d).count() == 0

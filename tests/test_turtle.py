@@ -408,3 +408,37 @@ def test_scan_namespaces_ordered(tmp_path):
         ("b", "http://base.org/dir/sub/"),
         ("a", "http://a2.org/"),
     ]
+
+
+@pytest.mark.parametrize("single_file", [True, False])
+@pytest.mark.parametrize("shape", ["no_partitions", "empty_partitions"])
+def test_write_turtle_empty_graph_keeps_prefixes(spark, tmp_path, single_file, shape):
+    """An empty graph is one Turtle document holding just the @prefix
+    block, as the reference writes it; it reads back as zero statements.
+    An empty local relation has no partitions at all; a filtered frame
+    has several, all empty."""
+    import os
+
+    from cli_spark.turtle import read_turtle, write_turtle
+
+    schema = "subj string, pred string, obj string, obj_kind int"
+    if shape == "no_partitions":
+        empty = spark.createDataFrame([], schema)
+    else:
+        empty = spark.createDataFrame(
+            [("http://ex.org/s", "http://ex.org/p", "http://ex.org/o", 0)] * 8, schema
+        ).repartition(4).filter(F.col("obj_kind") > 0)
+    d = str(tmp_path / "empty_ttl")
+    write_turtle(
+        empty, d, prefixes={"ex": "http://ex.org/", "foaf": "http://xmlns.com/foaf/0.1/"},
+        single_file=single_file,
+    )
+    texts = [
+        open(os.path.join(d, f)).read() for f in sorted(os.listdir(d))
+        if f.startswith("part-") and f.endswith(".txt")
+    ]
+    assert [t for t in texts if t.strip()] == [
+        "@prefix ex: <http://ex.org/> .\n"
+        "@prefix foaf: <http://xmlns.com/foaf/0.1/> .\n"
+    ]
+    assert read_turtle(spark, d).count() == 0
