@@ -151,8 +151,8 @@ def _with_graph(triples: DataFrame) -> DataFrame:
 
 
 def _refined_labels(g: DataFrame, scope: list[str], rounds: int) -> DataFrame:
-    """(*scope, label, h): the refinement hash of every bnode label of
-    ``g`` within its ``scope`` key. The scope key only partitions the
+    """(*scope, label, canon): the canonical label of every bnode label
+    of ``g`` within its ``scope`` key. The scope key only partitions the
     graph — it never enters the md5 input — so refining two sides at
     once under (side, graph) gives each side the labels it gets alone
     under (graph)."""
@@ -196,7 +196,9 @@ def _refined_labels(g: DataFrame, scope: list[str], rounds: int) -> DataFrame:
         ).withColumn("nsig", F.coalesce(F.col("nh"), F.col("neighbor")))
         labels = fold(nb).localCheckpoint()
     occ.unpersist()
-    return labels
+    return labels.select(
+        *scope, "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
+    )
 
 
 def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> DataFrame:
@@ -208,18 +210,14 @@ def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> D
 
     Returns (graph, label, canon) for every bnode label per graph.
     """
-    return _refined_labels(_with_graph(triples), ["graph"], rounds).select(
-        "graph", "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
-    )
+    return _refined_labels(_with_graph(triples), ["graph"], rounds)
 
 
 def _canonicalized(g: DataFrame, scope: list[str], keep: list[str]) -> DataFrame:
     """Rewrite ``g``'s bnode labels to their canonical refinement hashes
     within ``scope``; IRIs and literals pass through. Output:
     (*scope, subj, pred, obj, *keep)."""
-    labels = _refined_labels(g, scope, REFINE_ROUNDS).select(
-        *scope, "label", F.concat(F.lit("_:c"), F.col("h")).alias("canon")
-    )
+    labels = _refined_labels(g, scope, REFINE_ROUNDS)
     return (
         g.join(
             labels.select(*scope, F.col("label").alias("subj"), F.col("canon").alias("sc")),
@@ -260,11 +258,7 @@ def unordered_compare(expected: DataFrame, actual: DataFrame) -> CompareResult:
     the number of graphs on one side only and the total difference —
     the same counts as exceptAll both ways over the graph sets and the
     triple multisets."""
-    keep = (
-        ["obj_kind"]
-        if "obj_kind" in expected.columns and "obj_kind" in actual.columns
-        else []
-    )
+    keep = [c for c in ("obj_kind",) if c in expected.columns and c in actual.columns]
     cols = ["graph", "subj", "pred", "obj", *keep]
     both = expected.select(*cols, F.lit(0).alias("side")).unionByName(
         actual.select(*cols, F.lit(1).alias("side"))
@@ -340,21 +334,14 @@ def validate_stream(rows: DataFrame) -> list[str]:
       first offending frame is named, like the reference's
       CriticalException.
 
-    Two actions whatever the number of checks: one small groupBy over
-    the options rows, broadcast to the rows, then ONE aggregate that
-    computes every check.
+    One action whatever the number of checks: a small groupBy over the
+    options rows is broadcast to the rows, and ONE aggregate computes
+    every check.
     """
-    from .jelly import (
-        KIND_DATATYPE,
-        KIND_NAME,
-        KIND_OPTIONS,
-        KIND_PREFIX,
-        KIND_QUAD,
-        KIND_TRIPLE,
-    )
+    from .jelly import (KIND_DATATYPE, KIND_NAME, KIND_OPTIONS, KIND_PREFIX,
+                        KIND_QUAD, KIND_TRIPLE)
 
-    kind = F.col("row_kind")
-    frame, row_pos = F.col("frame_index"), F.col("row_pos")
+    kind, frame, row_pos = F.col("row_kind"), F.col("frame_index"), F.col("row_pos")
     # Sub-streams: each options row starts one, so a row's sub-stream
     # index is the number of its file segment's options rows at or
     # before it, minus one (−1: before the segment's first options row).
@@ -391,12 +378,11 @@ def validate_stream(rows: DataFrame) -> list[str]:
     is_stmt = kind.isin(KIND_TRIPLE, KIND_QUAD)
     s_kind, p_kind = F.col("subj_kind"), F.col("pred_kind")
     o_kind, g_kind = F.col("obj_kind"), F.col("graph_kind")
+    flags = F.when(kind == KIND_OPTIONS, F.col("opt_flags"))
     # the first offender in (seg, sub-stream, frame, row) order
     first = lambda pred: F.min(F.when(is_stmt & pred, F.struct(  # noqa: E731
         F.col("seg"), sub.alias("sub"), frame, row_pos,
     )))
-    has_flags = "opt_flags" in rows.columns
-    flags = F.when(kind == KIND_OPTIONS, F.col("opt_flags")) if has_flags else None
     checks = with_opts.agg(
         # for every sub-stream ≥ 0 the first row is its own options row,
         # so only the rows ahead of a segment's first one can fail
@@ -413,19 +399,17 @@ def validate_stream(rows: DataFrame) -> list[str]:
             entry_limit.isNotNull() & (entry_limit > 0) & (F.col("name_id") > entry_limit),
             1,
         )).alias("oob"),
-        *([
-            F.max(flags.bitwiseAND(1)).alias("generalized"),
-            F.max(flags.bitwiseAND(2)).alias("rdf_star"),
-            # isGeneralized: literal subject, non-IRI predicate, or (quad)
-            # literal graph name (StatementUtils.scala:14-21)
-            first(
-                (s_kind == 2) | (p_kind != 0) | ((kind == KIND_QUAD) & (g_kind == 2))
-            ).alias("first_generalized"),
-            # isRdfStar: any quoted-triple term (StatementUtils.scala:23-25)
-            first(
-                (o_kind == 3) | (s_kind == 3) | (p_kind == 3) | (g_kind == 3)
-            ).alias("first_rdf_star"),
-        ] if has_flags else []),
+        F.max(flags.bitwiseAND(1)).alias("generalized"),
+        F.max(flags.bitwiseAND(2)).alias("rdf_star"),
+        # isGeneralized: literal subject, non-IRI predicate, or (quad)
+        # literal graph name (StatementUtils.scala:14-21)
+        first(
+            (s_kind == 2) | (p_kind != 0) | ((kind == KIND_QUAD) & (g_kind == 2))
+        ).alias("first_generalized"),
+        # isRdfStar: any quoted-triple term (StatementUtils.scala:23-25)
+        first(
+            (o_kind == 3) | (s_kind == 3) | (p_kind == 3) | (g_kind == 3)
+        ).alias("first_rdf_star"),
     ).first()
 
     problems: list[str] = []
@@ -438,18 +422,17 @@ def validate_stream(rows: DataFrame) -> list[str]:
             f"{checks['oob']} dictionary entry id(s) exceed the declared "
             f"lookup-table size"
         )
-    if has_flags:
-        if not checks["generalized"] and checks["first_generalized"] is not None:
-            problems.append(
-                f"generalized statement in frame "
-                f"{checks['first_generalized']['frame_index']} but the "
-                f"stream options do not declare the generalized-RDF flag"
-            )
-        if not checks["rdf_star"] and checks["first_rdf_star"] is not None:
-            problems.append(
-                f"RDF-star statement in frame {checks['first_rdf_star']['frame_index']} "
-                f"but the stream options do not declare the rdf-star flag"
-            )
+    if not checks["generalized"] and checks["first_generalized"] is not None:
+        problems.append(
+            f"generalized statement in frame "
+            f"{checks['first_generalized']['frame_index']} but the "
+            f"stream options do not declare the generalized-RDF flag"
+        )
+    if not checks["rdf_star"] and checks["first_rdf_star"] is not None:
+        problems.append(
+            f"RDF-star statement in frame {checks['first_rdf_star']['frame_index']} "
+            f"but the stream options do not declare the rdf-star flag"
+        )
     return problems
 
 

@@ -676,12 +676,12 @@ def write_turtle(
     single_file: bool = False,
 ) -> None:
     """Turtle sink: parallel text parts (or coalesce(1)). EVERY
-    non-empty part gets the @prefix header, so each part file is a
-    valid standalone Turtle document — the property a distributed text
-    sink needs (the old single-header union left the header and the
-    statements in different parts, an unreadable directory; caught by
-    reading our own multi-part output back). Repeating the block is
-    legal Turtle (re-declaration) and O(prefixes) bytes per part."""
+    non-empty part, and part 0 of an empty graph, gets the @prefix
+    header, so each part file is a valid standalone Turtle document —
+    the property a distributed text sink needs (a header in one part
+    and the statements in others is an unreadable directory).
+    Repeating the block is legal Turtle (re-declaration) and
+    O(prefixes) bytes per part."""
     header, body = render_turtle(triples, prefixes)
     out = body.select("line")
     if single_file:
