@@ -2,9 +2,9 @@
 ``rdf validate`` (SURVEY.md §2.3, §3.3). Unlike the reference, which
 materializes every frame in memory (RdfValidate.scala:101, documented
 OOM), every comparison here is a join or an aggregate, and each check
-battery ends in ONE Spark action whatever the number of checks: the
+battery costs a fixed number of Spark actions, not one per check: the
 reference's single pass over the stream (RdfValidate.scala:101-200)
-becomes one aggregate over the rows, not one action per check.
+becomes one aggregate over the rows.
 
 - :func:`ordered_compare`     J1: positional equality with blank-node
   bijection (OrderedRdfCompare.scala:10-75) — sizes and per-column

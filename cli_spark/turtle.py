@@ -698,8 +698,9 @@ def standalone_parts(
     every non-empty partition, and of partition 0 even when it is empty:
     each part file is a standalone document, and an empty graph still
     writes one. A trailing one-partition empty input is partition 0 only
-    when ``lines`` has no partitions at all (an empty local relation);
-    otherwise it is an empty partition past 0, which writes no part file."""
+    when ``lines`` has no partitions at all (an empty local relation, or
+    a plan adaptive execution found empty); otherwise it is an empty
+    partition past 0, which writes no part file."""
     pad = lines.sparkSession.range(0, 1, 1, 1).filter(F.col("id") < 0).select(
         F.lit(None).cast("string").alias("line")
     )
