@@ -864,7 +864,7 @@ def _dispatch(spark, args) -> int:
         phys = J.peek_physical_types(frames)
         rows = J.decode_frames(frames)
         if phys <= {J.PHYSICAL_TRIPLES}:
-            stmts = J.decode_triples(rows, take_frames=take, strict=False)
+            stmts = J.decode_triples(rows, take_frames=take)
         else:
             if J.PHYSICAL_QUADS in phys:
                 stmts = J.decode_quads(rows, take_frames=take)
@@ -1045,7 +1045,7 @@ def _dispatch(spark, args) -> int:
                     else J.decode_quads_graphs(rows)
                 )
             else:
-                decoded_v = J.decode_triples(rows, strict=False)
+                decoded_v = J.decode_triples(rows)
             for r in term_violations(decoded_v).limit(3).collect():
                 problems.append(
                     f"term validation: {r['reason']} at "
@@ -1101,7 +1101,7 @@ def _dispatch(spark, args) -> int:
                         else J.decode_quads_graphs(exp_rows)
                     )
                 else:
-                    expected = J.decode_triples(exp_rows, strict=False)
+                    expected = J.decode_triples(exp_rows)
             else:
                 if cmp_fmt.read is None:
                     raise ValueError(

@@ -318,11 +318,14 @@ def precision_recall(
 
 
 def validate_stream(rows: DataFrame) -> list[str]:
-    """Structural validation of a decoded rows table (P5/P10 analogs):
+    """Structural validation of a decoded rows table (P5/P8/P10 analogs):
     returns a list of violation strings (empty ⇒ valid).
 
     - every sub-stream's first row is an options row
       (RdfValidate.scala:118-121)
+    - every options row declares a supported version, a known physical
+      type, a logical type that is known and compatible with it, and a
+      name table of at least 8 entries (RdfValidate.scala:118-143)
     - statement rows are fully resolved (the resolver inlines every
       table ref and elided term; a NULL s/p/o value on a statement row
       means the stream was malformed)
@@ -330,32 +333,40 @@ def validate_stream(rows: DataFrame) -> list[str]:
       sub-stream's options row declares
     - P8 flag conformance (RdfValidate.scala:159-182, isGeneralized /
       isRdfStar in StatementUtils.scala:14-25): statements whose
-      explicit term kinds exceed what the stream options declare; the
-      first offending frame is named, like the reference's
-      CriticalException.
+      explicit term kinds exceed what their sub-stream's options
+      declare; the first offending frame is named, like the
+      reference's CriticalException
+    - every later options row equals the first
+      (RdfValidate.scala:192-195)
 
     One action whatever the number of checks: a small groupBy over the
     options rows is broadcast to the rows, and ONE aggregate computes
-    every check.
+    every check. A failed check gives one line, naming the first
+    offending row's values in (seg, frame, row) order.
     """
     from .jelly import (KIND_DATATYPE, KIND_NAME, KIND_OPTIONS, KIND_PREFIX,
-                        KIND_QUAD, KIND_TRIPLE)
+                        KIND_QUAD, KIND_TRIPLE, LOGICAL_COMPAT, LOGICAL_NAMES,
+                        PHYSICAL_GRAPHS, PHYSICAL_QUADS, PHYSICAL_TRIPLES,
+                        VERSION_MAX)
 
     kind, frame, row_pos = F.col("row_kind"), F.col("frame_index"), F.col("row_pos")
+    is_opts = kind == KIND_OPTIONS
     # Sub-streams: each options row starts one, so a row's sub-stream
     # index is the number of its file segment's options rows at or
     # before it, minus one (−1: before the segment's first options row).
-    # Options rows are rare, so their positions and declared table sizes
-    # are collected per segment, sorted, and broadcast — the big side
-    # never shuffles and no window serializes a single-file import.
+    # Options rows are rare, so their positions, declared table sizes
+    # and flags are collected per segment, sorted, and broadcast — the
+    # big side never shuffles and no window serializes a single-file
+    # import.
     opts = (
-        rows.filter(kind == KIND_OPTIONS)
+        rows.filter(is_opts)
         .groupBy("seg")
         .agg(F.sort_array(F.collect_list(F.struct(
             frame.alias("f"), row_pos.alias("p"),
             F.col("opt_max_name").alias("name"),
             F.col("opt_max_prefix").alias("prefix"),
             F.col("opt_max_dt").alias("dt"),
+            F.col("opt_flags").alias("flags"),
         ))).alias("_opts"))
     )
     with_opts = rows.join(F.broadcast(opts), "seg", "left").withColumn(
@@ -375,18 +386,41 @@ def validate_stream(rows: DataFrame) -> list[str]:
         .when(kind == KIND_PREFIX, declared["prefix"])
         .when(kind == KIND_DATATYPE, declared["dt"])
     )
+    undeclared = lambda bit: F.coalesce(declared["flags"], F.lit(0)).bitwiseAND(bit) == 0  # noqa: E731
     is_stmt = kind.isin(KIND_TRIPLE, KIND_QUAD)
     s_kind, p_kind = F.col("subj_kind"), F.col("pred_kind")
     o_kind, g_kind = F.col("obj_kind"), F.col("graph_kind")
-    flags = F.when(kind == KIND_OPTIONS, F.col("opt_flags"))
-    # the first offender in (seg, sub-stream, frame, row) order
-    first = lambda pred: F.min(F.when(is_stmt & pred, F.struct(  # noqa: E731
-        F.col("seg"), sub.alias("sub"), frame, row_pos,
+    version, physical = F.col("opt_version"), F.col("opt_physical")
+    logical = F.col("opt_logical")
+    compatible = F.lit(False)
+    for lt, phys in LOGICAL_COMPAT.items():
+        compatible = compatible | ((logical == lt) & physical.isin(*sorted(phys)))
+    # the first offending row in stream order, with the values named
+    first = lambda pred, *vals: F.min(F.when(pred, F.struct(  # noqa: E731
+        F.col("seg"), frame, row_pos, *vals,
     )))
+    # an options row whose field check is false or null
+    fails = lambda ok: is_opts & ~F.coalesce(ok, F.lit(False))  # noqa: E731
+    options = F.when(is_opts, F.struct(
+        version, physical, logical, F.col("opt_flags"), F.col("opt_max_name"),
+        F.col("opt_max_prefix"), F.col("opt_max_dt"), F.col("aux"),
+    ))
     checks = with_opts.agg(
         # for every sub-stream ≥ 0 the first row is its own options row,
         # so only the rows ahead of a segment's first one can fail
         F.count_distinct(F.when(sub < 0, F.col("seg"))).alias("unstarted"),
+        first(fails(version.between(1, VERSION_MAX)), version).alias("bad_version"),
+        first(
+            fails(physical.isin(PHYSICAL_TRIPLES, PHYSICAL_QUADS, PHYSICAL_GRAPHS)),
+            physical,
+        ).alias("bad_physical"),
+        # UNSPECIFIED (0 or absent) fits every physical type
+        first(
+            fails((F.coalesce(logical, F.lit(0)) == 0) | compatible), logical, physical,
+        ).alias("bad_logical"),
+        first(is_opts & (F.col("opt_max_name") < 8), F.col("opt_max_name")).alias(
+            "small_name_table"
+        ),
         # fully-resolved contract: IRI/bnode/literal/quoted terms carry a
         # value; only a default-graph term is legitimately NULL
         F.count(F.when(is_stmt & (
@@ -399,22 +433,44 @@ def validate_stream(rows: DataFrame) -> list[str]:
             entry_limit.isNotNull() & (entry_limit > 0) & (F.col("name_id") > entry_limit),
             1,
         )).alias("oob"),
-        F.max(flags.bitwiseAND(1)).alias("generalized"),
-        F.max(flags.bitwiseAND(2)).alias("rdf_star"),
         # isGeneralized: literal subject, non-IRI predicate, or (quad)
         # literal graph name (StatementUtils.scala:14-21)
-        first(
+        first(is_stmt & undeclared(1) & (
             (s_kind == 2) | (p_kind != 0) | ((kind == KIND_QUAD) & (g_kind == 2))
-        ).alias("first_generalized"),
+        )).alias("first_generalized"),
         # isRdfStar: any quoted-triple term (StatementUtils.scala:23-25)
-        first(
+        first(is_stmt & undeclared(2) & (
             (o_kind == 3) | (s_kind == 3) | (p_kind == 3) | (g_kind == 3)
-        ).alias("first_rdf_star"),
+        )).alias("first_rdf_star"),
+        F.min(options).alias("options_lo"),
+        F.max(options).alias("options_hi"),
     ).first()
 
     problems: list[str] = []
     if checks["unstarted"]:
         problems.append(f"{checks['unstarted']} segment(s) do not start with an options row")
+    if checks["bad_version"] is not None:
+        v = checks["bad_version"]["opt_version"]
+        problems.append(
+            f"options row declares invalid version {v}" if not v or v < 1
+            else f"unsupported stream version {v} (max {VERSION_MAX})"
+        )
+    if checks["bad_physical"] is not None:
+        problems.append(
+            f"unknown physical stream type {checks['bad_physical']['opt_physical']}"
+        )
+    if checks["bad_logical"] is not None:
+        lt, pt = checks["bad_logical"]["opt_logical"], checks["bad_logical"]["opt_physical"]
+        problems.append(
+            f"logical type {LOGICAL_NAMES[lt]} is incompatible with physical type {pt}"
+            if lt in LOGICAL_COMPAT
+            else f"unknown logical stream type {lt}"
+        )
+    if checks["small_name_table"] is not None:
+        problems.append(
+            f"name table size {checks['small_name_table']['opt_max_name']} "
+            f"below the minimum of 8"
+        )
     if checks["unresolved"]:
         problems.append(f"{checks['unresolved']} statement(s) with unresolved terms")
     if checks["oob"]:
@@ -422,16 +478,21 @@ def validate_stream(rows: DataFrame) -> list[str]:
             f"{checks['oob']} dictionary entry id(s) exceed the declared "
             f"lookup-table size"
         )
-    if not checks["generalized"] and checks["first_generalized"] is not None:
+    if checks["first_generalized"] is not None:
         problems.append(
             f"generalized statement in frame "
             f"{checks['first_generalized']['frame_index']} but the "
             f"stream options do not declare the generalized-RDF flag"
         )
-    if not checks["rdf_star"] and checks["first_rdf_star"] is not None:
+    if checks["first_rdf_star"] is not None:
         problems.append(
             f"RDF-star statement in frame {checks['first_rdf_star']['frame_index']} "
             f"but the stream options do not declare the rdf-star flag"
+        )
+    if checks["options_lo"] != checks["options_hi"]:
+        problems.append(
+            "options changed mid-stream (later options rows must equal "
+            "the first — RdfValidate.scala:192-195)"
         )
     return problems
 

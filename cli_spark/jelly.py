@@ -1244,12 +1244,14 @@ def options_from_file(path: str) -> StreamOptions:
 # ---------------------------------------------------------------------------
 
 
-def decode_frames(frames: DataFrame, strict: bool = False) -> DataFrame:
+def decode_frames(frames: DataFrame) -> DataFrame:
     """frames → fully-resolved rows table. One sequential resolution
     pass per SEGMENT (applyInPandas grouped by seg): segments are
     bounded for our own streams and one-per-file for imports, so the
     sequential unit is small and segments run embarrassingly parallel.
-    ``strict`` enforces declared table bounds (P8)."""
+    The resolver is lenient about declared table bounds, like
+    jelly-jvm's default reader; ``compare.validate_stream`` reports
+    entry ids above them (P8)."""
 
     # column slot positions for the tuned row materialization below
     _POS_COLS = {
@@ -1266,7 +1268,7 @@ def decode_frames(frames: DataFrame, strict: bool = False) -> DataFrame:
 
         pdf = pdf.sort_values("frame_index")
         seg = int(pdf["seg"].iloc[0])
-        state = JW.StreamState(strict=strict)
+        state = JW.StreamState()
         rows_out: list[list] = []
         idx = _IDX
         i_seg, i_frame, i_pos, i_kind = (
@@ -1326,16 +1328,11 @@ def decode_frames(frames: DataFrame, strict: bool = False) -> DataFrame:
 
 def physical_types_metric() -> Column:
     """Aggregate: the distinct physical types declared by a rows table's
-    options rows. A job that already reads the rows can carry it as an
-    ``observe()`` metric instead of running :func:`stream_physical_types`."""
+    options rows, for a job that already reads the rows to carry as an
+    ``observe()`` metric."""
     return F.collect_set(
         F.when(F.col("row_kind") == KIND_OPTIONS, F.col("opt_physical"))
     )
-
-
-def stream_physical_types(rows: DataFrame) -> set[int]:
-    """Distinct physical types declared by the stream's options rows."""
-    return set(rows.agg(physical_types_metric()).first()[0])
 
 
 def _raise_physical(bad: set[int], context: str) -> None:
@@ -1347,24 +1344,10 @@ def _raise_physical(bad: set[int], context: str) -> None:
     )
 
 
-def ensure_physical(rows: DataFrame, allowed: set[int], context: str) -> None:
-    """P4 guard (RdfFromJelly.scala:144-153): converting a QUADS/GRAPHS
-    stream into a triples-only sink is an error, not silent data loss.
-
-    Operates on the RESOLVED rows table — its Spark job re-runs the
-    per-segment resolution unless the caller cached it. Hot paths that
-    still hold the frames should use :func:`ensure_physical_frames`
-    (a tag-peek, no resolution)."""
-    bad = stream_physical_types(rows) - allowed - {None}
-    if bad:
-        _raise_physical(bad, context)
-
-
 def peek_physical_types(frames: DataFrame) -> set[int]:
     """Distinct declared physical types, read from the FRAMES with the
     tag-peek scanner (`jellywire.peek_options`): one varint per row, a
-    parse per options row, no dictionary resolution. The cheap form of
-    :func:`stream_physical_types` for callers that still hold frames."""
+    parse per options row, no dictionary resolution."""
 
     def peek(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1388,9 +1371,11 @@ def peek_physical_types(frames: DataFrame) -> set[int]:
 def ensure_physical_frames(
     frames: DataFrame, allowed: set[int], context: str
 ) -> None:
-    """P4 guard evaluated directly on frames — same error contract as
-    :func:`ensure_physical`, but the probe job is a tag-peek instead of
-    a full second resolution pass."""
+    """P4 guard (RdfFromJelly.scala:144-153): converting a QUADS/GRAPHS
+    stream into a triples-only sink is an error, not silent data loss.
+    Evaluated on the frames, so the probe job is a tag-peek instead of
+    a second resolution pass. A caller that decodes the rows anyway
+    observes :func:`physical_types_metric` on that decode instead."""
     bad = peek_physical_types(frames) - allowed - {None}
     if bad:
         _raise_physical(bad, context)
@@ -1405,18 +1390,14 @@ def namespace_declarations(rows: DataFrame) -> DataFrame:
 
 
 def decode_triples(
-    rows: DataFrame,
-    take_frames: tuple[int, int] | None = None,
-    strict: bool = True,
+    rows: DataFrame, take_frames: tuple[int, int] | None = None
 ) -> DataFrame:
     """resolved rows table → triples. Frame slicing (P1/P2
     --take-frames) filters AFTER resolution, so skipped frames still
     contributed dictionary state exactly like the reference's
-    state-preserving skip (RdfFromJelly.scala:166-177).
-
-    ``strict`` enforces the P4 quad-in-triple-format guard."""
-    if strict:
-        ensure_physical(rows, {PHYSICAL_TRIPLES}, "a triples-only sink")
+    state-preserving skip (RdfFromJelly.scala:166-177). The P4 guard is
+    the caller's: :func:`ensure_physical_frames` on the frames, or
+    :func:`physical_types_metric` observed on the decode."""
     trips = rows.filter(F.col("row_kind") == KIND_TRIPLE)
     if take_frames is not None:
         lo, hi = take_frames
@@ -1469,80 +1450,19 @@ def decode_quads_graphs(rows: DataFrame) -> DataFrame:
 def roundtrip(spark: SparkSession, triples: DataFrame, **kw) -> DataFrame:
     """encode → decode, for equivalence gates (SURVEY §5 pillar 2).
 
-    The P4 guard runs as the frames-level tag-peek: `strict=True` on the
-    rows table would re-run the whole per-segment resolution just to
-    read the options rows (measured: it doubled q50's decode cost). The
-    encoder checkpoints its per-segment frames, so the peek and the
-    decode each re-run only the options-row patch, not the encode."""
+    The P4 guard runs as the frames-level tag-peek: a guard on the rows
+    table would re-run the whole per-segment resolution just to read the
+    options rows (measured: it doubled q50's decode cost). The encoder
+    checkpoints its per-segment frames, so the peek and the decode each
+    re-run only the options-row patch, not the encode."""
     frames = encode_triples(spark, triples, **kw)
     ensure_physical_frames(frames, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    return decode_triples(decode_frames(frames), strict=False)
+    return decode_triples(decode_frames(frames))
 
 
 def roundtrip_quads(spark: SparkSession, quads: DataFrame, **kw) -> DataFrame:
     """QUADS encode → decode identity."""
     return decode_quads(decode_frames(encode_quads(spark, quads, **kw)))
-
-
-# ---------------------------------------------------------------------------
-# options validation (P10/P8, RdfValidate.scala:118-143,192-195)
-# ---------------------------------------------------------------------------
-
-
-def validate_options(rows: DataFrame) -> list[str]:
-    """Options-row validation battery: version supported, physical type
-    known, logical/physical compatibility, and later-options equality
-    (every options row after the first must declare identical options).
-    Returns violation strings (empty ⇒ valid); options rows are a
-    per-segment handful, so the collect is trivially small."""
-    opts = (
-        rows.filter(F.col("row_kind") == KIND_OPTIONS)
-        .select(
-            "seg", "frame_index", "row_pos", "opt_version", "opt_physical",
-            "opt_logical", "opt_flags", "opt_max_name", "opt_max_prefix",
-            "opt_max_dt", "aux",
-        )
-        .orderBy("seg", "frame_index", "row_pos")
-        .collect()
-    )
-    problems: list[str] = []
-    if not opts:
-        problems.append("stream has no options row")
-        return problems
-    for r in opts:
-        if not r.opt_version or r.opt_version < 1:
-            problems.append(f"options row declares invalid version {r.opt_version}")
-        elif r.opt_version > VERSION_MAX:
-            problems.append(
-                f"unsupported stream version {r.opt_version} (max {VERSION_MAX})"
-            )
-        if r.opt_physical not in (PHYSICAL_TRIPLES, PHYSICAL_QUADS, PHYSICAL_GRAPHS):
-            problems.append(f"unknown physical stream type {r.opt_physical}")
-        if r.opt_logical and r.opt_logical in LOGICAL_COMPAT:
-            if r.opt_physical not in LOGICAL_COMPAT[r.opt_logical]:
-                problems.append(
-                    f"logical type {LOGICAL_NAMES.get(r.opt_logical, r.opt_logical)} "
-                    f"is incompatible with physical type {r.opt_physical}"
-                )
-        elif r.opt_logical and r.opt_logical not in LOGICAL_NAMES:
-            problems.append(f"unknown logical stream type {r.opt_logical}")
-        if r.opt_max_name is not None and r.opt_max_name < 8:
-            problems.append(
-                f"name table size {r.opt_max_name} below the minimum of 8"
-            )
-    first = opts[0]
-    key = (
-        "opt_version", "opt_physical", "opt_logical", "opt_flags",
-        "opt_max_name", "opt_max_prefix", "opt_max_dt", "aux",
-    )
-    for r in opts[1:]:
-        if tuple(r[k] for k in key) != tuple(first[k] for k in key):
-            problems.append(
-                "options changed mid-stream (later options rows must equal "
-                "the first — RdfValidate.scala:192-195)"
-            )
-            break
-    return problems
 
 
 # ---------------------------------------------------------------------------

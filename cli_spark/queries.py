@@ -1597,11 +1597,11 @@ def q25_jellytext_roundtrip(spark, sf_dir):
     text = render_jelly_text(frames)
     # parsed frames are checkpointed (the in-memory analog of the
     # .jelly.txt file both jobs would read); the P4 guard is the
-    # tag-peek — strict=True on the rows table would re-run the whole
+    # tag-peek — a guard on the rows table would re-run the whole
     # resolution as a probe job
     parsed = parse_jelly_text(text).localCheckpoint()
     ensure_physical_frames(parsed, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    return decode_triples(decode_frames(parsed), strict=False).select(
+    return decode_triples(decode_frames(parsed)).select(
         "subj", "pred", "obj", "obj_kind"
     )
 

@@ -185,6 +185,9 @@ class _TurtleParser:
                 raise ValueError(f"unsupported Turtle syntax near: {residue[:40]!r}")
         self.pos = 0
         self.prefixes: dict[str, str] = {}
+        # every resolved prefix directive in document order, duplicates
+        # kept: the prefix events a stream parser delivers
+        self.declarations: list[tuple[str, str]] = []
         self.base = base
         self.graph: str | None = None
         self.out: list[tuple] = []
@@ -383,6 +386,7 @@ class _TurtleParser:
                 pfx = pname[:-1] if pname.endswith(":") else pname.partition(":")[0]
                 _, iri = self._next()
                 self.prefixes[pfx] = self._resolve(iri[1:-1])
+                self.declarations.append((pfx, self.prefixes[pfx]))
                 if self._peek()[1] == ".":
                     self._next()
             elif low in ("@base", "base"):
@@ -453,12 +457,14 @@ def read_turtle(
     return raw.mapInPandas(parse, schema)
 
 
-_DIRECTIVE_RX = (
-    r"(?m)^[ \t]*(?:"
-    r"(?:@prefix|[Pp][Rr][Ee][Ff][Ii][Xx])[ \t]+([A-Za-z0-9_.\-]*):[ \t]*<([^>]*)>"
-    r"|(?:@base|[Bb][Aa][Ss][Ee])[ \t]+<([^>]*)>"
-    r")"
-)
+def _declarations(text: str) -> list[tuple[str, str]]:
+    """(name, iri) of every prefix directive of one document, in order.
+    Read from the parser, so directive-shaped text inside a literal or
+    a comment is not a declaration; an in-file @base resolves relative
+    prefix IRIs declared after it."""
+    parser = _TurtleParser(text)
+    parser.parse()
+    return parser.declarations
 
 
 def scan_namespaces(spark: SparkSession, path: str) -> DataFrame:
@@ -467,39 +473,27 @@ def scan_namespaces(spark: SparkSession, path: str) -> DataFrame:
     reference forwards to the Jelly stream under
     ``--enable-namespace-declarations`` (RdfToJelly.scala:57-61).
 
-    File-parallel directive scan (line-leading ``@prefix``/``PREFIX``,
-    the shape every common serializer emits); an in-file ``@base``
-    resolves relative prefix IRIs declared after it. The last
-    declaration of a name within a file wins (Jena PrefixMap override);
-    across files, ties break to the lexicographic-min IRI so the
-    result is partitioning-independent. Rows come back in document
-    order of the winning declarations: by (file path, offset)."""
+    File-parallel: one task parses each file. The last declaration of
+    a name within a file wins (Jena PrefixMap override); across files,
+    ties break to the lexicographic-min IRI so the result is
+    partitioning-independent. Rows come back in document order of the
+    winning declarations: by (file path, position in the file)."""
     raw = spark.read.format("binaryFile").load(path).select("path", "content")
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        rx = re.compile(_DIRECTIVE_RX)
         for pdf in batches:
             rows: list[tuple] = []
             for fpath, content in zip(pdf["path"], pdf["content"]):
-                text = bytes(content).decode("utf-8")
-                base, seen = None, {}
-                for m in rx.finditer(text):
-                    if m.group(3) is not None:
-                        base = (
-                            _urljoin_keep_empty(base, m.group(3))
-                            if base else m.group(3)
-                        )
-                    else:
-                        iri = m.group(2)
-                        if base and not re.match(
-                            r"^[A-Za-z][A-Za-z0-9+.\-]*:", iri
-                        ):
-                            iri = _urljoin_keep_empty(base, iri)
-                        seen[m.group(1)] = (iri, m.start())
+                seen = {
+                    name: (iri, i)
+                    for i, (name, iri) in enumerate(
+                        _declarations(bytes(content).decode("utf-8"))
+                    )
+                }
                 rows.extend(
-                    (name, iri, fpath, off) for name, (iri, off) in seen.items()
+                    (name, iri, fpath, i) for name, (iri, i) in seen.items()
                 )
             yield pd.DataFrame(rows, columns=["name", "iri", "path", "offset"])
 
@@ -521,22 +515,9 @@ def scan_namespaces_ordered(path: str) -> list:
     reference's OrderedRdfCompare matches positionally
     (RdfCompareSpec "different/missing namespace declarations").
     Driver-side: the comparison target of `rdf validate` is a single
-    bounded file; in-file @base resolves relative prefix IRIs like the
-    distributed scan."""
+    bounded file."""
     with open(path, encoding="utf-8") as fh:
-        text = fh.read()
-    rx = re.compile(_DIRECTIVE_RX)
-    base = None
-    out: list = []
-    for m in rx.finditer(text):
-        if m.group(3) is not None:
-            base = _urljoin_keep_empty(base, m.group(3)) if base else m.group(3)
-        else:
-            iri = m.group(2)
-            if base and not re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", iri):
-                iri = _urljoin_keep_empty(base, iri)
-            out.append((m.group(1), iri))
-    return out
+        return _declarations(fh.read())
 
 
 def parse_turtle_lines(

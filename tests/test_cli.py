@@ -211,6 +211,47 @@ def test_cli_validate_options_file(spark, nq_file, tmp_path):
     assert main(["rdf", "validate", a, "--options-file", c]) == 1
 
 
+def _hand_built_stream(path, *substreams):
+    """A delimited Jelly file of one frame per sub-stream, each an
+    options row (defaults overridden by the given fields), two name
+    entries and one triple."""
+    from cli_spark import jellywire as JW
+
+    def frame(opts):
+        return JW.encode_frame([
+            {"kind": JW.K_OPTIONS, "physical": 1, "version": 1,
+             "max_name": 16, "max_prefix": 8, "max_dt": 8, **opts},
+            {"kind": JW.K_NAME, "id": 0, "value": "http://e/s"},
+            {"kind": JW.K_NAME, "id": 0, "value": "http://e/p"},
+            {"kind": JW.K_TRIPLE, "s": {"k": 0, "nid": 1},
+             "p": {"k": 0, "nid": 2}, "o": {"k": 2, "v": "v"}},
+        ])
+
+    with open(path, "wb") as fh:
+        fh.write(JW.write_delimited(frame(o) for o in substreams))
+    return str(path)
+
+
+@pytest.mark.parametrize("substreams, line", [
+    ([{"logical": 2}], "logical type FLAT_QUADS is incompatible with physical type 1"),
+    ([{"max_name": 4}], "name table size 4 below the minimum of 8"),
+    ([{}, {"max_name": 32}], "options changed mid-stream (later options rows "
+                             "must equal the first — RdfValidate.scala:192-195)"),
+    ([{"physical": 9}], "unknown physical stream type 9"),
+], ids=["flat_quads_over_triples", "small_name_table", "changed_mid_stream", "physical_9"])
+def test_cli_validate_rejects_bad_options(spark, tmp_path, capsys, substreams, line):
+    """`rdf validate` checks every options row (RdfValidate.scala:118-143,
+    192-195): version, physical and logical type and their
+    compatibility, the minimum name table size, and that later options
+    rows equal the first. The same stream with sane options is valid."""
+    ok = _hand_built_stream(tmp_path / "ok.jelly", *([{}] * len(substreams)))
+    assert main(["rdf", "validate", ok]) == 0
+    capsys.readouterr()
+    bad = _hand_built_stream(tmp_path / "bad.jelly", *substreams)
+    assert main(["rdf", "validate", bad]) == 1
+    assert capsys.readouterr().err.splitlines() == [f"error: {line}"]
+
+
 def test_cli_common_flags(spark, nq_file, tmp_path, capsys):
     """--quiet silences the P11 type-clash warning; --debug prints the
     traceback before the error line; --max-datatype-table reaches the
@@ -231,19 +272,20 @@ def test_cli_common_flags(spark, nq_file, tmp_path, capsys):
         "--logical-type", "flatQuads",
     ]) == 0
     assert "warning" not in capsys.readouterr().err
-    # --debug: traceback precedes the error line (on a raising path)
-    assert main([
-        "--debug", "rdf", "validate", jelly,
-        "--compare-to-rdf-file", nq_file, "--compare-to-format", "bogus",
-    ]) == 1
-    err = capsys.readouterr().err
-    assert "Traceback" in err and "error:" in err
     # --max-datatype-table lands in the stream options
     dt = str(tmp_path / "dt.jelly")
     assert main([
         "rdf", "to-jelly", nq_file, "--to", dt, "--max-datatype-table", "64",
     ]) == 0
     assert J.options_from_file(dt).max_dt_table == 64
+    # --debug: traceback precedes the error line (on a raising path; the
+    # stream has no type clash, so validation reaches the bogus format)
+    assert main([
+        "--debug", "rdf", "validate", dt,
+        "--compare-to-rdf-file", nq_file, "--compare-to-format", "bogus",
+    ]) == 1
+    err = capsys.readouterr().err
+    assert "Traceback" in err and "error:" in err
     # transcode --stream-name names the merged output stream
     tr = str(tmp_path / "merged.jelly")
     assert main([
@@ -1072,6 +1114,30 @@ def test_cli_validate_ordered_compares_namespaces(spark, tmp_path, capsys):
     assert "Expected 0 namespace declarations, but got 1" in capsys.readouterr().err
     # unordered mode: statements only (dataset compare)
     assert main(["rdf", "validate", jelly, "--compare-to-rdf-file", nq]) == 0
+
+
+def test_cli_validate_ordered_ignores_directive_lookalikes(spark, tmp_path):
+    """`@prefix` text inside a multi-line literal or a comment is no
+    namespace declaration: ordered validate of the stream against its
+    own Turtle source passes."""
+    ttl = str(tmp_path / "lit.ttl")
+    with open(ttl, "w") as fh:
+        fh.write(
+            "@prefix ex: <http://ex.org/> .\n"
+            "# @prefix c: <http://comment/> .\n"
+            'ex:s ex:doc """first line\n'
+            "@prefix ghost: <http://ghost/> .\n"
+            'last line""" .\n'
+        )
+    jelly = str(tmp_path / "lit.jelly")
+    assert main([
+        "rdf", "to-jelly", ttl, "--to", jelly,
+        "--enable-namespace-declarations",
+    ]) == 0
+    assert main([
+        "rdf", "validate", jelly, "--compare-to-rdf-file", ttl,
+        "--compare-ordered",
+    ]) == 0
 
 
 def test_cli_validate_jelly_vs_jelly(spark, tmp_path, capsys):

@@ -277,13 +277,44 @@ def test_validate_stream_golden_flag_in_second_substream(spark, tmp_path):
     )
     plain = J.encode_triples(spark, _plain_triples(spark, 10))
     starred = J.encode_triples(spark, star, options=J.StreamOptions(rdf_star=True))
-    # the flag is read across the whole rows table: one declaring
-    # sub-stream clears the check for every sub-stream
-    assert validate_stream(_concat_rows(spark, tmp_path, [plain, starred])) == []
+    unflagged = J.encode_triples(spark, star)
+    changed = (
+        "options changed mid-stream (later options rows must equal the "
+        "first — RdfValidate.scala:192-195)"
+    )
+    # each statement is checked against its own sub-stream's flags: the
+    # starred sub-stream declares rdf-star, so only the changed options
+    # are reported
+    assert validate_stream(_concat_rows(spark, tmp_path, [plain, starred])) == [changed]
+    # a later sub-stream's flag does not cover an earlier statement
+    (tmp_path / "rev").mkdir()
+    assert validate_stream(
+        _concat_rows(spark, tmp_path / "rev", [unflagged, starred])
+    ) == [
+        "RDF-star statement in frame 0 but the stream options do not "
+        "declare the rdf-star flag",
+        changed,
+    ]
     assert validate_stream(_rows(spark, star)) == [
         "RDF-star statement in frame 0 but the stream options do not "
         "declare the rdf-star flag"
     ]
+
+
+def test_validate_stream_job_count(spark):
+    """validate_stream costs a fixed number of Spark jobs: every check is
+    one aggregate over the rows joined to the broadcast options rows. On
+    this five-segment stream that is 6 jobs, as before the options-row
+    checks were folded into the aggregate; a new action shows here."""
+    from cli_spark.compare import validate_stream
+    from cli_spark.manifest import job_group
+
+    rows = _rows(spark, _plain_triples(spark), rows_per_frame=8, max_name_table=24)
+    assert rows.select("seg").distinct().count() == 5
+    tracker = spark.sparkContext.statusTracker()
+    with job_group(spark, "validate_stream job count"):
+        assert validate_stream(rows) == []
+    assert len(tracker.getJobIdsForGroup("validate_stream job count")) == 6
 
 
 def test_unordered_compare_golden_details(spark):

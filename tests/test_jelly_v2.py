@@ -66,20 +66,11 @@ def test_quads_typed_literals(spark):
     }
 
 
-def test_p4_quad_in_triple_sink_guard(spark, quads):
-    """P4 (RdfFromJelly.scala:144-153): decoding a QUADS stream into a
-    triples-only sink raises instead of silently dropping graphs."""
-    rows = J.decode_frames(J.encode_quads(spark, quads))
-    with pytest.raises(ValueError, match="QUADS"):
-        J.decode_triples(rows, strict=True).count()
-    # non-strict opt-out still decodes nothing silently (no TRIPLE rows)
-    assert J.decode_triples(rows, strict=False).count() == 0
-
-
 def test_p4_frames_level_guard(spark, quads):
-    """The frames-level P4 guard (tag-peek, no resolution pass) agrees
-    with the rows-level one, and the peek reads the declared physical
-    type without decoding statements."""
+    """P4 (RdfFromJelly.scala:144-153): decoding a QUADS stream into a
+    triples-only sink raises instead of silently dropping graphs. The
+    guard is a tag-peek on the frames (no resolution pass) that reads
+    the declared physical type without decoding statements."""
     frames = J.encode_quads(spark, quads)
     assert J.peek_physical_types(frames) == {J.PHYSICAL_QUADS}
     with pytest.raises(ValueError, match="QUADS"):
@@ -111,7 +102,7 @@ def test_prefix_table_roundtrip_and_smaller(spark, iri_triples):
         F.sum(F.length("frame_bytes"))
     ).collect()[0][0]
     assert size(pref) < size(plain)
-    back = J.decode_triples(J.decode_frames(pref), strict=True)
+    back = J.decode_triples(J.decode_frames(pref))
     key = ["subj", "pred", "obj", "obj_kind"]
     assert _set(back, key) == _set(iri_triples, key)
     # prefix entry rows exist and name entries hold LOCALS (the prefix
@@ -129,14 +120,18 @@ def test_prefix_table_declared_size_raised(spark):
     """A configured max_prefix_table smaller than the prefixes actually
     used gets RAISED in the declared options (ids must stay legal under
     the real wire's bound contract; the reference evicts instead — both
-    are conformant streams) and the stream still round-trips."""
+    are conformant streams), the stream validates and it still
+    round-trips."""
+    from cli_spark.compare import validate_stream
+
     rows = [(f"http://p{i}.example/x/e", "kg:p", f"v{i}", 2) for i in range(50)]
     t = spark.createDataFrame(
         rows, "subj string, pred string, obj string, obj_kind int"
     )
     opts = J.StreamOptions(max_prefix_table=4)
     frames = J.encode_triples(spark, t, options=opts, prefix_table=True)
-    dec = J.decode_frames(frames, strict=True).cache()
+    dec = J.decode_frames(frames).cache()
+    assert validate_stream(dec) == []
     n_prefix = dec.filter(F.col("row_kind") == J.KIND_PREFIX).count()
     declared = dec.filter(F.col("row_kind") == J.KIND_OPTIONS).first().opt_max_prefix
     assert n_prefix > 4 and declared >= n_prefix
@@ -146,6 +141,8 @@ def test_prefix_table_declared_size_raised(spark):
 
 
 def test_full_options_roundtrip(spark, iri_triples):
+    from cli_spark.compare import validate_stream
+
     opts = J.StreamOptions(
         physical_type=J.PHYSICAL_TRIPLES,
         logical_type=J.LOGICAL_FLAT_TRIPLES,
@@ -166,7 +163,7 @@ def test_full_options_roundtrip(spark, iri_triples):
     assert opt_row.opt_max_name == 512
     assert opt_row.opt_max_prefix == 64
     assert opt_row.aux == "test-stream"
-    assert J.validate_options(rows) == []
+    assert validate_stream(rows) == []
 
 
 def _opts_row(spark, **overrides):
@@ -183,70 +180,62 @@ def _opts_row(spark, **overrides):
 
 
 def test_validate_options_matrix(spark):
-    """Failure matrix mirroring RdfValidateSpec.scala:143-338."""
-    mk = lambda *rows: spark.createDataFrame(list(rows), J.ROW_SCHEMA)  # noqa: E731
+    """Options-row failure matrix mirroring RdfValidateSpec.scala:143-338,
+    checked by validate_stream: each case's whole problem list."""
+    from cli_spark.compare import validate_stream
+
+    def check(*rows):
+        return validate_stream(spark.createDataFrame(list(rows), J.ROW_SCHEMA))
+
     # valid
-    assert J.validate_options(mk(_opts_row(spark))) == []
+    assert check(_opts_row(spark)) == []
     # no options at all
-    probs = J.validate_options(
-        mk(dict(_opts_row(spark), row_kind=J.KIND_GRAPH_END))
-    )
-    assert any("no options" in p for p in probs)
+    assert check(dict(_opts_row(spark), row_kind=J.KIND_GRAPH_END)) == [
+        "1 segment(s) do not start with an options row"
+    ]
     # version 0 / unsupported future version
-    assert any(
-        "invalid version" in p
-        for p in J.validate_options(mk(_opts_row(spark, opt_version=0)))
-    )
-    assert any(
-        "unsupported stream version" in p
-        for p in J.validate_options(
-            mk(_opts_row(spark, opt_version=J.VERSION_MAX + 1))
-        )
-    )
-    # unknown physical type
-    assert any(
-        "unknown physical" in p
-        for p in J.validate_options(mk(_opts_row(spark, opt_physical=9)))
-    )
+    assert check(_opts_row(spark, opt_version=0)) == [
+        "options row declares invalid version 0"
+    ]
+    assert check(_opts_row(spark, opt_version=J.VERSION_MAX + 1)) == [
+        f"unsupported stream version {J.VERSION_MAX + 1} (max {J.VERSION_MAX})"
+    ]
+    # unknown physical type (no logical type declared, so no clash)
+    assert check(_opts_row(spark, opt_physical=9)) == [
+        "unknown physical stream type 9"
+    ]
     # logical/physical incompatibility: FLAT_QUADS over TRIPLES
-    assert any(
-        "incompatible" in p
-        for p in J.validate_options(
-            mk(_opts_row(spark, opt_logical=J.LOGICAL_FLAT_QUADS))
-        )
-    )
+    assert check(_opts_row(spark, opt_logical=J.LOGICAL_FLAT_QUADS)) == [
+        "logical type FLAT_QUADS is incompatible with physical type 1"
+    ]
+    # unknown logical type
+    assert check(_opts_row(spark, opt_logical=7)) == [
+        "unknown logical stream type 7"
+    ]
     # compatible combination passes
-    assert (
-        J.validate_options(
-            mk(
-                _opts_row(
-                    spark,
-                    opt_logical=J.LOGICAL_FLAT_QUADS,
-                    opt_physical=J.PHYSICAL_QUADS,
-                )
-            )
-        )
-        == []
-    )
+    assert check(
+        _opts_row(spark, opt_logical=J.LOGICAL_FLAT_QUADS, opt_physical=J.PHYSICAL_QUADS)
+    ) == []
     # name table below the minimum of 8
-    assert any(
-        "below the minimum" in p
-        for p in J.validate_options(mk(_opts_row(spark, opt_max_name=4)))
-    )
+    assert check(_opts_row(spark, opt_max_name=4)) == [
+        "name table size 4 below the minimum of 8"
+    ]
     # later-options equality (RdfValidate.scala:192-195)
-    assert any(
-        "changed mid-stream" in p
-        for p in J.validate_options(
-            mk(
-                _opts_row(spark),
-                _opts_row(spark, seg=1, opt_max_name=512),
-            )
-        )
-    )
+    assert check(_opts_row(spark), _opts_row(spark, seg=1, opt_max_name=512)) == [
+        "options changed mid-stream (later options rows must equal the "
+        "first — RdfValidate.scala:192-195)"
+    ]
     # identical later options are fine
-    assert (
-        J.validate_options(mk(_opts_row(spark), _opts_row(spark, seg=1))) == []
-    )
+    assert check(_opts_row(spark), _opts_row(spark, seg=1)) == []
+    # one line per failed check, naming the first offending row's value
+    assert check(
+        _opts_row(spark, seg=0, opt_max_name=2),
+        _opts_row(spark, seg=1, opt_max_name=4),
+    ) == [
+        "name table size 2 below the minimum of 8",
+        "options changed mid-stream (later options rows must equal the "
+        "first — RdfValidate.scala:192-195)",
+    ]
 
 
 def test_namespace_declarations(spark, iri_triples):
@@ -332,8 +321,8 @@ def test_logical_type_iri_mapping():
 
 def test_version_rejection(spark):
     """A stream declaring a future protocol version fails at decode with
-    a clear error (the reference's jelly-jvm behavior), and
-    validate_options reports it too."""
+    a clear error (the reference's jelly-jvm behavior); validate_stream
+    reports it on a rows table too (test_validate_options_matrix)."""
     from cli_spark import jellywire as JW
 
     frame = JW.encode_frame(
@@ -570,7 +559,7 @@ def test_wire_term_detail_elision(spark, tmp_path):
         fh.write(JW.write_delimited(JW.encode_frame(fr) for fr in raw_frames))
     rows = J.decode_frames(J.read_jelly_file(spark, p2))
     # decode still yields all 3 logical triples
-    back = J.decode_triples(rows, strict=False)
+    back = J.decode_triples(rows)
     assert back.count() == 3
     detail = format_detail(wire_term_detail(rows).collect(), "term")
     assert detail["term_details"] == {

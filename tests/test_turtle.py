@@ -410,6 +410,32 @@ def test_scan_namespaces_ordered(tmp_path):
     ]
 
 
+_DIRECTIVE_LOOKALIKES = (
+    "@prefix ex: <http://example.org/> .\n"
+    "# @prefix c: <http://comment/> .\n"
+    'ex:s ex:doc """first line\n'
+    "@prefix ghost: <http://ghost/> .\n"
+    'last line""" . # PREFIX d: <http://comment2/>\n'
+    "@prefix ex: <http://example.org/v2/> .\n"
+)
+
+
+def test_scan_namespaces_ignores_literals_and_comments(spark, tmp_path):
+    """Directive-shaped text inside a triple-quoted literal or a comment
+    is not a declaration: both scanners read the parser's directives."""
+    from cli_spark.turtle import scan_namespaces_ordered
+
+    f = tmp_path / "doc.ttl"
+    f.write_text(_DIRECTIVE_LOOKALIKES)
+    assert scan_namespaces_ordered(str(f)) == [
+        ("ex", "http://example.org/"),
+        ("ex", "http://example.org/v2/"),
+    ]
+    assert [tuple(r) for r in T.scan_namespaces(spark, str(f)).collect()] == [
+        ("ex", "http://example.org/v2/")
+    ]
+
+
 @pytest.mark.parametrize("single_file", [True, False])
 @pytest.mark.parametrize("shape", ["no_partitions", "empty_partitions"])
 def test_write_turtle_empty_graph_keeps_prefixes(spark, tmp_path, single_file, shape):
