@@ -386,7 +386,10 @@ def validate_stream(rows: DataFrame) -> list[str]:
         .when(kind == KIND_PREFIX, declared["prefix"])
         .when(kind == KIND_DATATYPE, declared["dt"])
     )
-    undeclared = lambda bit: F.coalesce(declared["flags"], F.lit(0)).bitwiseAND(bit) == 0  # noqa: E731
+    # a flag bit the row's own sub-stream does not declare
+    undeclared = lambda bit: (  # noqa: E731
+        F.coalesce(declared["flags"], F.lit(0)).bitwiseAND(bit) == 0
+    )
     is_stmt = kind.isin(KIND_TRIPLE, KIND_QUAD)
     s_kind, p_kind = F.col("subj_kind"), F.col("pred_kind")
     o_kind, g_kind = F.col("obj_kind"), F.col("graph_kind")

@@ -1118,10 +1118,10 @@ def test_cli_validate_ordered_compares_namespaces(spark, tmp_path, capsys):
 
 def test_cli_validate_ordered_ignores_directive_lookalikes(spark, tmp_path):
     """`@prefix` text inside a multi-line literal or a comment is no
-    namespace declaration: ordered validate of the stream against its
-    own Turtle source passes."""
-    ttl = str(tmp_path / "lit.ttl")
-    with open(ttl, "w") as fh:
+    namespace declaration: a stream declaring only `ex` passes ordered
+    validate against a Turtle file that holds such text."""
+    doc = str(tmp_path / "doc.ttl")
+    with open(doc, "w") as fh:
         fh.write(
             "@prefix ex: <http://ex.org/> .\n"
             "# @prefix c: <http://comment/> .\n"
@@ -1129,13 +1129,21 @@ def test_cli_validate_ordered_ignores_directive_lookalikes(spark, tmp_path):
             "@prefix ghost: <http://ghost/> .\n"
             'last line""" .\n'
         )
-    jelly = str(tmp_path / "lit.jelly")
+    # the same statement with the literal on one line
+    flat = str(tmp_path / "flat.ttl")
+    with open(flat, "w") as fh:
+        fh.write(
+            "@prefix ex: <http://ex.org/> .\n"
+            'ex:s ex:doc "first line\\n@prefix ghost: <http://ghost/> .'
+            '\\nlast line" .\n'
+        )
+    jelly = str(tmp_path / "flat.jelly")
     assert main([
-        "rdf", "to-jelly", ttl, "--to", jelly,
+        "rdf", "to-jelly", flat, "--to", jelly,
         "--enable-namespace-declarations",
     ]) == 0
     assert main([
-        "rdf", "validate", jelly, "--compare-to-rdf-file", ttl,
+        "rdf", "validate", jelly, "--compare-to-rdf-file", doc,
         "--compare-ordered",
     ]) == 0
 
