@@ -934,38 +934,28 @@ def _dispatch(spark, args) -> int:
         return 0
 
     if args.rdf_cmd == "inspect":
-        from .inspect_metrics import (
-            format_detail,
-            per_frame_metrics_full,
-            render_yaml,
-            stream_totals,
-            wire_term_detail,
-        )
+        from .inspect_metrics import format_detail, render_yaml, stream_totals
+        from .jellywire import STAT_NAMES
 
         # a zero-frame stream has nothing to report: the same typed
         # error `rdf validate` gives
         J.probe_delimited(args.input)
         frames_df = J.read_jelly_file(spark, args.input)
+        # both statistics come from one rows-free tag-walk over the wire
+        # bytes — no statement decode, no dictionary state; --size picks
+        # the reference's SizeStatistic, otherwise its CountStatistic
         sfx = "size" if args.size else "count"
-        rows = None
-        # --size is the reference's SizeStatistic, computed EXACTLY from
-        # the wire bytes by a rows-free tag-walk — no statement decode
-        # at all (per-term sizes come from the same walk under --detail)
-        if args.size:
-            pf = J.frame_wire_size_stats(frames_df)
-        else:
-            rows = J.decode_frames(frames_df)
-            if args.detail:
-                rows = rows.persist()
-            pf = per_frame_metrics_full(rows)
+        pf = J.frame_wire_size_stats(frames_df).select(
+            "seg", "frame_index", *[f"{n}_{sfx}" for n in STAT_NAMES]
+        )
 
         def detail_counts(per_frame: bool):
-            if args.size:
-                df = J.frame_wire_term_sizes(frames_df)
-                return df if per_frame else df.groupBy(
-                    "term_pos", "node_kind"
-                ).agg(F.sum("n").alias("n"))
-            return wire_term_detail(rows, per_frame=per_frame)
+            df = J.frame_wire_term_sizes(frames_df)
+            if per_frame:
+                return df.withColumnRenamed(sfx, "n")
+            return df.groupBy("term_pos", "node_kind").agg(
+                F.sum(sfx).alias("n")
+            )
 
         if args.per_frame:
             # frame metadata map, hex-valued, only when present — the
@@ -1008,8 +998,6 @@ def _dispatch(spark, args) -> int:
             # `frames` (MetricsPrinter.printAggregate) and ALWAYS leads
             # with the declared stream_options block
             out = {"stream_options": _inspect_options(args.input), "frames": stream}
-        if rows is not None and args.detail:
-            rows.unpersist()
         text = render_yaml(out)
         if args.to:
             with open(args.to, "w") as fh:

@@ -222,11 +222,6 @@ def _with_commits(df: DataFrame) -> DataFrame:
     return df.withColumn("commit", commit).withColumn("content", content)
 
 
-def clone_src_index(n_files: int) -> int:
-    """Clones exist for orig % 10 == 0; clone row index = orig + n_files."""
-    return n_files
-
-
 def _indexed(spark: SparkSession, n_files: int, partitions: int | None = None) -> DataFrame:
     base = spark.range(0, n_files, numPartitions=partitions).select(
         F.col("id").alias("i"), F.col("id").alias("orig"), F.lit(False).alias("is_clone")

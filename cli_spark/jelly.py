@@ -123,12 +123,7 @@ ROW_SCHEMA = (
     "graph string, graph_kind int, graph_dt string, graph_lang string, "
     "name_id long, name string, aux string, "
     "opt_version int, opt_physical int, opt_logical int, opt_flags int, "
-    "opt_max_name int, opt_max_prefix int, opt_max_dt int, "
-    # which terms a statement row carried EXPLICITLY on the wire
-    # (bit 1=s, 2=p, 4=o, 8=g) — repeated-term compression elides the
-    # rest; inspect --detail counts only explicit terms, mirroring the
-    # reference's hasSubject/... guards (MetricsPrinter.scala:186-199)
-    "term_mask int"
+    "opt_max_name int, opt_max_prefix int, opt_max_dt int"
 )
 _ROW_COLS = [s.split()[0] for s in ROW_SCHEMA.split(", ")]
 
@@ -1147,12 +1142,16 @@ def frame_metadata(frames: DataFrame) -> DataFrame:
 
 
 def frame_wire_size_stats(frames: DataFrame) -> DataFrame:
-    """(seg, frame_index, frame_size, row_size, option_size, ...,
-    datatype_size) — the reference's EXACT SizeStatistic per frame
-    (message → getSerializedSize), computed by jellywire's rows-free
-    tag-walk over the frame bytes. One zero-shuffle pass; no resolver,
-    no dictionary state."""
-    names = JW.SIZE_STAT_NAMES
+    """(seg, frame_index, frame_count, frame_size, row_count, row_size,
+    ..., datatype_count, datatype_size) — both statistics of the
+    reference's inspect printer per frame (CountStatistic and the exact
+    SizeStatistic, MetricsPrinter.scala:13-27), from jellywire's rows-free
+    tag-walk over the frame bytes. One zero-shuffle pass; no resolver, no
+    dictionary state, and every frame gets a row, empty ones included.
+    ``rdf inspect`` picks the ``_count`` or ``_size`` columns. The name
+    predates the count columns and stays because the benchmark's tracer
+    calls it."""
+    cols = JW.STAT_COLUMNS
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1162,28 +1161,24 @@ def frame_wire_size_stats(frames: DataFrame) -> DataFrame:
             for seg, fi, blob in zip(
                 pdf["seg"], pdf["frame_index"], pdf["frame_bytes"]
             ):
-                st = JW.frame_size_stats(bytes(blob))
-                out.append(
-                    (int(seg), int(fi)) + tuple(st[n] for n in names)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["seg", "frame_index"] + [f"{n}_size" for n in names],
-            )
+                st = JW.frame_stats(bytes(blob))
+                out.append((int(seg), int(fi)) + tuple(st[c] for c in cols))
+            yield pd.DataFrame(out, columns=["seg", "frame_index", *cols])
 
     schema = "seg long, frame_index long, " + ", ".join(
-        f"{n}_size long" for n in names
+        f"{c} long" for c in cols
     )
     return frames.mapInPandas(scan, schema)
 
 
 def frame_wire_term_sizes(frames: DataFrame) -> DataFrame:
-    """(seg, frame_index, term_pos, node_kind, n) — per-term wire sizes
-    for inspect --size --detail (NodeDetailInfo with SizeStatistic):
-    message terms measure their embedded serialized size, bnode strings
+    """(seg, frame_index, term_pos, node_kind, count, size) — per-term
+    statistics for inspect --detail (NodeDetailInfo): ``count`` is the
+    number of explicitly-encoded terms, ``size`` their wire size
+    (message terms measure their embedded serialized size, bnode strings
     measure computeStringSizeNoTag, quoted-triple terms count once at
-    the embedded message size (no recursion). Zero-shuffle scan +
-    one map-side-combinable groupBy."""
+    the embedded message size, no recursion). Zero-shuffle scan + one
+    map-side-combinable groupBy."""
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1207,7 +1202,7 @@ def frame_wire_term_sizes(frames: DataFrame) -> DataFrame:
         "seg long, frame_index long, term_pos string, node_kind string, sz long",
     )
     return melted.groupBy("seg", "frame_index", "term_pos", "node_kind").agg(
-        F.sum("sz").alias("n")
+        F.count(F.lit(1)).alias("count"), F.sum("sz").alias("size")
     )
 
 
@@ -1276,8 +1271,6 @@ def decode_frames(frames: DataFrame) -> DataFrame:
         )
         pos_idx = {p: tuple(idx[c] for c in cs) for p, cs in _POS_COLS.items()}
         i_name_id, i_name, i_aux = idx["name_id"], idx["name"], idx["aux"]
-        i_mask = idx["term_mask"]
-        _mask_bit = {"s": 1, "p": 2, "o": 4, "g": 8}
         opt_idx = tuple(
             idx[c] for c in (
                 "opt_version", "opt_physical", "opt_logical", "opt_flags",
@@ -1294,15 +1287,11 @@ def decode_frames(frames: DataFrame) -> DataFrame:
                     seg, fi, row_pos, kind
                 )
                 if kind in (KIND_TRIPLE, KIND_QUAD):
-                    mask = 0
                     for p in ("s", "p", "o", "g"):
                         t = row.get(p)
                         if t is not None:
                             iv, ik, idt, il = pos_idx[p]
                             rec[iv], rec[ik], rec[idt], rec[il] = t
-                        if raw.get(p) is not None:
-                            mask |= _mask_bit[p]
-                    rec[i_mask] = mask
                 elif kind in (KIND_NAME, KIND_PREFIX, KIND_DATATYPE):
                     rec[i_name_id], rec[i_name] = row["id"], row["value"]
                 elif kind == KIND_OPTIONS:
@@ -1368,19 +1357,6 @@ def peek_physical_types(frames: DataFrame) -> set[int]:
     }
 
 
-def ensure_physical_frames(
-    frames: DataFrame, allowed: set[int], context: str
-) -> None:
-    """P4 guard (RdfFromJelly.scala:144-153): converting a QUADS/GRAPHS
-    stream into a triples-only sink is an error, not silent data loss.
-    Evaluated on the frames, so the probe job is a tag-peek instead of
-    a second resolution pass. A caller that decodes the rows anyway
-    observes :func:`physical_types_metric` on that decode instead."""
-    bad = peek_physical_types(frames) - allowed - {None}
-    if bad:
-        _raise_physical(bad, context)
-
-
 def namespace_declarations(rows: DataFrame) -> DataFrame:
     """(name, iri) namespace declarations carried by the stream
     (RdfFromJelly.scala:133-140 passthrough)."""
@@ -1396,7 +1372,7 @@ def decode_triples(
     --take-frames) filters AFTER resolution, so skipped frames still
     contributed dictionary state exactly like the reference's
     state-preserving skip (RdfFromJelly.scala:166-177). The P4 guard is
-    the caller's: :func:`ensure_physical_frames` on the frames, or
+    the caller's: :func:`peek_physical_types` on the frames, or
     :func:`physical_types_metric` observed on the decode."""
     trips = rows.filter(F.col("row_kind") == KIND_TRIPLE)
     if take_frames is not None:
@@ -1449,15 +1425,8 @@ def decode_quads_graphs(rows: DataFrame) -> DataFrame:
 
 def roundtrip(spark: SparkSession, triples: DataFrame, **kw) -> DataFrame:
     """encode → decode, for equivalence gates (SURVEY §5 pillar 2).
-
-    The P4 guard runs as the frames-level tag-peek: a guard on the rows
-    table would re-run the whole per-segment resolution just to read the
-    options rows (measured: it doubled q50's decode cost). The encoder
-    checkpoints its per-segment frames, so the peek and the decode each
-    re-run only the options-row patch, not the encode."""
-    frames = encode_triples(spark, triples, **kw)
-    ensure_physical_frames(frames, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    return decode_triples(decode_frames(frames))
+    No P4 guard: :func:`encode_triples` always declares TRIPLES."""
+    return decode_triples(decode_frames(encode_triples(spark, triples, **kw)))
 
 
 def roundtrip_quads(spark: SparkSession, quads: DataFrame, **kw) -> DataFrame:

@@ -1241,7 +1241,7 @@ def resolve_frames(
 
 
 # ---------------------------------------------------------------------------
-# size statistics (rows-free tag-walks for inspect --size)
+# inspect statistics (rows-free tag-walks for rdf inspect)
 # ---------------------------------------------------------------------------
 
 _ROW_KIND_STAT = {
@@ -1250,7 +1250,12 @@ _ROW_KIND_STAT = {
     K_NAMESPACE: "namespace", K_NAME: "name", K_PREFIX: "prefix",
     K_DATATYPE: "datatype",
 }
-SIZE_STAT_NAMES = ("frame", "row") + tuple(_ROW_KIND_STAT.values())
+STAT_NAMES = ("frame", "row") + tuple(_ROW_KIND_STAT.values())
+# one count and one size column per statistic, count first
+STAT_COLUMNS = tuple(f"{n}_{s}" for n in STAT_NAMES for s in ("count", "size"))
+_ROW_KIND_KEYS = {
+    k: (f"{n}_count", f"{n}_size") for k, n in _ROW_KIND_STAT.items()
+}
 
 
 def _varint_size(v: int) -> int:
@@ -1261,24 +1266,30 @@ def _varint_size(v: int) -> int:
     return n
 
 
-def frame_size_stats(data: bytes) -> dict:
-    """The reference's SizeStatistic per frame (MetricsPrinter
-    FrameInfo.SizeStatistic: message → getSerializedSize): frame =
-    the frame's own serialized bytes, row = each row message's bytes,
-    per-kind = each row BODY's bytes. A pure tag-walk — no terms
-    decoded, no dictionary state."""
-    out = dict.fromkeys(SIZE_STAT_NAMES, 0)
-    out["frame"] = len(data)
+def frame_stats(data: bytes) -> dict:
+    """Both statistics of the reference's inspect printer for one frame
+    (MetricsPrinter FrameInfo: CountStatistic measures 1 per message,
+    SizeStatistic measures getSerializedSize), keyed ``<name>_count`` and
+    ``<name>_size``: frame = the frame itself, row = each row message,
+    per-kind = each row BODY. A pure tag-walk — no terms decoded, no
+    dictionary state — so an empty frame still counts as a frame, an
+    empty row message is skipped, and a row of unknown kind counts as a
+    row of no kind."""
+    out = dict.fromkeys(STAT_COLUMNS, 0)
+    out["frame_count"] = 1
+    out["frame_size"] = len(data)
     for field, wire, v in _fields(data):
         if field != 1 or wire != 2 or not v:
             continue
-        out["row"] += len(v)
+        out["row_count"] += 1
+        out["row_size"] += len(v)
         tag, pos = read_varint(v, 0)
-        stat = _ROW_KIND_STAT.get(tag >> 3)
-        if stat is None or tag & 7 != 2:
+        keys = _ROW_KIND_KEYS.get(tag >> 3)
+        if keys is None or tag & 7 != 2:
             continue
         ln, _pos = read_varint(v, pos)
-        out[stat] += ln
+        out[keys[0]] += 1
+        out[keys[1]] += ln
     return out
 
 
@@ -1292,7 +1303,9 @@ def frame_term_sizes(data: bytes) -> list:
     for bnode strings, i.e. varint(len)+len). Quoted-triple terms count
     as one 'triple' node of the embedded message's size, not recursed —
     exactly the reference's behavior. GraphStart terms are not detail
-    terms (only triple/quad rows feed NodeDetailInfo)."""
+    terms (only triple/quad rows feed NodeDetailInfo). The walk yields
+    explicitly-encoded terms only, so the count statistic of a
+    (position, kind) pair is the number of tuples yielded for it."""
     out: list = []
     for field, wire, v in _fields(data):
         if field != 1 or wire != 2 or not v:

@@ -96,16 +96,6 @@ def shingle_hash_arrays(repos: DataFrame) -> DataFrame:
     return tokenized.select("file_iri", hashes.alias("hs"))
 
 
-def file_shingles(repos: DataFrame) -> DataFrame:
-    """(file_iri, shingle_hash) distinct — exploded view of
-    :func:`shingle_hash_arrays` for Jaccard-style set ops. The minhash
-    path never uses this (MIN needs neither explode nor distinct)."""
-    return (
-        shingle_hash_arrays(repos)
-        .select("file_iri", F.explode(F.array_distinct(F.col("hs"))).alias("h"))
-    )
-
-
 def _sig_arrow_kernel(num_perm: int):
     """Arrow-native signature kernel (mapInArrow): the list<int64> hash
     column is consumed zero-copy — ``values`` is the flat int64 buffer,

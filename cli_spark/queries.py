@@ -1508,17 +1508,18 @@ def q50_jelly_roundtrip(spark, sf_dir):
       LEFT JOIN opt_rows o ON o.seg = t.seg AND o.frame_index = t.frame_index
     """,
     doc="`rdf inspect` per-frame counters (A1) computed from the REAL "
-    "binary frames (encode → decode → count) and checked against pure "
+    "binary frames (encode → wire walk → count) and checked against pure "
     "frame arithmetic in SQL — validates frame assignment (W1/W2), "
     "per-segment dictionaries (W5), and options placement (P10) at once.",
 )
 def q51_jelly_frame_metrics(spark, sf_dir):
-    from cli_spark.inspect_metrics import per_frame_metrics
-    from cli_spark.jelly import decode_frames, encode_triples
+    from cli_spark.jelly import encode_triples, frame_wire_size_stats
 
     t = doc_triples(spark, sf_dir)
-    frames = encode_triples(spark, t)
-    return per_frame_metrics(decode_frames(frames))
+    return frame_wire_size_stats(encode_triples(spark, t)).select(
+        "seg", "frame_index", "option_count", "name_count", "triple_count",
+        "row_count",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1583,25 +1584,16 @@ def q09_product_profit(spark, sf_dir):
 )
 def q25_jellytext_roundtrip(spark, sf_dir):
     from cli_spark.jelly import (
-        PHYSICAL_TRIPLES,
         decode_frames,
         decode_triples,
         encode_triples,
-        ensure_physical_frames,
         parse_jelly_text,
         render_jelly_text,
     )
 
     t = doc_triples(spark, sf_dir)
-    frames = encode_triples(spark, t, prefix_table=True)
-    text = render_jelly_text(frames)
-    # parsed frames are checkpointed (the in-memory analog of the
-    # .jelly.txt file both jobs would read); the P4 guard is the
-    # tag-peek — a guard on the rows table would re-run the whole
-    # resolution as a probe job
-    parsed = parse_jelly_text(text).localCheckpoint()
-    ensure_physical_frames(parsed, {PHYSICAL_TRIPLES}, "a triples-only sink")
-    return decode_triples(decode_frames(parsed)).select(
+    text = render_jelly_text(encode_triples(spark, t, prefix_table=True))
+    return decode_triples(decode_frames(parse_jelly_text(text))).select(
         "subj", "pred", "obj", "obj_kind"
     )
 

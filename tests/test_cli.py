@@ -1272,6 +1272,73 @@ def test_cli_inspect_empty_stream(spark, tmp_path, capsys):
     assert "Unknown error" not in err and "Traceback" not in err
 
 
+def _inspect_yaml(args, tmp_path):
+    import yaml
+
+    rpt = str(tmp_path / "report.yaml")
+    assert main(["rdf", "inspect", *args, "--to", rpt]) == 0, args
+    with open(rpt) as fh:
+        return yaml.safe_load(fh)["frames"]
+
+
+def test_cli_inspect_empty_frames(spark, tmp_path):
+    """An empty frame is a frame for both statistics: count mode lists
+    the same (seg, frame_index) set and frame_count as --size, for an
+    empty middle frame and for empty frames ahead of the options row
+    (MetricsPrinter counts every frame it reads)."""
+    from cli_spark import jellywire as JW
+
+    opts = {"kind": JW.K_OPTIONS, "physical": 1, "logical": 1,
+            "version": 1, "max_name": 8}
+    name = {"kind": JW.K_NAME, "id": 1, "value": "http://e/a"}
+    a = {"k": 0, "pid": 0, "nid": 1}
+    tri = {"kind": JW.K_TRIPLE, "s": a, "p": a, "o": a}
+    streams = {
+        "middle": ([[opts, name, tri], [], [tri]], 3),
+        "leading": ([[], [], [], [opts, name, tri]], 4),
+    }
+    for label, (frames, n) in streams.items():
+        path = tmp_path / f"{label}.jelly"
+        path.write_bytes(JW.write_delimited(JW.encode_frame(f) for f in frames))
+        for size in ([], ["--size"]):
+            got = _inspect_yaml([str(path), *size], tmp_path)
+            assert got["frame_count"] == n, (label, size)
+            per = _inspect_yaml([str(path), "--per-frame", *size], tmp_path)
+            assert [(f["seg"], f["frame_index"]) for f in per] == [
+                (0, i) for i in range(n)
+            ], (label, size)
+        per = _inspect_yaml([str(path), "--per-frame"], tmp_path)
+        assert [f["row_count"] for f in per] == [len(f) for f in frames]
+
+
+def test_cli_inspect_job_budget(spark, tmp_path):
+    """Count mode and --size read the same wire walk, so each flag set
+    runs the same number of Spark jobs in the `rdf inspect` group for
+    both statistics, and that number is pinned: a decode of the rows
+    (a grouped per-segment resolve) would add jobs."""
+    stream = os.path.join(
+        os.path.dirname(__file__), "fixtures", "encoder", "triples_pt0_n64.jelly"
+    )
+    tracker = spark.sparkContext.statusTracker()
+    budget = {
+        (): 2,
+        ("--per-frame",): 4,
+        ("--detail", "all"): 5,
+        ("--per-frame", "--detail", "node"): 6,
+    }
+    got = {}
+    for flags in budget:
+        for size in ((), ("--size",)):
+            before = set(tracker.getJobIdsForGroup("rdf inspect"))
+            _inspect_yaml([stream, *flags, *size], tmp_path)
+            jobs = set(tracker.getJobIdsForGroup("rdf inspect")) - before
+            got[flags + size] = len(jobs)
+    assert got == {
+        flags + size: n for flags, n in budget.items()
+        for size in ((), ("--size",))
+    }, got
+
+
 def test_cli_validate_job_budget(spark, tmp_path):
     """`rdf validate` labels its Spark jobs with the command and runs a
     fixed handful of them: the structural checks are one aggregate, both

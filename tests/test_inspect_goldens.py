@@ -15,7 +15,8 @@ fixture plus four hand-built ones in ``tests/fixtures/inspect``:
 - ``metadata.jelly``: a version-2 QUADS stream with v1.1 frame metadata
   on two of its three frames, a namespace row and elided terms.
 
-None of them has an empty frame.
+None of them has an empty frame: count mode lists those now, the old
+counter dropped them (``test_cli::test_cli_inspect_empty_frames``).
 """
 
 from __future__ import annotations

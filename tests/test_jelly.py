@@ -11,12 +11,8 @@ from pyspark.sql import functions as F
 
 from cli_spark import jelly as J
 from cli_spark.compare import validate_stream
-from cli_spark.inspect_metrics import (
-    per_frame_metrics,
-    per_frame_metrics_full,
-    render_yaml,
-    stream_totals,
-)
+from cli_spark.inspect_metrics import render_yaml, stream_totals
+from cli_spark.jellywire import STAT_NAMES
 
 KEY = ["subj", "pred", "obj", "obj_kind"]
 
@@ -123,33 +119,27 @@ def test_validate_stream_ok_and_violations(spark, triples):
         J.decode_frames(bad).collect()
 
 
+def _stat(pf, sfx):
+    """The per-frame table of one statistic, as `rdf inspect` selects it."""
+    return pf.select("seg", "frame_index", *[f"{n}_{sfx}" for n in STAT_NAMES])
+
+
 def test_inspect_metrics(spark, triples):
     n = triples.count()
     frames = J.encode_triples(spark, triples, rows_per_frame=64)
-    rows = J.decode_frames(frames).cache()
-    agg = stream_totals(per_frame_metrics_full(rows)).collect()[0].asDict()
+    pf = J.frame_wire_size_stats(frames).cache()
+    agg = stream_totals(_stat(pf, "count")).collect()[0].asDict()
     assert agg["triple_count"] == n
     assert agg["frame_count"] == frames.count()
     assert agg["option_count"] >= 1
-    pf = per_frame_metrics(rows)
     assert pf.agg(F.sum("triple_count")).collect()[0][0] == n
+    # each frame counts once, and no row is bigger than its frame
+    assert pf.filter(
+        (F.col("frame_count") != 1) | (F.col("row_size") > F.col("frame_size"))
+    ).count() == 0
+    pf.unpersist()
     yaml_text = render_yaml({"frames": agg, "note": 'has "quotes"'})
     assert "triple_count:" in yaml_text and '\\"' in yaml_text
-
-
-def test_per_frame_metrics_is_projection_of_full(spark, triples):
-    """The 4-counter battery table equals the full counter table
-    projected onto its six columns, values and types alike."""
-    cols = ["seg", "frame_index", "option_count", "name_count",
-            "triple_count", "row_count"]
-    frames = J.encode_triples(spark, triples, rows_per_frame=64)
-    rows = J.decode_frames(frames).cache()
-    pf = per_frame_metrics(rows)
-    full = per_frame_metrics_full(rows).select(*cols)
-    assert pf.columns == cols
-    assert pf.dtypes == full.dtypes
-    _assert_equal_sets(pf, full)
-    rows.unpersist()
 
 
 def test_stream_totals_names_each_counter_once(spark, triples):
@@ -157,11 +147,9 @@ def test_stream_totals_names_each_counter_once(spark, triples):
     frame_count, for both the count and the size statistic."""
     frames = J.encode_triples(spark, triples, rows_per_frame=64)
     n_frames = frames.count()
-    for pf in (
-        per_frame_metrics_full(J.decode_frames(frames)),
-        J.frame_wire_size_stats(frames),
-    ):
-        totals = stream_totals(pf)
+    pf = J.frame_wire_size_stats(frames)
+    for sfx in ("count", "size"):
+        totals = stream_totals(_stat(pf, sfx))
         assert len(set(totals.columns)) == len(totals.columns), totals.columns
         assert totals.columns[0] == "frame_count"
         assert totals.first()["frame_count"] == n_frames

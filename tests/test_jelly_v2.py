@@ -67,15 +67,12 @@ def test_quads_typed_literals(spark):
 
 
 def test_p4_frames_level_guard(spark, quads):
-    """P4 (RdfFromJelly.scala:144-153): decoding a QUADS stream into a
-    triples-only sink raises instead of silently dropping graphs. The
-    guard is a tag-peek on the frames (no resolution pass) that reads
-    the declared physical type without decoding statements."""
+    """P4 (RdfFromJelly.scala:144-153) reads the declared physical type
+    with a tag-peek on the frames (no resolution pass, no statement
+    decode); the CLI refusal itself is
+    test_cli::test_cli_quads_to_triples_sink_guard."""
     frames = J.encode_quads(spark, quads)
     assert J.peek_physical_types(frames) == {J.PHYSICAL_QUADS}
-    with pytest.raises(ValueError, match="QUADS"):
-        J.ensure_physical_frames(frames, {J.PHYSICAL_TRIPLES}, "a triples-only sink")
-    J.ensure_physical_frames(frames, {J.PHYSICAL_QUADS}, "a quad sink")
 
 
 @pytest.fixture(scope="module")
@@ -387,6 +384,8 @@ def test_jelly_text_roundtrip(spark, quads, tmp_path):
     text = J.render_jelly_text(frames).cache()
     one = text.first().text
     assert "rows {" in one and ("quad {" in one or "name {" in one)
+    # the parsed frames keep the declared physical type (P4 reads it)
+    assert J.peek_physical_types(J.parse_jelly_text(text)) == {J.PHYSICAL_QUADS}
     back = J.decode_quads(J.decode_frames(J.parse_jelly_text(text)))
     assert _set(back, QKEY) == _set(quads, QKEY)
     # file round-trip (reference layout: # Frame N headers, 2-space
@@ -525,7 +524,7 @@ def test_wire_term_detail_elision(spark, tmp_path):
     stream is built by decoding our explicit wire to raw rows, deleting
     the repeated subject/predicate fields, and re-encoding."""
     from cli_spark import jellywire as JW
-    from cli_spark.inspect_metrics import format_detail, wire_term_detail
+    from cli_spark.inspect_metrics import format_detail
 
     # build via the normal encoder: 3 triples, s1 repeated
     triples = spark.createDataFrame(
@@ -557,11 +556,12 @@ def test_wire_term_detail_elision(spark, tmp_path):
     p2 = str(tmp_path / "elided.jelly")
     with open(p2, "wb") as fh:
         fh.write(JW.write_delimited(JW.encode_frame(fr) for fr in raw_frames))
-    rows = J.decode_frames(J.read_jelly_file(spark, p2))
+    frames = J.read_jelly_file(spark, p2)
     # decode still yields all 3 logical triples
-    back = J.decode_triples(rows)
+    back = J.decode_triples(J.decode_frames(frames))
     assert back.count() == 3
-    detail = format_detail(wire_term_detail(rows).collect(), "term")
+    terms = J.frame_wire_term_sizes(frames).withColumnRenamed("count", "n")
+    detail = format_detail(terms.collect(), "term")
     assert detail["term_details"] == {
         "subject_count": 2,   # s1 explicit once, s2 once
         "predicate_count": 1,  # kg:p explicit once
