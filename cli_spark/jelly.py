@@ -1151,7 +1151,7 @@ def frame_wire_size_stats(frames: DataFrame) -> DataFrame:
     ``rdf inspect`` picks the ``_count`` or ``_size`` columns. The name
     predates the count columns and stays because the benchmark's tracer
     calls it."""
-    cols = JW.STAT_COLUMNS
+    cols = [f"{n}_{s}" for n in JW.STAT_NAMES for s in ("count", "size")]
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -1161,8 +1161,10 @@ def frame_wire_size_stats(frames: DataFrame) -> DataFrame:
             for seg, fi, blob in zip(
                 pdf["seg"], pdf["frame_index"], pdf["frame_bytes"]
             ):
-                st = JW.frame_stats(bytes(blob))
-                out.append((int(seg), int(fi)) + tuple(st[c] for c in cols))
+                count, size = JW.frame_stats(bytes(blob))
+                out.append(
+                    (int(seg), int(fi)) + sum(zip(count, size), ())
+                )
             yield pd.DataFrame(out, columns=["seg", "frame_index", *cols])
 
     schema = "seg long, frame_index long, " + ", ".join(

@@ -1251,11 +1251,7 @@ _ROW_KIND_STAT = {
     K_DATATYPE: "datatype",
 }
 STAT_NAMES = ("frame", "row") + tuple(_ROW_KIND_STAT.values())
-# one count and one size column per statistic, count first
-STAT_COLUMNS = tuple(f"{n}_{s}" for n in STAT_NAMES for s in ("count", "size"))
-_ROW_KIND_KEYS = {
-    k: (f"{n}_count", f"{n}_size") for k, n in _ROW_KIND_STAT.items()
-}
+_ROW_KIND_INDEX = {k: i + 2 for i, k in enumerate(_ROW_KIND_STAT)}
 
 
 def _varint_size(v: int) -> int:
@@ -1266,31 +1262,30 @@ def _varint_size(v: int) -> int:
     return n
 
 
-def frame_stats(data: bytes) -> dict:
+def frame_stats(data: bytes) -> tuple[list, list]:
     """Both statistics of the reference's inspect printer for one frame
     (MetricsPrinter FrameInfo: CountStatistic measures 1 per message,
-    SizeStatistic measures getSerializedSize), keyed ``<name>_count`` and
-    ``<name>_size``: frame = the frame itself, row = each row message,
-    per-kind = each row BODY. A pure tag-walk — no terms decoded, no
-    dictionary state — so an empty frame still counts as a frame, an
-    empty row message is skipped, and a row of unknown kind counts as a
-    row of no kind."""
-    out = dict.fromkeys(STAT_COLUMNS, 0)
-    out["frame_count"] = 1
-    out["frame_size"] = len(data)
+    SizeStatistic measures getSerializedSize) as (counts, sizes) in
+    ``STAT_NAMES`` order: frame = the frame itself, row = each row
+    message, per-kind = each row BODY. A pure tag-walk — no terms
+    decoded, no dictionary state — so an empty frame still counts as a
+    frame, an empty row message is skipped, and a row of unknown kind
+    counts as a row of no kind."""
+    count = [0] * len(STAT_NAMES)
+    size = [0] * len(STAT_NAMES)
+    count[0], size[0] = 1, len(data)
     for field, wire, v in _fields(data):
         if field != 1 or wire != 2 or not v:
             continue
-        out["row_count"] += 1
-        out["row_size"] += len(v)
+        count[1] += 1
+        size[1] += len(v)
         tag, pos = read_varint(v, 0)
-        keys = _ROW_KIND_KEYS.get(tag >> 3)
-        if keys is None or tag & 7 != 2:
+        i = _ROW_KIND_INDEX.get(tag >> 3)
+        if i is None or tag & 7 != 2:
             continue
-        ln, _pos = read_varint(v, pos)
-        out[keys[0]] += 1
-        out[keys[1]] += ln
-    return out
+        count[i] += 1
+        size[i] += read_varint(v, pos)[0]
+    return count, size
 
 
 _GRAPH_TERM_KIND = {13: "iri", 14: "bnode", 15: "default_graph", 16: "literal"}
