@@ -3,8 +3,8 @@
 Re-expresses the capabilities of the reference Jelly-RDF/cli pipeline
 (encode / decode / transcode / inspect / validate over RDF statement
 streams) as idiomatic Spark DataFrame jobs that run at cluster scale,
-plus the large-scale training-data operators (dedup, similarity
-search, text analysis, multimodal plumbing) such a pipeline needs.
+plus the training-data operators (span dedup, similarity search, text
+analysis, curation, multimodal plumbing) behind the query battery.
 
 Layout
 ------
@@ -16,7 +16,7 @@ Layout
 - :mod:`cli_spark.jellywire`     the real Jelly protobuf wire codec + stream resolver
 - :mod:`cli_spark.jelly`         Jelly stream frames over Spark (encode/decode/transcode)
 - :mod:`cli_spark.nquads`        N-Triples / N-Quads columnar render + parse
-- :mod:`cli_spark.compare`       ordered / unordered RDF compare, P/R scorer
+- :mod:`cli_spark.compare`       ordered / unordered RDF compare, containment, stream checks
 - :mod:`cli_spark.inspect_metrics`  per-frame / aggregate stream metrics ("rdf inspect")
 - :mod:`cli_spark.manifest`      per-stage checkpoint manifests for mid-stage resume
 - :mod:`cli_spark.pipeline`      extract → link → canonicalize → materialize → validate

@@ -13,7 +13,6 @@ becomes one aggregate over the rows.
   hash-refinement canonical bnode labeling (UnorderedRdfCompare.scala:10-34)
   — both sides refined in one loop, the verdict in one aggregate
 - :func:`containment`         J3: expected ⊆ actual via left-anti join
-- :func:`precision_recall`    north-rule P/R scorer over canonicalized triples
 - :func:`validate_stream`     P5/P8/P10 structural checks over a rows
   table, all in one aggregate
 """
@@ -201,18 +200,6 @@ def _refined_labels(g: DataFrame, scope: list[str], rounds: int) -> DataFrame:
     )
 
 
-def canonical_bnode_labels(triples: DataFrame, rounds: int = REFINE_ROUNDS) -> DataFrame:
-    """Canonical bnode labeling by iterative hash refinement (color
-    refinement over the bnode incidence structure) — SURVEY.md §7 hard
-    part 1. Correct for graphs without automorphic bnode clusters; the
-    refinement hash folds each bnode's multiset of (pred, direction,
-    neighbor-signature) per round.
-
-    Returns (graph, label, canon) for every bnode label per graph.
-    """
-    return _refined_labels(_with_graph(triples), ["graph"], rounds)
-
-
 def _canonicalized(g: DataFrame, scope: list[str], keep: list[str]) -> DataFrame:
     """Rewrite ``g``'s bnode labels to their canonical refinement hashes
     within ``scope``; IRIs and literals pass through. Output:
@@ -294,27 +281,6 @@ def containment(expected: DataFrame, actual: DataFrame, keys=("subj", "pred", "o
     return expected.select(*keys).distinct().join(
         actual.select(*keys).distinct(), list(keys), "left_anti"
     ).count()
-
-
-def precision_recall(
-    expected: DataFrame, actual: DataFrame, keys=("subj", "pred", "obj")
-) -> dict:
-    """North-rule scorer: P = |E∩A|/|A|, R = |E∩A|/|E|."""
-    e = expected.select(*keys).distinct().persist()
-    a = actual.select(*keys).distinct().persist()
-    try:
-        ne, na = e.count(), a.count()
-        ni = e.join(a, list(keys)).count()
-    finally:
-        e.unpersist()
-        a.unpersist()
-    return {
-        "n_expected": ne,
-        "n_actual": na,
-        "n_inter": ni,
-        "precision": ni / na if na else 0.0,
-        "recall": ni / ne if ne else 0.0,
-    }
 
 
 def validate_stream(rows: DataFrame) -> list[str]:

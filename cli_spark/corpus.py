@@ -26,7 +26,7 @@ Planted structure:
 - **Near-duplicates**: every file with ``i % 10 == 0`` has a clone
   (same mentions, one filler line changed) planted at ``i + n_files``
   in a different repo — the MinHash-LSH linking stage must find these
-  pairs (closed-form expected pairs from :func:`expected_dup_pairs`).
+  (orig ``i``, clone ``i + n_files``) pairs.
 """
 
 from __future__ import annotations
@@ -315,13 +315,4 @@ def expected_triples(
     out = file_triples.unionByName(has_file)
     return out.withColumn(
         "graph", F.format_string("kg:graph/%s", F.col("src_repo"))
-    )
-
-
-def expected_dup_pairs(spark: SparkSession, n_files: int) -> DataFrame:
-    """Closed-form (orig_i, clone_i) near-duplicate file-index pairs."""
-    return (
-        spark.range(0, n_files)
-        .filter(F.pmod(F.col("id"), F.lit(10)) == 0)
-        .select(F.col("id").alias("orig_i"), (F.col("id") + n_files).alias("clone_i"))
     )

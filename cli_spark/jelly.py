@@ -141,14 +141,8 @@ _PRE_COLS = (
 )
 
 
-def snake_to_camel(name: str) -> str:
-    """UPPER_SNAKE → lowerCamel (F6, e.g. FLAT_TRIPLES → flatTriples)."""
-    parts = name.lower().split("_")
-    return parts[0] + "".join(p.capitalize() for p in parts[1:])
-
-
 def camel_to_snake(name: str) -> str:
-    """lowerCamel → UPPER_SNAKE (F6 inverse)."""
+    """lowerCamel → UPPER_SNAKE (F6, e.g. flatTriples → FLAT_TRIPLES)."""
     out = []
     for ch in name:
         if ch.isupper():
@@ -157,23 +151,11 @@ def camel_to_snake(name: str) -> str:
     return "".join(out)
 
 
-def logical_type_iri(logical: int) -> str | None:
-    """Logical-type enum → STaX ontology IRI (P12). The published
-    ontology locals are SINGULAR — FLAT_QUADS ↔ #flatQuadStream — so
-    the enum name drops its trailing S before camel-casing, exactly the
-    reference's rule (RdfJellySerializationOptions.scala:73-78)."""
-    if logical == LOGICAL_UNSPECIFIED:
-        return None
-    name = LOGICAL_NAMES[logical]
-    if name.endswith("S"):
-        name = name[:-1]
-    return STAX_BASE + snake_to_camel(name) + "Stream"
-
-
 def logical_type_from_iri(iri: str) -> int:
-    """STaX ontology IRI → logical-type enum (P12 inverse). Accepts the
-    ontology's singular locals (#flatQuadStream); the plural spelling
-    this repo emitted before round 5 still resolves."""
+    """STaX ontology IRI → logical-type enum (P12). The published
+    ontology locals are SINGULAR — #flatQuadStream ↔ FLAT_QUADS, the
+    reference's rule (RdfJellySerializationOptions.scala:73-78); the
+    plural spelling this repo emitted before round 5 still resolves."""
     local = iri.rsplit("#", 1)[-1]
     if local.endswith("Stream"):
         local = local[: -len("Stream")]
@@ -1211,15 +1193,13 @@ def frame_wire_term_sizes(frames: DataFrame) -> DataFrame:
 def options_from_file(path: str) -> StreamOptions:
     """Options-from-file (S11, RdfToJelly.scala:82-89): read the first
     frame of an existing stream and copy its options row. Pure
-    driver-side I/O — only the head of the file is touched."""
+    driver-side I/O — only the leading frames are read, and only their
+    options rows are parsed (:func:`jellywire.peek_options`)."""
     with open(path, "rb") as fh:
-        data = fh.read()
-    if not data:
-        raise ValueError("empty stream")
-    _, blobs = JW.split_delimited(data)
-    for blob in blobs:
-        for row in JW.decode_frame(blob):
-            if row["kind"] == KIND_OPTIONS:
+        if not fh.peek(1):
+            raise ValueError("empty stream")
+        for blob in JW.read_frames(fh):
+            for row in JW.peek_options(blob):
                 return StreamOptions(
                     version=row["version"],
                     physical_type=row["physical"],
@@ -1231,8 +1211,8 @@ def options_from_file(path: str) -> StreamOptions:
                     max_prefix_table=row["max_prefix"],
                     max_dt_table=row["max_dt"],
                 )
-        if blob:  # only scan leading empty frames past the first
-            break
+            if blob:  # only scan leading empty frames past the first
+                break
     raise ValueError(f"no options row in the first frame of {path}")
 
 

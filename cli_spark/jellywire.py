@@ -592,6 +592,28 @@ def split_delimited(data: bytes) -> tuple[bool, list[bytes]]:
     return True, frames
 
 
+def read_frames(fh) -> Iterator[bytes]:
+    """Frames of an open binary file, read one at a time, by the
+    :func:`split_delimited` rule: a non-delimited file (first byte 0x0A)
+    is one frame; a delimited one is a varint length, then that many
+    bytes of frame. A length cut short by the end of the file ends the
+    frames."""
+    b = fh.read(1)
+    if b == b"\x0a":
+        yield b + fh.read()
+        return
+    while b:
+        n = shift = 0
+        while b and b[0] & 0x80:
+            n |= (b[0] & 0x7F) << shift
+            shift += 7
+            b = fh.read(1)
+        if not b:
+            return
+        yield fh.read(n | b[0] << shift)
+        b = fh.read(1)
+
+
 def write_delimited(frames: Iterable[bytes]) -> bytes:
     buf = io.BytesIO()
     for fb in frames:

@@ -6,8 +6,8 @@ Two linkers:
 - :func:`link_near_dup_files` — content near-duplicate detection.
   shingle → minhash → band → bucket-join → signature-agreement scoring,
   emitting ``kg:sameAs`` triples between file IRIs. This is the LSH
-  showcase; ground truth is the planted clone pairs
-  (:func:`cli_spark.corpus.expected_dup_pairs`).
+  showcase; ground truth is the planted clone pairs (orig ``i``, clone
+  ``i + n_files`` for ``i % 10 == 0``, see :mod:`cli_spark.corpus`).
 - :func:`link_modules_cross_lang` — exact-name module linking across
   languages (equi-join on the module local name) — the cheap path that
   needs no sketch.

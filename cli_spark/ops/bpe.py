@@ -1,5 +1,5 @@
 """Byte-level BPE (byte-pair encoding) tokenizer — train, encode,
-count, detokenize — the subword-token layer the packing and vocabulary
+count — the subword-token layer the packing and vocabulary
 operators (`ops/curation.py`) need: real training pipelines pack
 sequences by *subword* counts, not whitespace counts.
 
@@ -10,17 +10,16 @@ spaces, and a merge table of (left, right) pairs is learned greedily
 by pair frequency. No external tokenizer libraries.
 
 Scale shape:
-- **Training** runs on an aggregated word-count table: ONE Spark
-  `groupBy(word)` shuffle over the sample, then a driver-side loop over
-  the collected distinct-word counts (bounded by ``max_words``; drops
-  are logged, never silent). This is how public BPE trainers work —
-  the pair-count loop is over the word *vocabulary*, not the corpus.
-- **Encoding** is a zero-shuffle Arrow-batched kernel: the merge table
-  is tiny (``n_merges`` rows) and ships in the UDF closure; a per-batch
-  word→tokens cache makes the cost proportional to *distinct* words per
-  batch, not total tokens. At 100 TB the encode stage is embarrassingly
-  parallel (row-local), exactly like the reference's per-record
-  transforms.
+- **Training** (:func:`bpe_train_counts`) is a driver-side loop over an
+  aggregated word-count table — the pair-count loop is over the word
+  *vocabulary*, not the corpus, as in public BPE trainers. The seed
+  merge table (q36) is learned at import time from a literal table.
+- **Counting** (:func:`bpe_count_col`) is a zero-shuffle Arrow-batched
+  kernel: the merge table is tiny (``n_merges`` rows) and ships in the
+  UDF closure; a per-batch word→tokens cache makes the cost
+  proportional to *distinct* words per batch, not total tokens. At
+  100 TB the encode stage is embarrassingly parallel (row-local),
+  exactly like the reference's per-record transforms.
 
 Correctness anchors:
 - encode→detokenize identity on arbitrary unicode text (pytest).
@@ -40,7 +39,6 @@ from collections import Counter
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Fixed seed corpus for the battery row (q36): the synthetic documents
@@ -101,35 +99,6 @@ def bpe_train_counts(
     return merges
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int,
-    max_words: int = 1 << 16,
-    min_count: int = 1,
-) -> list[tuple[bytes, bytes]]:
-    """Distributed word counting (one groupBy shuffle with map-side
-    partial agg) → driver-side merge loop. ``max_words`` bounds the
-    collected vocabulary (top by count, then word — deterministic);
-    the number of dropped words is printed, never silent."""
-    wc = (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
-    )
-    top = wc.orderBy(F.desc("c"), "w").limit(max_words + 1).collect()
-    if len(top) > max_words:
-        total = wc.count()
-        print(
-            f"bpe_train: vocabulary capped at {max_words} words "
-            f"({total - max_words} dropped by count)"
-        )
-        top = top[:max_words]
-    return bpe_train_counts({r["w"]: r["c"] for r in top}, n_merges)
-
-
 def encode_word(word: str, ranks: dict[tuple[bytes, bytes], int]) -> list[bytes]:
     """Encode one word: repeatedly merge the lowest-rank adjacent pair
     (all occurrences, left-to-right) until none applies."""
@@ -146,16 +115,6 @@ def encode_word(word: str, ranks: dict[tuple[bytes, bytes], int]) -> list[bytes]
     return list(toks)
 
 
-def encode_text(text: str, ranks: dict[tuple[bytes, bytes], int]) -> list[bytes]:
-    """Pre-tokenize on single spaces (merges never cross a space), then
-    encode each word. The space itself is a boundary, not a token —
-    detokenize() reinserts it, giving exact round-trip identity."""
-    out: list[bytes] = []
-    for w in text.split(" "):
-        out.extend(encode_word(w, ranks))
-    return out
-
-
 def detokenize(tokens: Iterable[bytes]) -> str:
     """Inverse of :func:`encode_word`: tokens are byte slices of the
     original UTF-8, so concatenation is exact. Full-text identity:
@@ -165,21 +124,6 @@ def detokenize(tokens: Iterable[bytes]) -> str:
 
 def _ranks(merges: list[tuple[bytes, bytes]]) -> dict[tuple[bytes, bytes], int]:
     return {p: i for i, p in enumerate(merges)}
-
-
-def bpe_count(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[bytes, bytes]],
-) -> DataFrame:
-    """(id, bpe_tokens): per-document subword token count under the
-    given merge table. Zero-shuffle Arrow kernel with a per-batch
-    word→count cache (cost ∝ distinct words per batch)."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        bpe_count_col(text_col, merges).alias("bpe_tokens"),
-    )
 
 
 def bpe_count_col(text_col, merges: list[tuple[bytes, bytes]]):

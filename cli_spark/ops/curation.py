@@ -18,8 +18,6 @@ extraction and training:
 - :func:`pack_sequences_nextfit` true next-fit packing per shard
                              (applyInPandas; invariant-tested)
 - :func:`doc_frequency`      per-token document frequency / corpus vocabulary
-- :func:`mix_corpora`        deterministic weighted multi-source mixture to a
-                             token budget (md5-Bernoulli, epochs/upsampling)
 
 Scale notes: every operator is either a zero-shuffle columnar map
 (pii_scrub, deterministic_split) or shuffles once on a per-document key
@@ -403,83 +401,3 @@ def grouped_quantiles(
         fn(F.col(value_col), q).alias(f"p{int(q * 100)}") for q in quantiles
     ] + [F.count(F.lit(1)).alias("n")]
     return df.groupBy(strata_col).agg(*aggs)
-
-
-def mix_corpora(
-    sources: dict[str, DataFrame],
-    weights: dict[str, float],
-    target_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    token_col: str | None = None,
-    seed: str = "mix",
-) -> DataFrame:
-    """Deterministic multi-source corpus mixing: pick documents from
-    each source so the mixture's expected token mass hits
-    ``target_tokens`` split by (normalized) ``weights`` — the
-    data-mixture stage every pretraining pipeline runs between curation
-    and packing. A source whose weighted share exceeds its size is
-    UPSAMPLED (epochs): per-doc ``n_repeats = floor(rate) + Bernoulli
-    (frac(rate))`` with rate = share/source_tokens, so rate 2.3 means
-    every doc twice plus a 0.3-probability third copy.
-
-    The Bernoulli draw is ``md5(seed:source:id)`` mapped to [0, 1) —
-    a pure function of the row, so the sampled multiset is identical on
-    any engine, partitioning, or rerun (the :func:`deterministic_split`
-    shared-hash rule), and disjoint seeds give independent mixtures.
-
-    Returns ``(source, id, n_tokens, n_repeats)`` with ``n_repeats >=
-    1`` rows only; downstream explodes repeats with
-    ``F.explode(F.sequence(F.lit(1), F.col("n_repeats")))``.
-
-    Scale shape: per source, one map-side-combinable global SUM sizes
-    the rate (a scalar to the driver — same cost class as the parquet
-    row count every planner already does), then the sample itself is a
-    ZERO-SHUFFLE projection + filter over the source. Nothing joins,
-    nothing sorts; the union is plan-level only."""
-    wsum = float(sum(weights[name] for name in sources))
-    out = None
-    for name, df in sources.items():
-        if token_col is None:
-            ntok = F.size(
-                F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-            ).cast("long")
-        else:
-            ntok = F.col(token_col).cast("long")
-        base = df.select(
-            F.col(id_col).cast("string").alias("id"), ntok.alias("n_tokens")
-        )
-        total = base.agg(F.sum("n_tokens")).collect()[0][0] or 0
-        if total == 0:
-            continue
-        rate = (target_tokens * weights[name] / wsum) / float(total)
-        # 15 hex digits = 60 uniform bits; exactly replicable anywhere
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.lit(seed), F.lit(name), F.col("id"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("double")
-            / F.lit(float(1 << 60))
-        )
-        import math
-
-        whole = int(math.floor(rate))
-        frac = rate - whole
-        picked = (
-            base.select(
-                F.lit(name).alias("source"),
-                "id",
-                "n_tokens",
-                (F.lit(whole) + (u < F.lit(frac)).cast("int")).alias("n_repeats"),
-            )
-            .filter(F.col("n_repeats") >= 1)
-        )
-        out = picked if out is None else out.unionByName(picked)
-    if out is None:
-        raise ValueError("mix_corpora: every source has zero tokens")
-    return out

@@ -1,11 +1,8 @@
 """Pure-numpy codecs for media containers: 24-bit BMP, binary PPM (P6),
-PCM-16 WAV, PNG (via stdlib zlib), and baseline JPEG
-(:mod:`cli_spark.ops.jpeg_codec`) — no external codec library.
+PCM-16 WAV and PNG (via stdlib zlib) — no external codec library.
 
-These give :mod:`cli_spark.ops.multimodal` REAL decode / resize /
-frame-sample paths with zero new dependencies — the remaining
-compressed formats (MP3/H.264) still raise ``NotImplementedError``
-because their codec licenses/libraries are absent from this image. The
+These give :mod:`cli_spark.ops.multimodal`'s decode battery (q40) REAL
+decode / resize / frame-split paths with zero new dependencies. The
 reference CLI has no media path at all; this exists for the
 training-data-pipeline side of the engine (multimodal columns over
 Iceberg binary columns), where uncompressed intermediates are the
@@ -328,18 +325,6 @@ def decode_png(blob: bytes) -> np.ndarray:
     return rec.reshape(height, width, ch).copy()
 
 
-def to_rgb(arr: np.ndarray) -> np.ndarray:
-    """Normalize any decode_png output to (h, w, 3) RGB: grayscale is
-    broadcast, alpha channels are dropped."""
-    if arr.ndim == 2:
-        return np.repeat(arr[:, :, None], 3, axis=2)
-    if arr.shape[2] == 2:  # gray + alpha
-        return np.repeat(arr[:, :, :1], 3, axis=2)
-    if arr.shape[2] == 4:  # RGBA
-        return arr[:, :, :3].copy()
-    return arr
-
-
 # ---------------------------------------------------------------- transforms
 
 
@@ -350,40 +335,3 @@ def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     ys = np.minimum(((np.arange(height) + 0.5) * h / height).astype(np.int64), h - 1)
     xs = np.minimum(((np.arange(width) + 0.5) * w / width).astype(np.int64), w - 1)
     return arr[ys[:, None], xs[None, :]]
-
-
-def image_features(arr: np.ndarray, grid: int = 4) -> np.ndarray:
-    """(h, w, 3) → grid×grid mean-luma features in [0, 1] (dim grid²):
-    a deterministic, resolution-invariant thumbnail signature."""
-    luma = arr.astype(np.float32) @ np.asarray([0.299, 0.587, 0.114], dtype=np.float32)
-    h, w = luma.shape
-    ys = (np.arange(h) * grid) // max(h, 1)
-    xs = (np.arange(w) * grid) // max(w, 1)
-    sums = np.zeros((grid, grid), dtype=np.float64)
-    counts = np.zeros((grid, grid), dtype=np.int64)
-    np.add.at(sums, (ys[:, None], xs[None, :]), luma)
-    np.add.at(counts, (ys[:, None], xs[None, :]), 1)
-    return (sums / np.maximum(counts, 1) / 255.0).ravel().astype(np.float32)
-
-
-def audio_features(samples: np.ndarray, bands: int = 16) -> np.ndarray:
-    """1-D PCM → per-band RMS energy in [0, 1] over `bands` equal time
-    windows (a bandwidth-cheap loudness envelope)."""
-    n = len(samples)
-    if n == 0:
-        return np.zeros(bands, dtype=np.float32)
-    x = (samples.astype(np.float64) / 32768.0) ** 2
-    edges = (np.arange(bands + 1) * n) // bands
-    sums = np.add.reduceat(x, edges[:-1])
-    widths = np.maximum(np.diff(edges), 1)
-    return np.sqrt(sums / widths).astype(np.float32)
-
-
-# ---------------------------------------------------------------- JPEG
-# baseline DCT codec lives in its own module (entropy coder + tables);
-# re-exported here so the multimodal dispatch sees one codec namespace.
-from .jpeg_codec import (  # noqa: E402,F401
-    JpegUnsupportedError,
-    decode_jpeg,
-    encode_jpeg,
-)

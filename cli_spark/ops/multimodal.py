@@ -1,34 +1,15 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata structs.
 
-The Spark-side machinery — schemas, partitioning, Arrow batch shapes,
-``mapInPandas`` UDF signatures — is real and tested. Decode comes in
-two tiers:
-
-- **Real decoders** (``decode_stub=False``) for 24-bit BMP, binary
-  PPM (P6, incl. concatenated-P6 "video"), PCM-16 WAV, and PNG
-  (stdlib ``zlib`` inflate + vectorized un-filtering) — via the
-  pure-numpy codecs in :mod:`cli_spark.ops.media_codecs`. No new
-  dependencies.
-- **Baseline JPEG** decode/encode (pure-numpy DCT + Huffman,
-  :mod:`cli_spark.ops.jpeg_codec`) joins the real set.
-- **Deterministic stubs** (``decode_stub=True``, the default) for
-  everything else: the codec libraries for MP3/H.264
-  (ffmpeg/librosa) are not in this container, so those blobs
-  under ``decode_stub=False`` raise ``NotImplementedError``.
-  Swapping in a real codec changes only the per-blob decode dispatch,
-  never the pipeline.
-
 Ops:
-- :func:`attach_metadata`   binary → (n_bytes, sha256, magic sniff)
-- :func:`decode_features`   binary → fixed-dim float feature vector
-- :func:`resize_images`     binary → binary (nearest-neighbor for BMP/PPM/PNG)
-- :func:`sample_frames`     binary "video" → N frame rows (UDTF-shaped explode)
+- :func:`binarize`              text column → opaque ``blob`` column
+- :func:`attach_metadata`       binary → (n_bytes, sha256, magic sniff)
+- :func:`media_decode_battery`  per-id synthetic media pushed through every
+  real codec in :mod:`cli_spark.ops.media_codecs` (PNG, BMP, PPM, WAV)
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -37,19 +18,6 @@ from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     import pandas as pd
-
-FEATURE_DIM = 16
-
-META_SCHEMA = "id long, n_bytes long, sha256 string, magic string"
-FEAT_SCHEMA = f"id long, features array<float>"
-FRAME_SCHEMA = "id long, frame_index int, frame_bytes binary"
-
-MAGIC = {
-    b"\x89PN": "png",
-    b"\xff\xd8\xff": "jpeg",
-    b"RIF": "riff",
-    b"ID3": "mp3",
-}
 
 
 def binarize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -71,95 +39,6 @@ def attach_metadata(blobs: DataFrame) -> DataFrame:
         F.sha2("blob", 256).alias("sha256"),
         F.hex(F.substring("blob", 1, 3)).alias("magic"),
     )
-
-
-def decode_features(blobs: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """binary → FEATURE_DIM float vector via Arrow-batched mapInPandas.
-
-    Stub: deterministic per-blob pseudo-features from the sha256 digest
-    (so downstream ANN / dedup stages exercise real distributions).
-    Real decoders drop in by replacing `_featurize`.
-    """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from . import media_codecs as mc
-
-        def _featurize(blob: bytes) -> list[float]:
-            if not decode_stub:
-                # real decode for the uncompressed containers
-                if blob[:2] == b"BM":
-                    return mc.image_features(mc.decode_bmp(blob), grid=4).tolist()
-                if blob[:2] == b"P6":
-                    return mc.image_features(mc.decode_ppm(blob), grid=4).tolist()
-                if blob[:8] == b"\x89PNG\r\n\x1a\n":
-                    return mc.image_features(mc.to_rgb(mc.decode_png(blob)), grid=4).tolist()
-                if blob[:3] == b"\xff\xd8\xff":
-                    return mc.image_features(mc.to_rgb(mc.decode_jpeg(blob)), grid=4).tolist()
-                if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-                    _, pcm = mc.decode_wav(blob)
-                    return mc.audio_features(pcm, bands=FEATURE_DIM).tolist()
-                raise NotImplementedError(
-                    "MP3/H.264 decode requires codec libs absent from "
-                    "this image (real paths: BMP / PPM / PNG / JPEG / PCM WAV)"
-                )
-            d = hashlib.sha256(blob).digest()
-            return [
-                int.from_bytes(d[2 * i : 2 * i + 2], "big") / 65535.0
-                for i in range(FEATURE_DIM)
-            ]
-
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "features": pdf["blob"].map(_featurize),
-                }
-            )
-            yield out
-
-    return blobs.mapInPandas(batches, schema=FEAT_SCHEMA)
-
-
-def resize_images(
-    blobs: DataFrame, width: int = 64, height: int = 64, decode_stub: bool = True
-) -> DataFrame:
-    """binary → binary resize. Real nearest-neighbor resample for
-    BMP/PPM/PNG (``decode_stub=False``); the stub keeps bytes and records
-    target dims (the Arrow binary-in/binary-out contract)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from . import media_codecs as mc
-
-        def _resize(blob: bytes) -> bytes:
-            if blob[:2] == b"BM":
-                return mc.encode_bmp(mc.resize_nearest(mc.decode_bmp(blob), width, height))
-            if blob[:2] == b"P6":
-                return mc.encode_ppm(mc.resize_nearest(mc.decode_ppm(blob), width, height))
-            if blob[:8] == b"\x89PNG\r\n\x1a\n":
-                return mc.encode_png(mc.resize_nearest(mc.decode_png(blob), width, height))
-            if blob[:3] == b"\xff\xd8\xff":
-                return mc.encode_jpeg(
-                    mc.resize_nearest(mc.to_rgb(mc.decode_jpeg(blob)), width, height)
-                )
-            raise NotImplementedError("MP3/H.264 resize requires codec libs absent from this image")
-
-        for pdf in it:
-            out = pdf["blob"] if decode_stub else pdf["blob"].map(_resize)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "blob": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return blobs.mapInPandas(batches, schema="id long, blob binary, width int, height int")
 
 
 MEDIA_BATTERY_SCHEMA = (
@@ -229,62 +108,3 @@ def media_decode_battery(df: DataFrame, id_col: str = "id") -> DataFrame:
             yield pd.DataFrame([row(int(i)) for i in pdf["id"]], columns=cols)
 
     return ids_df.mapInPandas(batches, schema=MEDIA_BATTERY_SCHEMA)
-
-
-def sample_frames(
-    blobs: DataFrame, n_frames: int = 4, decode_stub: bool = True
-) -> DataFrame:
-    """'video' → N frames (UDTF-shaped: one input row → n output rows).
-
-    Real path (``decode_stub=False``): concatenated-P6 containers are
-    split on their embedded headers and n_frames are sampled evenly
-    (each re-encoded as a standalone PPM); WAV audio is cut into
-    n_frames equal PCM windows (each a standalone WAV). The stub slices
-    the blob into n_frames byte windows — the explode shape, schema,
-    and batch iteration are the same contract either way."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        import numpy as np
-
-        from . import media_codecs as mc
-
-        def _real_frames(blob: bytes) -> list[bytes]:
-            if blob[:2] == b"P6":
-                frames = mc.split_ppm_frames(blob)
-                take = np.linspace(0, len(frames) - 1, min(n_frames, len(frames)))
-                return [mc.encode_ppm(frames[i]) for i in take.astype(int)]
-            if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-                sr, pcm = mc.decode_wav(blob)
-                edges = (np.arange(n_frames + 1) * len(pcm)) // n_frames
-                return [
-                    mc.encode_wav(pcm[edges[i] : edges[i + 1]], sr)
-                    for i in range(n_frames)
-                ]
-            raise NotImplementedError("compressed-video frame sampling requires ffmpeg")
-
-        for pdf in it:
-            if not decode_stub:
-                rows = [
-                    (i, j, fb)
-                    for i, blob in zip(pdf["id"], pdf["blob"])
-                    for j, fb in enumerate(_real_frames(blob))
-                ]
-                yield pd.DataFrame(rows, columns=["id", "frame_index", "frame_bytes"])
-                continue
-            # vectorized explode: repeat ids/blobs n_frames times, slice
-            # each blob by its per-row stride — no per-row Python loop
-            ids = pdf["id"].to_numpy().repeat(n_frames)
-            blobs_rep = pdf["blob"].to_numpy().repeat(n_frames)
-            idx = np.tile(np.arange(n_frames, dtype=np.int32), len(pdf))
-            steps = np.maximum(
-                1, pdf["blob"].map(len).to_numpy() // n_frames
-            ).repeat(n_frames)
-            lo = idx * steps
-            frames = [b[l : l + s] for b, l, s in zip(blobs_rep, lo, steps)]
-            yield pd.DataFrame(
-                {"id": ids, "frame_index": idx, "frame_bytes": frames}
-            )
-
-    return blobs.mapInPandas(batches, schema=FRAME_SCHEMA)

@@ -3,11 +3,6 @@
 - :func:`cosine_topk`   brute-force top-k — the exact baseline. Dot
   products are computed JVM-side with ``F.aggregate``/``zip_with`` in a
   fixed left-to-right fold (deterministic doubles, oracle-comparable).
-- :func:`lsh_topk`      random-hyperplane LSH: sign-bit signatures from
-  a deterministic seeded plane matrix applied in ONE Arrow kernel
-  (``mapInArrow`` matmul — O(bits×dim) numpy work per row instead of
-  O(bits×dim) Catalyst expression NODES, which blow up the plan at
-  dim 768), probe by bucket equi-join, exact re-rank inside buckets.
 - :func:`ivf_topk`      real IVF: deterministic seeded centroids
   (optionally refined with Lloyd rounds), corpus assigned to its argmax-
   cosine cell, queries probe their ``n_probe`` nearest cells, exact
@@ -28,15 +23,12 @@ from pyspark.sql.window import Window as W
 
 __all__ = [
     "cosine_topk",
-    "lsh_topk",
     "ivf_topk",
     "with_norm",
-    "hyperplane_buckets",
     "arrow_cosine",
     "seeded_centroids",
     "lloyd_round",
     "assign_cells",
-    "semantic_dedup",
 ]
 
 
@@ -78,62 +70,6 @@ def _flat_matrix(list_array):
     if n and not (widths == widths[0]).all():
         raise ValueError("embedding column has ragged row lengths")
     return flat[offsets[0] : offsets[-1]].reshape(n, -1).astype(np.float64)
-
-
-def _plane_matrix(bits: int, dim: int):
-    """Deterministic pseudo-random hyperplanes: per-plane md5-seeded
-    PCG64 normals — reproducible on any cluster, no driver state."""
-    import hashlib
-
-    import numpy as np
-
-    planes = np.empty((bits, dim))
-    for b in range(bits):
-        seed = int.from_bytes(
-            hashlib.md5(f"plane:{b}".encode()).digest()[:8], "little"
-        )
-        planes[b] = np.random.default_rng(seed).standard_normal(dim)
-    return planes
-
-
-def hyperplane_buckets(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    bits: int = 8,
-    out_col: str = "bucket",
-    dim: int | None = None,
-) -> DataFrame:
-    """Append a sign-bit LSH bucket column computed in one Arrow-batched
-    matmul kernel (the expression-tree version is O(bits×dim) Catalyst
-    nodes per signature — pathological at real embedding dims).
-
-    ``dim=None`` derives the dimension from the first Arrow batch inside
-    the kernel — no driver-side action (the planes are md5-seeded, so
-    every executor derives the identical matrix)."""
-    planes = _plane_matrix(bits, dim) if dim is not None else None
-    out_schema = _ddl_of(df) + f", {out_col} long"
-    vec_idx = df.columns.index(vec_col)
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        local_planes = planes
-        for batch in batches:
-            mat = _flat_matrix(batch.column(vec_idx))
-            if local_planes is None:
-                local_planes = _plane_matrix(bits, mat.shape[1])
-            proj = mat @ local_planes.T  # (n, bits)
-            bucket = ((proj > 0).astype(np.int64) << np.arange(bits, dtype=np.int64)).sum(
-                axis=1
-            )
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            arrays.append(pa.array(bucket, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=list(batch.schema.names) + [out_col]
-            )
-
-    return df.mapInArrow(kernel, out_schema)
 
 
 def arrow_cosine(
@@ -194,49 +130,6 @@ def cosine_topk(
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: bucket on hyperplane sign signature (Arrow
-    kernel), exact re-rank within the query's bucket. Recall is
-    bucket-bound; raise `bits` for selectivity; queries multi-probe all
-    Hamming-distance-1 buckets. ``dim=None`` is derived inside the
-    bucket kernels (seeded planes — identical on every executor), so
-    no driver action runs."""
-    q = hyperplane_buckets(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv", bits, dim=dim,
-    )
-    c = hyperplane_buckets(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv", bits, dim=dim,
-    )
-    # multi-probe: query also probes buckets at Hamming distance 1
-    probes = q.select(
-        "query_id", "qv",
-        F.explode(
-            F.array(F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(bits)])
-        ).alias("bucket"),
-    )
-    scored = arrow_cosine(
-        probes.join(c, "bucket").filter(F.col("query_id") != F.col("neighbor_id")),
-        "qv", "cv",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
@@ -396,162 +289,3 @@ def ivf_topk(
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding quantization
-# ---------------------------------------------------------------------------
-
-
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Per-vector symmetric int8 quantization: codes = round(v/scale) in
-    [-127, 127] with scale = max|v|/127 — 4x smaller at rest and on the
-    shuffle wire than float32 (the real 100 TB win: embedding columns
-    dominate training-corpus storage and ANN shuffle volume).
-
-    Cosine is invariant to per-vector positive scaling, so downstream
-    cosine ranking on the CODES equals ranking on scale*codes — the
-    only loss is rounding (≤ scale/2 per element, verified in
-    `test_ops`). One zero-shuffle Arrow kernel, fully vectorized."""
-    id_idx = df.columns.index(id_col)
-    vec_idx = df.columns.index(vec_col)
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            mat = _flat_matrix(batch.column(vec_idx))
-            amax = np.abs(mat).max(axis=1) if mat.size else np.zeros(0)
-            scale = np.where(amax > 0, amax / 127.0, 1.0).astype(np.float32)
-            codes = np.clip(
-                np.rint(mat / scale[:, None].astype(np.float64)), -127, 127
-            ).astype(np.int8)
-            n, d = codes.shape if codes.size else (0, 0)
-            offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d, type=pa.int32())
-            lst = pa.ListArray.from_arrays(offsets, pa.array(codes.ravel(), type=pa.int8()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_idx), lst, pa.array(scale, type=pa.float32())],
-                names=[id_col, "codes", "scale"],
-            )
-
-    return df.mapInArrow(kernel, f"{id_col} long, codes array<tinyint>, scale float")
-
-
-def dequantize_embeddings(
-    qdf: DataFrame, id_col: str = "vec_id", out_col: str = "embedding"
-) -> DataFrame:
-    """(id, codes, scale) → (id, float embedding): v̂ = scale * codes.
-    Columnar (zip-free: transform over the codes array), so quantized
-    tables plug straight back into every cosine/ANN operator."""
-    return qdf.select(
-        id_col,
-        F.transform(
-            F.col("codes"), lambda c: c.cast("float") * F.col("scale")
-        ).alias(out_col),
-    )
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup-style semantic deduplication
-# ---------------------------------------------------------------------------
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    tau: float = 0.6,
-    n_cells: int | None = None,
-    centroids: DataFrame | None = None,
-    lloyd_rounds: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell: int = 8192,
-    col_block: int = 1024,
-    exact_fold: bool = True,
-) -> DataFrame:
-    """Semantic (embedding-space) deduplication, SemDeDup-style (Abbas
-    et al. 2023, arXiv:2303.09540 — public method): k-means-cluster the
-    embedding space, then inside each cluster drop every document whose
-    cosine to any EARLIER (lower-id) member reaches ``tau``. "Earlier by
-    id regardless of that member's own keep flag" is the deterministic,
-    order-free variant: it is expressible as one EXISTS semi-join (the
-    DuckDB-oracle-checked formulation in q44's ``dup`` leg) and never
-    needs a sequential scan over the cluster.
-
-    Returns ``(id, cell_id, keep, max_cos_earlier, cell_overflow)`` —
-    one row per corpus vector. ``max_cos_earlier`` is NaN for each
-    cell's first member and for overflow rows.
-
-    Scale shape (the reason this beats pairwise near-dup at 100 TB):
-    the centroid table is tiny and broadcast; assignment is one
-    broadcast cross-score (`assign_cells`); the quadratic step runs as
-    ONE Arrow matmul kernel per cell (`applyInPandas`, O((N/k)²)·k ≈
-    O(N²/k) total with k = ceil(√N) cells by default — never corpus ×
-    corpus, and never per-row Python). Cells larger than ``max_cell``
-    dedup only their first ``max_cell`` members by id; the remainder
-    are kept un-deduped and flagged ``cell_overflow`` — the countable-
-    drop pattern of ``minhash_lsh_pairs``'s MAX_BUCKET (skew safety
-    valve, auditable instead of silent). The in-kernel matmul runs in
-    ``col_block`` column stripes so peak memory is max_cell × col_block
-    doubles, not max_cell².
-    """
-    if centroids is None:
-        if n_cells is None:
-            import math
-
-            # one metadata-cheap count sizes the TakeOrdered limit,
-            # same rule as the q44/q45 battery centroids
-            n_cells = int(math.ceil(math.sqrt(max(corpus.count(), 1))))
-        centroids = seeded_centroids(corpus, n_cells, id_col, vec_col)
-        for _ in range(lloyd_rounds):
-            centroids = lloyd_round(corpus, centroids, id_col, vec_col)
-    cells = assign_cells(corpus, centroids, id_col, vec_col, exact_fold=exact_fold)
-    member = corpus.join(cells.select(id_col, "cell_id"), id_col).select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col("cell_id").cast("long").alias("cell_id"),
-        F.col(vec_col).alias("v"),
-    )
-    schema = (
-        "id long, cell_id long, keep boolean, "
-        "max_cos_earlier double, cell_overflow boolean"
-    )
-
-    def kernel(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values("id").reset_index(drop=True)
-        n = len(pdf)
-        m = min(n, max_cell)
-        X = np.array(pdf["v"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0] = 1.0
-        Xn = X / norms[:, None]
-        max_cos = np.full(n, np.nan)
-        for a in range(1, m, col_block):
-            b = min(a + col_block, m)
-            # S[r, j] = cos(row r, row a+j) for r < b; a member may only
-            # match EARLIER members, so mask r >= a+j (the lower-incl-
-            # diagonal triangle of the [a:b) block) before the col-max
-            S = Xn[:b] @ Xn[a:b].T
-            blk = S[a:b, :]
-            blk[np.tril_indices(b - a)] = -np.inf
-            max_cos[a:b] = S.max(axis=0)
-        keep = np.ones(n, dtype=bool)
-        if m > 1:
-            keep[1:m] = max_cos[1:m] < tau
-        overflow = np.zeros(n, dtype=bool)
-        overflow[m:] = True
-        return pd.DataFrame(
-            {
-                "id": pdf["id"],
-                "cell_id": pdf["cell_id"],
-                "keep": keep,
-                "max_cos_earlier": max_cos,
-                "cell_overflow": overflow,
-            }
-        )
-
-    return member.groupBy("cell_id").applyInPandas(kernel, schema)

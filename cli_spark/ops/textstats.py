@@ -1,13 +1,13 @@
-"""Text analysis operators: language-ID (stopword n-gram heuristic),
-quality scoring, token counting (whitespace + BPE-ish regex),
-document fingerprinting. All columnar (codegen'd), no UDFs.
+"""Text analysis in one row-local pass (:func:`text_stats`): language-ID
+(stopword heuristic), quality scoring, token counting (whitespace +
+BPE-ish regex), document fingerprinting. All columnar (codegen'd), no UDFs.
 
 Every ratio divides exact integer intermediates so results are
 bit-identical across engines (oracle rule, cli_spark.queries)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
@@ -22,90 +22,17 @@ PUNCT_RE = "[.!?,;:]"
 MERSENNE31 = (1 << 31) - 1
 
 
-def _ws_tokens(text: Column) -> Column:
-    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
-
-
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, n_ws_tokens, n_bpe_tokens, n_chars): whitespace tokens vs a
-    BPE-ish lexer regex (letters runs | digit runs | single symbol)."""
-    text = F.col(text_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.size(_ws_tokens(text)).alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_RE), F.lit(0))).alias(
-            "n_bpe_tokens"
-        ),
-        F.length(text).alias("n_chars"),
-    )
-
-
-def language_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, <lang>_hits..., n_tokens, guessed_lang): stopword-hit counts
-    per language; guess = argmax hits with lexicographic tie-break."""
-    toks = _ws_tokens(F.lower(F.col(text_col)))
-    n_tokens = F.size(toks)
-    def hits(words: list[str]) -> Column:
-        # unary lambda only: F.filter feeds (elem, idx) to 2-arg lambdas,
-        # so a default-arg closure would capture the index column.
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    hit_cols = {
-        lang: hits(words).alias(f"{lang}_hits") for lang, words in STOPWORDS.items()
-    }
-    out = df.select(F.col(id_col).alias("id"), n_tokens.alias("n_tokens"), *hit_cols.values())
-    langs = sorted(STOPWORDS)
-    best = None
-    for lang in langs:
-        cond = True
-        for other in langs:
-            if other != lang:
-                op = (
-                    F.col(f"{lang}_hits") >= F.col(f"{other}_hits")
-                    if lang < other
-                    else F.col(f"{lang}_hits") > F.col(f"{other}_hits")
-                )
-                cond = op if cond is True else (cond & op)
-        best = F.when(cond, F.lit(lang)) if best is None else best.when(cond, F.lit(lang))
-    return out.withColumn("guessed_lang", best.otherwise(F.lit(langs[0])))
-
-
-def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, n_chars, n_tokens, avg_token_len, punct_ratio, stopword_ratio,
-    upper_ratio): the standard cheap quality heuristics."""
-    text = F.col(text_col)
-    toks = _ws_tokens(text)
-    lower_toks = _ws_tokens(F.lower(text))
-    all_stop = [w for ws in STOPWORDS.values() for w in ws]
-    n_tokens = F.size(toks)
-    n_chars = F.length(text)
-    n_punct = n_chars - F.length(F.regexp_replace(text, F.lit(PUNCT_RE), F.lit("")))
-    n_upper = n_chars - F.length(F.regexp_replace(text, F.lit("[A-Z]"), F.lit("")))
-    n_stop = F.size(F.filter(lower_toks, lambda t: t.isin(*all_stop)))
-    token_chars = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return df.select(
-        F.col(id_col).alias("id"),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        (token_chars / n_tokens).alias("avg_token_len"),
-        (n_punct / n_chars).alias("punct_ratio"),
-        (n_stop / n_tokens).alias("stopword_ratio"),
-        (n_upper / n_chars).alias("upper_ratio"),
-    )
-
-
 def text_stats(
     df: DataFrame,
     id_col: str,
     text_col: str,
     extra: dict[str, "callable"] | None = None,
 ) -> DataFrame:
-    """All four text-analysis operators in ONE row-local pass: language-ID
-    hits + guess, quality ratios, token counts, and the order-sensitive
-    fingerprint (computed as an in-row array fold instead of the
-    explode→groupBy in :func:`fingerprint` — zero shuffles total).
+    """Language-ID hits + guess, quality ratios, token counts and the
+    order-sensitive fingerprint in ONE row-local pass. The fingerprint is
+    the position-salted 32-bit token-hash sum mod 2^31-1, computed as an
+    in-row array fold (zero shuffles); two docs with the same token
+    multiset in a different order fingerprint differently.
 
     ``extra`` maps output-column name → (text Column → Column) factory,
     appended to the same projection — how q36 folds the real BPE
@@ -199,26 +126,3 @@ def text_stats(
                 cond = op if cond is True else (cond & op)
         best = F.when(cond, F.lit(lang)) if best is None else best.when(cond, F.lit(lang))
     return out.withColumn("guessed_lang", best.otherwise(F.lit(langs[0])))
-
-
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, fingerprint): position-salted 32-bit token-hash sum mod
-    2^31-1 — an order-sensitive document digest (two docs with the same
-    token multiset in a different order fingerprint differently)."""
-    toks = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos0", "token"),
-        )
-        .filter(F.col("token") != "")
-        .select("id", "token", (F.col("pos0") + 1).alias("pos"))  # 1-based
-    )
-    h32 = F.conv(
-        F.substring(F.md5(F.format_string("%s@%d", F.col("token"), F.col("pos"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return (
-        toks.groupBy("id")
-        .agg(F.pmod(F.sum(h32), F.lit(MERSENNE31)).alias("fingerprint"))
-    )

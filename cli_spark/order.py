@@ -64,47 +64,3 @@ def global_row_number(
         local.withColumn(rn_col, _offset(offsets) + F.col("_lidx"))
         .drop("_pid", "_lidx")
     )
-
-
-def global_prefix_sum(
-    df: DataFrame,
-    keys: list[str],
-    val_col: str,
-    out_col: str = "cumsum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Adds a running total of ``val_col`` over the global order given by
-    ``keys`` (unique per row) — the distributed replacement for
-    ``SUM(v) OVER (ORDER BY keys ROWS UNBOUNDED PRECEDING)``, which
-    collapses to one task. Same partition-offset technique as
-    :func:`global_row_number`: per-partition local cumsum + driver-side
-    per-partition totals (tiny) → offset map."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *[F.col(k) for k in keys]).sortWithinPartitions(
-        *[F.col(k) for k in keys]
-    )
-    with_pid = parted.withColumn("_pid", F.spark_partition_id())
-    wloc = (
-        W.partitionBy("_pid")
-        .orderBy(*[F.col(k) for k in keys])
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = with_pid.withColumn(
-        "_lcum", F.sum(F.col(val_col).cast("long")).over(wloc)
-    ).persist()
-    totals = {
-        r["_pid"]: r["tot"]
-        for r in local.groupBy("_pid")
-        .agg(F.sum(F.col(val_col).cast("long")).alias("tot"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid] or 0
-    # same pinning contract as global_row_number: offsets are baked into
-    # the plan against THIS pid assignment — never auto-release `local`
-    return (
-        local.withColumn(out_col, _offset(offsets) + F.col("_lcum"))
-        .drop("_pid", "_lcum")
-    )

@@ -898,7 +898,7 @@ SIMHASH_SQL = (
 
 def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprint: per-bit sign aggregation of token hashes
-    (16-bit oracle flavor; 64-bit engine flavor in ops.dedup.simhash)."""
+    (16 bits, value-checked against the DuckDB oracle)."""
     toks = doc_tokens(spark, sf_dir).select("doc_id", "token").distinct()
     h = F.pmod(md5_int(F.col("token")), F.lit(P31))
     sums = [
@@ -924,7 +924,7 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="MinHash signatures (dedup sketch, north-star J4: shingle → "
     "K universal-hash min-aggregates, one shuffle) joined with the "
     "SimHash fingerprint (per-bit sign aggregation of token hashes; "
-    "16-bit oracle flavor, 64-bit engine flavor in ops.dedup.simhash) — "
+    "16 bits) — "
     "the two per-document near-dup sketches in one row, both "
     "value-checked.",
 )
@@ -1119,9 +1119,8 @@ DECON_N = 5
 
 
 def doc_ngram_hashes(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    """(doc_id, h): md5-hashed word n-grams (oracle-parity flavor of
-    ops.dedup.shingles; docs with <n tokens drop, mirrored in SQL by the
-    NULL-propagating LEAD concat). Full 60-bit hash — NOT folded into
+    """(doc_id, h): md5-hashed word n-grams (docs with <n tokens drop,
+    mirrored in SQL by the NULL-propagating LEAD concat). Full 60-bit hash — NOT folded into
     the Mersenne-31 domain like the MinHash shingles: a decontamination
     join must not manufacture false hits from hash collisions (already
     observable at sf0.01 in 31 bits)."""
@@ -1169,8 +1168,7 @@ DECON_SQL = f"""
     doc="Train/test decontamination: training docs sharing any word "
     "5-gram with the benchmark split — broadcast the (tiny) benchmark "
     "gram set against a zero-pre-shuffle train-side explode; the only "
-    "full shuffle is the final per-doc agg over the (rare) hits. "
-    "Library form: ops.dedup.decontaminate.",
+    "full shuffle is the final per-doc agg over the (rare) hits.",
 )
 def q64_decontaminate(spark, sf_dir):
     grams = doc_ngram_hashes(spark, sf_dir, DECON_N)
@@ -1787,10 +1785,8 @@ _CELLS_SQL = f"""
     "near-orthogonal synthetics; tau sits inside their observed cosine "
     "range so the leg carries rows at every SF) — a vector is a dup iff an "
     "EARLIER same-cell member reaches tau (drop-set + max evidence "
-    "cosine per dropped id); ops.simsearch.semantic_dedup implements "
-    "the same rule as one Arrow matmul kernel per cell (the 100 TB "
-    "path, differentially tested in test_ops), this leg derives it "
-    "from the already-verified pair table so the oracle comparison is "
+    "cosine per dropped id); the leg derives it from the "
+    "already-verified pair table so the oracle comparison is "
     "float-exact.",
 )
 def q44_embedding_neardup(spark, sf_dir):
@@ -2254,7 +2250,7 @@ def q53_format_roundtrips(spark, sf_dir):
 
 
 def _q56_oracle() -> str:
-    """Unroll the fixed-k hash refinement of compare.canonical_bnode_labels
+    """Unroll the fixed-k hash refinement of compare.canonicalize_bnodes
     in DuckDB SQL: per round, label = md5 of the '|'-joined sorted multiset
     of dir:pred:neighbor-signature strings (string_agg ORDER BY == Spark's
     sort_array(collect_list)); round 0 masks bnode neighbors as '?'."""
@@ -2360,9 +2356,8 @@ def q56_bnode_canonical(spark, sf_dir):
     FROM events
     GROUP BY 1, 2
     """,
-    doc="Tumbling event-time windows (§2.9): the batch twin of the "
-    "Structured Streaming path (cli_spark.streaming.windowed_event_counts "
-    "runs the same plan over readStream with a watermark).",
+    doc="Tumbling event-time windows (§2.9): 5-minute event-time "
+    "buckets per event type, counted in one groupBy on F.window.",
 )
 def q57_tumbling_windows(spark, sf_dir):
     ev = load(spark, sf_dir, "events")

@@ -683,6 +683,7 @@ def test_cli_reference_option_spellings(spark, tmp_path):
     --opt.max-*-table-size, --opt.rdf-star=false, --delimited=false;
     RdfValidateSpec: --compare-ordered=true) — a switching user's
     scripts run unchanged."""
+    from cli_spark import jelly as J
     from cli_spark import jellywire as JW
 
     nq = str(tmp_path / "in.nq")
@@ -713,6 +714,10 @@ def test_cli_reference_option_spellings(spark, tmp_path):
     assert main(["rdf", "to-jelly", nq, "--to", nd, "--delimited=false"]) == 0
     assert main(["rdf", "validate", nd, "--delimited", "false"]) == 0
     assert main(["rdf", "validate", nd, "--delimited", "true"]) == 1
+    # options-from-file reads a non-delimited file as its one frame
+    with open(nd, "rb") as fh:
+        want = JW.decode_frame(fh.read())[0]
+    assert J.options_from_file(nd).physical_type == want["physical"] == J.PHYSICAL_QUADS
 
     # --compare-ordered=true spelling on validate
     assert main([
@@ -1309,6 +1314,39 @@ def test_cli_inspect_empty_frames(spark, tmp_path):
             ], (label, size)
         per = _inspect_yaml([str(path), "--per-frame"], tmp_path)
         assert [f["row_count"] for f in per] == [len(f) for f in frames]
+
+
+@pytest.mark.parametrize(
+    "odd_row",
+    [b"\x0a\x03\xa2\x01\x00", b"\x0a\x00"],
+    ids=["unknown_kind_20", "empty_row"],
+)
+def test_cli_inspect_odd_row_in_first_frame(spark, tmp_path, odd_row):
+    """The declared options come from the options rows alone, so a row
+    of an unknown kind or an empty row in frame 0 gives the same
+    aggregate report, in count mode and with --size, as the same row in
+    frame 1."""
+    import yaml
+
+    from cli_spark import jellywire as JW
+
+    opts = {"kind": JW.K_OPTIONS, "physical": 1, "logical": 1,
+            "version": 1, "max_name": 8}
+    name = {"kind": JW.K_NAME, "id": 1, "value": "http://e/a"}
+    a = {"k": 0, "pid": 0, "nid": 1}
+    tri = {"kind": JW.K_TRIPLE, "s": a, "p": a, "o": a}
+    head, tail = JW.encode_frame([opts, name, tri]), JW.encode_frame([tri])
+    reports = {}
+    for at, frames in (("frame0", [head + odd_row, tail]), ("frame1", [head, tail + odd_row])):
+        path = tmp_path / f"{at}.jelly"
+        path.write_bytes(JW.write_delimited(frames))
+        for size in ([], ["--size"]):
+            rpt = str(tmp_path / "report.yaml")
+            assert main(["rdf", "inspect", str(path), *size, "--to", rpt]) == 0, (at, size)
+            with open(rpt) as fh:
+                reports[at, tuple(size)] = yaml.safe_load(fh)
+    for size in ((), ("--size",)):
+        assert reports["frame0", size] == reports["frame1", size], size
 
 
 def test_cli_inspect_job_budget(spark, tmp_path):

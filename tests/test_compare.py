@@ -1,6 +1,6 @@
 """RDF compare battery: ordered positional compare with bnode bijection
 (J1), unordered per-graph isomorphism via hash refinement (J2),
-containment (J3), P/R scoring — mirrors the reference's validate specs
+containment (J3) — mirrors the reference's validate specs
 (OrderedRdfCompare / UnorderedRdfCompare)."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from cli_spark.compare import (
     canonicalize_bnodes,
     containment,
     ordered_compare,
-    precision_recall,
     unordered_compare,
 )
 
@@ -96,13 +95,11 @@ def test_canonicalization_distinguishes_structure(spark):
     assert not unordered_compare(chain, star).equal
 
 
-def test_containment_and_pr(spark):
+def test_containment(spark):
     e = df(spark, [(1, "kg:a", "kg:p", "kg:b"), (2, "kg:a", "kg:p", "kg:c")])
     a = df(spark, [(1, "kg:a", "kg:p", "kg:b")])
     assert containment(e, a) == 1
     assert containment(a, e) == 0
-    pr = precision_recall(e, a)
-    assert pr["precision"] == 1.0 and pr["recall"] == 0.5
 
 
 def test_canonical_labels_deterministic(spark):

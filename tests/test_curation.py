@@ -311,15 +311,14 @@ def test_bpe_encoder_equals_rank_order_replay():
         assert encode_word(w, ranks) == rank_order(w), w
 
 
-def test_bpe_train_on_spark_sample_and_pack_integration(spark):
-    """bpe_train over a Spark corpus sample (one groupBy) learns the
-    same table as the pure loop on the same counts; pack_sequences_nextfit
-    accepts the BPE counts (the point of subword packing) and every bin
+def test_bpe_count_col_feeds_nextfit_pack(spark):
+    """pack_sequences_nextfit accepts the live BPE counts from
+    bpe_count_col (the point of subword packing): every document lands
+    in a bin, each count equals the per-word encoder's, and every bin
     respects capacity."""
     from collections import Counter
 
-    from cli_spark.ops.bpe import SEED_MERGES, bpe_count, bpe_train, bpe_train_counts
-    from cli_spark.ops.curation import pack_sequences_nextfit
+    from cli_spark.ops.bpe import SEED_MERGES, _ranks, bpe_count_col, encode_word
 
     texts = [
         "join hash row batch scan", "customer column filter small slow",
@@ -330,14 +329,14 @@ def test_bpe_train_on_spark_sample_and_pack_integration(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    learned = bpe_train(df, "text", n_merges=12)
-    wc = Counter(w for t in texts for w in t.split(" ") if w)
-    assert learned == bpe_train_counts(wc, 12)
-
-    counts = bpe_count(df, "doc_id", "text", SEED_MERGES)
-    packed = pack_sequences_nextfit(counts, "id", "bpe_tokens", max_len=16, n_shards=4)
+    counts = df.select("doc_id", bpe_count_col("text", SEED_MERGES).alias("bpe_tokens"))
+    packed = pack_sequences_nextfit(counts, "doc_id", "bpe_tokens", max_len=16, n_shards=4)
     rows = packed.collect()
     assert {r["id"] for r in rows} == set(range(len(texts)))
+    ranks = _ranks(SEED_MERGES)
+    for r in rows:
+        want = sum(len(encode_word(w, ranks)) for w in texts[r["id"]].split(" "))
+        assert r["n_tokens"] == want
     fills = Counter()
     for r in rows:
         fills[(r["shard"], r["bin"])] += r["n_tokens"]
@@ -345,21 +344,6 @@ def test_bpe_train_on_spark_sample_and_pack_integration(spark):
         # capacity holds unless a single oversized doc owns the bin
         members = [r for r in rows if (r["shard"], r["bin"]) == (shard, b)]
         assert tot <= 16 or len(members) == 1
-
-
-def test_bpe_train_max_words_cap_logged(spark, capsys):
-    """The vocabulary cap drops low-count words loudly (no silent
-    caps) and keeps training deterministic on the survivors."""
-    from cli_spark.ops.bpe import bpe_train, bpe_train_counts
-
-    rows = [(i, f"w{i:03d} common common") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    learned = bpe_train(df, "text", n_merges=4, max_words=5)
-    outerr = capsys.readouterr()
-    assert "capped at 5 words" in outerr.out
-    # survivors: 'common' (40) + first 4 w-words by (count desc, word asc)
-    wc = {"common": 40, "w000": 1, "w001": 1, "w002": 1, "w003": 1}
-    assert learned == bpe_train_counts(wc, 4)
 
 
 def test_bpe_sql_oracle_differential():
@@ -419,106 +403,3 @@ def test_bpe_sql_oracle_differential():
     for i, t in enumerate(texts):
         kern = sum(len(encode_word(w, ranks)) for w in t.split(" "))
         assert oracle[i] == kern, (t, oracle[i], kern)
-
-
-# ---------------------------------------------------------------------------
-# corpus mixing
-# ---------------------------------------------------------------------------
-
-
-def _mix_reference(rows_by_source, weights, target, seed="mix"):
-    """Exact Python replication of mix_corpora's md5 rule."""
-    import hashlib
-    import math
-
-    wsum = sum(weights[s] for s in rows_by_source)
-    expect = {}
-    for name, rows in rows_by_source.items():
-        total = sum(n for _, n in rows)
-        if total == 0:
-            continue
-        rate = (target * weights[name] / wsum) / total
-        whole = int(math.floor(rate))
-        frac = rate - whole
-        for rid, ntok in rows:
-            h = hashlib.md5(f"{seed}:{name}:{rid}".encode()).hexdigest()
-            u = int(h[:15], 16) / float(1 << 60)
-            n_rep = whole + (1 if u < frac else 0)
-            if n_rep >= 1:
-                expect[(name, str(rid))] = (ntok, n_rep)
-    return expect
-
-
-def test_mix_corpora_matches_reference_and_upsamples(spark):
-    from cli_spark.ops.curation import mix_corpora
-
-    big = [(i, "w " * 20) for i in range(200)]      # 200 docs x 20 tokens
-    small = [(i, "x " * 10) for i in range(20)]     # 20 docs x 10 tokens
-    dfs = {
-        "web": spark.createDataFrame(big, "doc_id long, text string"),
-        "code": spark.createDataFrame(small, "doc_id long, text string"),
-    }
-    weights = {"web": 0.5, "code": 0.5}
-    target = 800  # code's share (400) = 2x its 200 tokens -> upsampled
-    got = {
-        (r.source, r.id): (r.n_tokens, r.n_repeats)
-        for r in mix_corpora(dfs, weights, target).collect()
-    }
-    rows_by_source = {
-        "web": [(i, 20) for i in range(200)],
-        "code": [(i, 10) for i in range(20)],
-    }
-    expect = _mix_reference(rows_by_source, weights, target)
-    assert got == expect
-    # upsampling really happened: every code doc at least twice
-    assert all(v[1] >= 2 for (s, _), v in got.items() if s == "code")
-    # web downsampled: far fewer than 200 docs, none repeated
-    web = {k: v for k, v in got.items() if k[0] == "web"}
-    assert 0 < len(web) < 120 and all(v[1] == 1 for v in web.values())
-    # sampled token mass lands near the target split (hash uniformity)
-    web_tok = sum(v[0] * v[1] for v in web.values())
-    code_tok = sum(v[0] * v[1] for (s, _), v in got.items() if s == "code")
-    assert abs(web_tok - 400) < 150 and abs(code_tok - 400) < 150
-
-
-def test_mix_corpora_deterministic_under_repartition(spark):
-    from cli_spark.ops.curation import mix_corpora
-
-    docs = [(i, ("tok " * (5 + i % 7))) for i in range(100)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(
-        (r.source, r.id, r.n_repeats)
-        for r in mix_corpora({"s": df}, {"s": 1.0}, 300).collect()
-    )
-    b = sorted(
-        (r.source, r.id, r.n_repeats)
-        for r in mix_corpora({"s": df.repartition(13)}, {"s": 1.0}, 300).collect()
-    )
-    assert a == b and len(a) > 0
-
-
-def test_mix_corpora_token_col_and_zero_token_source(spark):
-    import pytest as _pytest
-
-    from cli_spark.ops.curation import mix_corpora
-
-    df = spark.createDataFrame(
-        [(i, "ignored", 50) for i in range(40)],
-        "doc_id long, text string, bpe_tokens long",
-    )
-    got = {
-        r.id: r.n_tokens
-        for r in mix_corpora(
-            {"s": df}, {"s": 1.0}, 1000, token_col="bpe_tokens"
-        ).collect()
-    }
-    assert got and all(v == 50 for v in got.values())  # counts from the column
-
-    empty = spark.createDataFrame([(1, "")], "doc_id long, text string")
-    # a zero-token source contributes nothing; all-zero raises
-    both = mix_corpora({"s": df, "e": empty}, {"s": 1.0, "e": 1.0},
-                       1000, token_col=None)
-    # "s" uses whitespace counts here ("ignored" = 1 token each)
-    assert {r.source for r in both.collect()} == {"s"}
-    with _pytest.raises(ValueError):
-        mix_corpora({"e": empty}, {"e": 1.0}, 1000)

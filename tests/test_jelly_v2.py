@@ -298,22 +298,23 @@ def test_append_mode_sink(spark, tmp_path):
 
 
 def test_logical_type_iri_mapping():
-    """F6 camelCase↔SNAKE + P12 IRI↔enum."""
-    assert J.snake_to_camel("FLAT_TRIPLES") == "flatTriples"
+    """F6 camelCase → SNAKE + P12 IRI → enum."""
     assert J.camel_to_snake("flatTriples") == "FLAT_TRIPLES"
-    for code in (1, 2, 3, 4):
-        iri = J.logical_type_iri(code)
-        assert iri.startswith(J.STAX_BASE)
-        assert J.logical_type_from_iri(iri) == code
+    stax = "https://w3id.org/stax/ontology#"
     # the ontology locals are singular (RdfJellySerializationOptions.
-    # scala:73-78 derives #flatQuadStream from FLAT_QUADS); the plural
-    # legacy spelling still resolves on input
-    assert J.logical_type_iri(2) == J.STAX_BASE + "flatQuadStream"
-    assert J.logical_type_iri(3) == J.STAX_BASE + "graphStream"
-    assert J.logical_type_from_iri(J.STAX_BASE + "flatQuadsStream") == 2
-    assert J.logical_type_iri(J.LOGICAL_UNSPECIFIED) is None
+    # scala:73-78 derives #flatQuadStream from FLAT_QUADS)
+    for local, code in (
+        ("flatTripleStream", 1),
+        ("flatQuadStream", 2),
+        ("graphStream", 3),
+        ("datasetStream", 4),
+    ):
+        assert J.logical_type_from_iri(stax + local) == code
+    # the plural legacy spelling still resolves on input
+    assert J.logical_type_from_iri(stax + "flatQuadsStream") == 2
+    assert J.logical_type_from_iri(stax + "datasetsStream") == 4
     with pytest.raises(ValueError):
-        J.logical_type_from_iri(J.STAX_BASE + "noSuchStream")
+        J.logical_type_from_iri(stax + "noSuchStream")
 
 
 def test_version_rejection(spark):

@@ -1,10 +1,9 @@
-"""Training-data operators: dedup family, similarity search, text
-stats, multimodal plumbing — correctness on constructed fixtures."""
+"""Training-data operators: similarity search, text stats, multimodal
+plumbing, span dedup — correctness on constructed fixtures."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from cli_spark.ops import dedup as D
 from cli_spark.ops import multimodal as MM
@@ -24,39 +23,6 @@ def docs(spark):
         (5, "short text"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string").cache()
-
-
-def test_exact_dedup(spark, docs):
-    out = {r.id: (r.survivor_id, r.n_copies) for r in D.exact_dedup(docs, "doc_id", "text").collect()}
-    assert out[0] == (0, 2) and out[1] == (0, 2)
-    assert out[2] == (2, 1)
-
-
-def test_minhash_near_dup(spark, docs):
-    pairs = {(r.left_id, r.right_id) for r in D.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).collect()}
-    assert (0, 1) in pairs  # exact dup certainly found
-    assert (0, 2) in pairs or (1, 2) in pairs  # near dup found
-    assert not any(3 in p or 4 in p for p in pairs)  # distinct docs unlinked
-
-
-def test_simhash_near_pairs(spark, docs):
-    fps = {r.id: r.simhash for r in D.simhash(docs, "doc_id", "text").collect()}
-    assert fps[0] == fps[1]  # same token set ⇒ identical fingerprint
-    near = {(r.left_id, r.right_id): r.hamming for r in
-            D.simhash_near_pairs(docs, "doc_id", "text", max_hamming=6).collect()}
-    assert (0, 1) in near and near[(0, 1)] == 0
-    assert (0, 3) not in near and (0, 4) not in near
-
-
-def test_ngram_jaccard(spark, docs):
-    pairs = spark.createDataFrame(
-        [(0, 1), (0, 2), (0, 3)], "left_id long, right_id long"
-    )
-    j = {(r.left_id, r.right_id): r.jaccard for r in
-         D.ngram_jaccard(docs, pairs, "doc_id", "text").collect()}
-    assert j[(0, 1)] == 1.0
-    assert 0.5 < j[(0, 2)] < 1.0
-    assert j[(0, 3)] < 0.05
 
 
 @pytest.fixture(scope="module")
@@ -82,17 +48,6 @@ def test_cosine_topk_exact(spark, vectors):
         assert [r.rnk for r in sorted(rs, key=lambda r: r.rnk)] == [1, 2, 3]
         sims = [r.cosine for r in sorted(rs, key=lambda r: r.rnk)]
         assert sims == sorted(sims, reverse=True)
-
-
-def test_lsh_topk_recall(spark, vectors):
-    exact = S.cosine_topk(vectors.filter("vec_id < 5"), vectors, k=3)
-    # dim passed explicitly: inference via .first() is a driver action
-    # per call — callers in composed pipelines should always pass it
-    approx = S.lsh_topk(vectors.filter("vec_id < 5"), vectors, k=3, bits=6, dim=8)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.6, recall  # multi-probe LSH on clustered data
 
 
 def test_ivf_topk_runs(spark, vectors):
@@ -128,20 +83,20 @@ def test_assign_cells_partitions_corpus(spark, vectors):
 
 
 def test_token_counts(spark, docs):
-    out = {r.id: r for r in T.token_counts(docs, "doc_id", "text").collect()}
+    out = {r.id: r for r in T.text_stats(docs, "doc_id", "text").collect()}
     assert out[5].n_ws_tokens == 2
     assert out[5].n_bpe_tokens == 2
     assert out[5].n_chars == len("short text")
 
 
 def test_language_scores(spark, docs):
-    out = {r.id: r for r in T.language_scores(docs, "doc_id", "text").collect()}
+    out = {r.id: r for r in T.text_stats(docs, "doc_id", "text").collect()}
     assert out[0].guessed_lang == "en" and out[0].en_hits > 0
     assert out[4].guessed_lang == "es" and out[4].es_hits > 0
 
 
 def test_quality_scores(spark, docs):
-    out = {r.id: r for r in T.quality_scores(docs, "doc_id", "text").collect()}
+    out = {r.id: r for r in T.text_stats(docs, "doc_id", "text").collect()}
     assert out[5].n_tokens == 2
     assert out[5].avg_token_len == 4.5  # "short"(5) "text"(4)
     assert 0 <= out[0].stopword_ratio <= 1
@@ -152,7 +107,7 @@ def test_fingerprint_order_sensitive(spark):
         [(0, "alpha beta gamma"), (1, "gamma beta alpha"), (2, "alpha beta gamma")],
         "doc_id long, text string",
     )
-    fp = {r.id: r.fingerprint for r in T.fingerprint(df, "doc_id", "text").collect()}
+    fp = {r.id: r.fingerprint for r in T.text_stats(df, "doc_id", "text").collect()}
     assert fp[0] == fp[2]
     assert fp[0] != fp[1]  # same multiset, different order
 
@@ -162,122 +117,8 @@ def test_multimodal_plumbing(spark, docs):
     meta = {r.id: r for r in MM.attach_metadata(blobs).collect()}
     assert meta[5].n_bytes == len("short text")
     assert len(meta[5].sha256) == 64
-    feats = {r.id: r.features for r in MM.decode_features(blobs).collect()}
-    assert all(len(v) == MM.FEATURE_DIM for v in feats.values())
-    assert feats[0] == feats[1]  # deterministic stub: same bytes, same features
-    frames = MM.sample_frames(blobs, n_frames=4).collect()
-    assert len(frames) == 6 * 4
-    resized = MM.resize_images(blobs, 32, 32).collect()
-    assert all(r.width == 32 for r in resized)
-
-
-def test_multimodal_stub_gate(spark, docs):
-    blobs = MM.binarize(docs, "doc_id", "text")
-    with pytest.raises(Exception):  # NotImplementedError surfaces as PythonException
-        MM.decode_features(blobs, decode_stub=False).collect()
-
-
-def test_int8_quantization_roundtrip_and_ranking(spark):
-    """Quantize → dequantize reconstruction error is bounded by scale/2
-    per element, and brute-force cosine top-k over the reconstructed
-    corpus matches the exact float top-k (cosine is scale-invariant, so
-    int8 rounding is the only loss)."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    vecs = [(i, rng.standard_normal(16).astype(float).tolist()) for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = S.quantize_embeddings(df)
-    back = S.dequantize_embeddings(q)
-    joined = {r.vec_id: r for r in back.collect()}
-    scales = {r.vec_id: r.scale for r in q.collect()}
-    for i, v in vecs:
-        err = np.abs(np.array(joined[i].embedding) - np.array(v)).max()
-        assert err <= scales[i] / 2 + 1e-6
-    exact = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in S.cosine_topk(df.filter("vec_id < 5"), df, k=3).collect()
-    }
-    approx = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in S.cosine_topk(df.filter("vec_id < 5"), back, k=3).collect()
-    }
-    overlap = sum(exact[k] == approx.get(k) for k in exact) / len(exact)
-    assert overlap >= 0.85
-
-
-def test_multimodal_to_ann_composition(spark):
-    """End-to-end chain across op families: documents → binary blobs →
-    feature vectors (real PNG decode) → int8 quantization → dequantize →
-    hyperplane-LSH top-k. Every hop is a public op; the chain is one
-    lazy plan (no intermediate actions) — the integration shape a real
-    multimodal training pipeline uses."""
-    import numpy as np
-
-    from cli_spark.ops import media_codecs as mc
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for i in range(24):
-        img = rng.integers(0, 256, size=(6, 6, 3), dtype=np.uint8)
-        rows.append((i, bytearray(mc.encode_png(img))))
-    blobs = spark.createDataFrame(rows, "id long, blob binary")
-    feats = MM.decode_features(blobs, decode_stub=False).withColumnRenamed(
-        "id", "vec_id"
-    ).withColumnRenamed("features", "embedding")
-    q = S.quantize_embeddings(feats)
-    back = S.dequantize_embeddings(q)
-    top = S.lsh_topk(
-        back.filter("vec_id < 4"), back, k=3, bits=4, dim=MM.FEATURE_DIM
-    )
-    got = top.collect()
-    assert len(got) > 0
-    assert all(r.query_id != r.neighbor_id and r.rnk <= 3 for r in got)
-    # feature vectors are real decodes: 16-dim grid-luma in [0, 1]
-    one = feats.first()
-    assert len(one.embedding) == MM.FEATURE_DIM
-    assert all(0.0 <= v <= 1.0 for v in one.embedding)
-
-
-def test_select_survivors(spark, docs):
-    """Near-dup clusters keep exactly one doc — the highest-quality
-    member (token count), ties to the lowest id; non-duplicated docs
-    survive as singletons."""
-    pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5)
-    out = {r.id: r for r in D.select_survivors(docs, pairs).collect()}
-    assert len(out) == 6
-    # 0, 1, 2 are one near-dup cluster; the survivor is shared and unique
-    cluster = {out[i].survivor_id for i in (0, 1, 2)}
-    assert len(cluster) == 1
-    surv = cluster.pop()
-    assert out[surv].keep and surv in (0, 1, 2)
-    # docs 3, 4, 5 are singletons: each survives itself
-    for i in (3, 4, 5):
-        assert out[i].survivor_id == i and out[i].keep
-    # exactly one keep per component
-    comps = {}
-    for r in out.values():
-        comps.setdefault(r.comp, 0)
-        comps[r.comp] += int(r.keep)
-    assert all(v == 1 for v in comps.values())
-
-
-def test_select_survivors_partial_score_df(spark, docs):
-    """A caller-supplied score_df that misses some doc ids must not drop
-    those docs from the output (old inner join did): they compete with a
-    default score of 0.0 and singletons still keep themselves."""
-    import pyspark.sql.functions as F
-
-    pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5)
-    # score only doc 1 (inside the 0/1/2 cluster) and doc 3 (singleton)
-    score_df = spark.createDataFrame([(1, 5.0), (3, 2.0)], "id long, score double")
-    out = {r.id: r for r in D.select_survivors(docs, pairs, score_df=score_df).collect()}
-    assert len(out) == 6  # nothing vanished
-    # doc 1 is the only scored member of its cluster → it wins
-    assert out[1].keep and out[0].survivor_id == 1 and out[2].survivor_id == 1
-    # unscored singletons keep themselves with the default score
-    for i in (4, 5):
-        assert out[i].keep and out[i].score == 0.0
+    assert meta[0].sha256 == meta[1].sha256  # same bytes, same digest
+    assert meta[0].sha256 != meta[2].sha256
 
 
 def test_textstats_invariants_randomized(spark):
@@ -294,7 +135,7 @@ def test_textstats_invariants_randomized(spark):
         for i in range(200)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    q = T.quality_scores(docs, "doc_id", "text").collect()
+    q = T.text_stats(docs, "doc_id", "text").collect()
     assert len(q) == 200
     for r in q:
         assert r.n_chars >= 0 and r.n_tokens >= 0
@@ -302,69 +143,9 @@ def test_textstats_invariants_randomized(spark):
             assert ratio is None or 0.0 <= ratio <= 1.0
         if r.n_tokens:
             assert r.avg_token_len > 0
-    t = T.token_counts(docs, "doc_id", "text").collect()
-    by_id = {r.id: r for r in t}
+    by_id = {r.id: r for r in q}
     for i, text in rows:
         assert by_id[i].n_ws_tokens == len(text.split())
-
-
-def test_decontaminate(spark):
-    # train doc 10 embeds a verbatim 7-word benchmark span (> n=5), doc 11
-    # shares only a 3-word span (< n), doc 12 is clean, doc 13 hits BOTH
-    # benchmark docs
-    bench = spark.createDataFrame(
-        [
-            (100, "alpha beta gamma delta epsilon zeta eta theta"),
-            (101, "one two three four five six seven"),
-        ],
-        "doc_id long, text string",
-    )
-    train = spark.createDataFrame(
-        [
-            (10, "prefix words alpha beta gamma delta epsilon zeta eta tail"),
-            (11, "alpha beta gamma unrelated continuation of words here"),
-            (12, "nothing in common with the benchmark suite at all"),
-            (13, "alpha beta gamma delta epsilon and one two three four five"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.id: (r.n_hit_grams, r.n_bench_docs)
-        for r in D.decontaminate(train, bench, "doc_id", "text", n=5).collect()
-    }
-    assert 11 not in out and 12 not in out
-    # doc 10: 7-word shared span -> three distinct 5-grams, one bench doc
-    assert out[10] == (3, 1)
-    # doc 13: one 5-gram from each benchmark doc
-    assert out[13] == (2, 2)
-
-
-def test_decontaminate_short_bench_doc(spark):
-    # a benchmark doc shorter than n collapses to a whole-doc gram and
-    # still matches a train doc with the same short content
-    bench = spark.createDataFrame([(1, "tiny bench")], "doc_id long, text string")
-    train = spark.createDataFrame(
-        [(2, "tiny bench"), (3, "tiny bench plus more words here")],
-        "doc_id long, text string",
-    )
-    out = {r.id for r in D.decontaminate(train, bench, "doc_id", "text", n=5).collect()}
-    assert out == {2}
-
-
-def test_decontaminate_empty_docs_never_match(spark):
-    # empty/whitespace-only docs share no CONTENT: an empty train doc
-    # must not be flagged just because the bench suite also has an empty
-    # row (both would otherwise hash to the same whole-doc "" gram)
-    bench = spark.createDataFrame(
-        [(1, ""), (2, "real benchmark content words here six seven")],
-        "doc_id long, text string",
-    )
-    train = spark.createDataFrame(
-        [(10, ""), (11, "   \t  "), (12, "real benchmark content words here six")],
-        "doc_id long, text string",
-    )
-    out = {r.id for r in D.decontaminate(train, bench, "doc_id", "text", n=5).collect()}
-    assert out == {12}
 
 
 def _spans_reference(texts: dict[int, str], k: int) -> dict[int, tuple]:
@@ -438,86 +219,3 @@ def test_duplicate_spans_overlap_merge(spark):
         for r in D.duplicate_spans(df, "doc_id", "text", k=8).collect()
     }
     assert got[0] == (1, 10) and got[1] == (1, 10)
-
-
-# ---------------------------------------------------------------------------
-# semantic dedup (SemDeDup-style)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def sem_corpus(spark):
-    """120 seeded vectors in 3 planted directions + noise: plenty of
-    real near-duplicates at tau=0.9, none at the cell boundary."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    base = rng.standard_normal((3, 8))
-    rows = []
-    for i in range(120):
-        v = base[i % 3] + rng.standard_normal(8) * (0.05 if i % 4 else 2.0)
-        rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
-
-
-def _sem_reference(out_rows, vecs, tau):
-    """Keep-rule reference: numpy brute force per RETURNED cell (the
-    assignment itself is oracle-checked by q45) — drop iff any earlier
-    same-cell member has cosine >= tau."""
-    import numpy as np
-
-    by_cell: dict = {}
-    for r in sorted(out_rows, key=lambda r: r.id):
-        by_cell.setdefault(r.cell_id, []).append(r.id)
-    expect = {}
-    for members in by_cell.values():
-        X = np.array([vecs[i] for i in members], dtype=np.float64)
-        n = np.linalg.norm(X, axis=1)
-        n[n == 0] = 1.0
-        Xn = X / n[:, None]
-        S = Xn @ Xn.T
-        for j, vid in enumerate(members):
-            expect[vid] = not (j > 0 and S[j, :j].max() >= tau)
-    return expect
-
-
-def test_semantic_dedup_differential(spark, sem_corpus):
-    tau = 0.9
-    out = S.semantic_dedup(sem_corpus, tau=tau).collect()
-    assert len(out) == 120
-    vecs = {r.vec_id: r.embedding for r in sem_corpus.collect()}
-    expect = _sem_reference(out, vecs, tau)
-    got = {r.id: r.keep for r in out}
-    assert got == expect
-    # the planted near-dup structure actually exercised both branches
-    assert 0 < sum(got.values()) < 120
-    assert not any(r.cell_overflow for r in out)
-
-
-def test_semantic_dedup_repartition_and_block_invariance(spark, sem_corpus):
-    base = sorted(
-        (r.id, r.cell_id, r.keep, r.cell_overflow)
-        for r in S.semantic_dedup(sem_corpus, tau=0.9).collect()
-    )
-    shuffled = sorted(
-        (r.id, r.cell_id, r.keep, r.cell_overflow)
-        for r in S.semantic_dedup(sem_corpus.repartition(7), tau=0.9).collect()
-    )
-    striped = sorted(
-        (r.id, r.cell_id, r.keep, r.cell_overflow)
-        for r in S.semantic_dedup(sem_corpus, tau=0.9, col_block=3).collect()
-    )
-    assert base == shuffled == striped
-
-
-def test_semantic_dedup_overflow_cap(spark, sem_corpus):
-    out = S.semantic_dedup(sem_corpus, tau=0.9, n_cells=2, max_cell=5).collect()
-    assert len(out) == 120
-    by_cell: dict = {}
-    for r in sorted(out, key=lambda r: r.id):
-        by_cell.setdefault(r.cell_id, []).append(r)
-    for members in by_cell.values():
-        head, tail = members[:5], members[5:]
-        assert not any(r.cell_overflow for r in head)
-        # overflow rows are kept un-deduped and flagged — countable drops
-        assert all(r.cell_overflow and r.keep for r in tail)
