@@ -16,7 +16,7 @@ Layout
 - :mod:`cli_spark.jellywire`     the real Jelly protobuf wire codec + stream resolver
 - :mod:`cli_spark.jelly`         Jelly stream frames over Spark (encode/decode/transcode)
 - :mod:`cli_spark.nquads`        N-Triples / N-Quads columnar render + parse
-- :mod:`cli_spark.compare`       ordered / unordered RDF compare, containment, stream checks
+- :mod:`cli_spark.compare`       ordered / unordered RDF compare, stream checks
 - :mod:`cli_spark.inspect_metrics`  per-frame / aggregate stream metrics ("rdf inspect")
 - :mod:`cli_spark.manifest`      per-stage checkpoint manifests for mid-stage resume
 - :mod:`cli_spark.pipeline`      extract → link → canonicalize → materialize → validate

@@ -936,6 +936,7 @@ def _dispatch(spark, args) -> int:
     if args.rdf_cmd == "inspect":
         from .inspect_metrics import format_detail, render_yaml, stream_totals
         from .jellywire import STAT_NAMES
+        from .order import collect_sorted
 
         # a zero-frame stream has nothing to report: the same typed
         # error `rdf validate` gives
@@ -968,7 +969,7 @@ def _dispatch(spark, args) -> int:
                     r["key"]
                 ] = r["value_hex"]
             frames = []
-            for r in pf.orderBy("seg", "frame_index").collect():
+            for r in collect_sorted(pf, ["seg", "frame_index"]):
                 d = r.asDict()
                 f = {"seg": int(d.pop("seg")),
                      "frame_index": int(d.pop("frame_index"))}
@@ -1161,20 +1162,21 @@ def _dispatch(spark, args) -> int:
                 # Statement↔namespace interleaving order is not
                 # compared — a documented simplification of the
                 # reference's global element positions.
+                from .order import collect_sorted
                 from .turtle import scan_namespaces_ordered
 
                 def _ordered_ns(df):
+                    ns = df.filter(
+                        F.col("row_kind") == J.KIND_NAMESPACE
+                    ).select(
+                        "seg", "frame_index", "row_pos", "name",
+                        F.col("aux").alias("iri"),
+                    )
                     return [
                         (r["name"], r["iri"])
-                        for r in df.filter(
-                            F.col("row_kind") == J.KIND_NAMESPACE
+                        for r in collect_sorted(
+                            ns, ["seg", "frame_index", "row_pos"]
                         )
-                        .select(
-                            "seg", "frame_index", "row_pos", "name",
-                            F.col("aux").alias("iri"),
-                        )
-                        .orderBy("seg", "frame_index", "row_pos")
-                        .collect()
                     ]
 
                 if cmp_fmt.key in ("ttl", "trig"):

@@ -12,7 +12,6 @@ becomes one aggregate over the rows.
 - :func:`unordered_compare`   J2: per-graph isomorphism via iterative
   hash-refinement canonical bnode labeling (UnorderedRdfCompare.scala:10-34)
   — both sides refined in one loop, the verdict in one aggregate
-- :func:`containment`         J3: expected ⊆ actual via left-anti join
 - :func:`validate_stream`     P5/P8/P10 structural checks over a rows
   table, all in one aggregate
 """
@@ -274,13 +273,6 @@ def unordered_compare(expected: DataFrame, actual: DataFrame) -> CompareResult:
     if verdict["diff"]:
         return CompareResult(False, f"{verdict['diff']} canonicalized triples unmatched")
     return CompareResult(True, "isomorphic")
-
-
-def containment(expected: DataFrame, actual: DataFrame, keys=("subj", "pred", "obj")) -> int:
-    """J3: # expected triples missing from actual (0 ⇒ contained)."""
-    return expected.select(*keys).distinct().join(
-        actual.select(*keys).distinct(), list(keys), "left_anti"
-    ).count()
 
 
 def validate_stream(rows: DataFrame) -> list[str]:

@@ -60,6 +60,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import jellywire as JW
+from .order import collect_sorted
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -212,14 +213,6 @@ def options_cascade(
         if updates:
             opts = dataclasses.replace(opts, **updates)
     return dataclasses.replace(opts, version=VERSION)
-
-
-# thin re-exports so tests can exercise the varint primitives
-_read_varint = JW.read_varint
-
-
-def _write_varint(buf, v: int) -> None:
-    JW.write_varint(buf, v)
 
 
 decode_frame = JW.decode_frame
@@ -1042,7 +1035,9 @@ def write_jelly_file(
     which is legal input (U1)."""
     import io as _io
 
-    rows = frames.orderBy("seg", "frame_index").select("frame_bytes").collect()
+    rows = collect_sorted(
+        frames.select("seg", "frame_index", "frame_bytes"), ["seg", "frame_index"]
+    )
     mode = "ab" if append else "wb"
     with open(path, mode) as fh:
         for r in rows:
@@ -1467,13 +1462,11 @@ def parse_jelly_text(texts: DataFrame) -> DataFrame:
 def write_jelly_text_file(frames: DataFrame, path: str) -> None:
     """Jelly-text sink: reference-style file with `# Frame N` headers
     (bounded-artifact path, like write_jelly_file)."""
-    out = render_jelly_text(frames).orderBy("seg", "frame_index")
+    rows = collect_sorted(render_jelly_text(frames), ["seg", "frame_index"])
     with open(path, "w", encoding="utf-8") as fh:
-        n = 0
-        for r in out.select("text").toLocalIterator():
+        for n, r in enumerate(rows):
             fh.write(f"# Frame {n}\n")
             fh.write(r.text + "\n")
-            n += 1
 
 
 def read_jelly_text_file(

@@ -1,5 +1,5 @@
-"""Deterministic global row numbering at scale (SURVEY.md §4 custom
-machinery #3).
+"""Global order at scale: deterministic row numbering (SURVEY.md §4
+custom machinery #3) and driver-bound ordered results.
 
 ``row_number() OVER (ORDER BY ...)`` collapses to a single task — fine
 for oracle-sized data, fatal at 100 TB. This helper computes the same
@@ -12,11 +12,19 @@ deterministic rank with the partition-offset technique:
 Determinism: rn(key) = |{k : k < key}| + 1 depends only on the total
 order of the (unique) keys, not on where range boundaries land, so the
 result is stable even though RangePartitioner samples boundaries.
+
+A result bound for the driver anyway (a ``.jelly`` file, a report) is
+collected unordered and sorted there (:func:`collect_sorted`):
+``orderBy(...).collect()`` makes Spark run the whole upstream plan twice,
+once to sample the range bounds and once to sort, Python UDF passes
+included.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from operator import itemgetter
+
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -30,6 +38,12 @@ def _offset(offsets: dict[int, int]):
     return F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])[
         F.col("_pid")
     ]
+
+
+def collect_sorted(df: DataFrame, keys: list[str]) -> list[Row]:
+    """``df``'s rows on the driver, ascending by ``keys`` (which must be
+    non-null and unique per row), in one pass over ``df``'s plan."""
+    return sorted(df.collect(), key=itemgetter(*keys))
 
 
 def global_row_number(

@@ -17,6 +17,19 @@ the last plan derived from them is garbage-collected on the JVM, so no
 ``persist()`` needs a matching ``unpersist()`` in Python. A plain
 ``persist()`` stays only where every reader runs before the function
 returns and an explicit ``unpersist()`` follows them.
+
+DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1
+otherwise wraps every Column and DataFrame call in ``_with_origin``,
+which walks the Python stack and spends about five py4j round trips
+setting and clearing the call site on the JVM, only so that a runtime
+SQL error can name the Python file:line that built the failing
+expression. With pyspark 4.1.2, one cold iteration of perfbench's
+``jelly_codec`` workload (to-jelly, transcode, inspect, from-jelly and
+validate on 10k quads) made about 21,500 py4j calls with capture on and
+about 9,500 with it off. A runtime SQL error
+keeps its class and message; its ``== DataFrame ==`` context names a JVM
+frame instead of the Python file:line.
 """
 
 from __future__ import annotations
@@ -68,6 +81,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic oracle comparison: DuckDB timestamps are UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
+        # no Python call-site capture around each Column/DataFrame call
+        # (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )

@@ -1353,16 +1353,18 @@ def test_cli_inspect_job_budget(spark, tmp_path):
     """Count mode and --size read the same wire walk, so each flag set
     runs the same number of Spark jobs in the `rdf inspect` group for
     both statistics, and that number is pinned: a decode of the rows
-    (a grouped per-segment resolve) would add jobs."""
+    (a grouped per-segment resolve) would add jobs, and so would a
+    Spark-side sort of the per-frame table (a range-bounds sample that
+    re-runs the wire walk)."""
     stream = os.path.join(
         os.path.dirname(__file__), "fixtures", "encoder", "triples_pt0_n64.jelly"
     )
     tracker = spark.sparkContext.statusTracker()
     budget = {
         (): 2,
-        ("--per-frame",): 4,
+        ("--per-frame",): 2,
         ("--detail", "all"): 5,
-        ("--per-frame", "--detail", "node"): 6,
+        ("--per-frame", "--detail", "node"): 4,
     }
     got = {}
     for flags in budget:
@@ -1375,6 +1377,23 @@ def test_cli_inspect_job_budget(spark, tmp_path):
         flags + size: n for flags, n in budget.items()
         for size in ((), ("--size",))
     }, got
+
+
+def test_cli_transcode_job_budget(spark, tmp_path):
+    """`rdf transcode` of two streams into one runs 5 Spark jobs: one
+    checkpoint of both inputs, then the per-segment maxima pass and the
+    per-segment shift pass, each a shuffle job and a result job. The
+    shift pass feeds the driver-side write directly; a Spark-side sort
+    in front of the write ran it twice (7 jobs)."""
+    stream = os.path.join(
+        os.path.dirname(__file__), "fixtures", "encoder", "triples_pt1_n64.jelly"
+    )
+    out = str(tmp_path / "merged.jelly")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup("rdf transcode"))
+    assert main(["rdf", "transcode", stream, stream, "--to", out]) == 0
+    jobs = set(tracker.getJobIdsForGroup("rdf transcode")) - before
+    assert len(jobs) == 5, len(jobs)
 
 
 def test_cli_validate_job_budget(spark, tmp_path):

@@ -1,7 +1,7 @@
 """RDF compare battery: ordered positional compare with bnode bijection
-(J1), unordered per-graph isomorphism via hash refinement (J2),
-containment (J3) — mirrors the reference's validate specs
-(OrderedRdfCompare / UnorderedRdfCompare)."""
+(J1) and unordered per-graph isomorphism via hash refinement (J2) —
+mirrors the reference's validate specs (OrderedRdfCompare /
+UnorderedRdfCompare)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 
 from cli_spark.compare import (
     canonicalize_bnodes,
-    containment,
     ordered_compare,
     unordered_compare,
 )
@@ -93,13 +92,6 @@ def test_canonicalization_distinguishes_structure(spark):
         GSCHEMA,
     )
     assert not unordered_compare(chain, star).equal
-
-
-def test_containment(spark):
-    e = df(spark, [(1, "kg:a", "kg:p", "kg:b"), (2, "kg:a", "kg:p", "kg:c")])
-    a = df(spark, [(1, "kg:a", "kg:p", "kg:b")])
-    assert containment(e, a) == 1
-    assert containment(a, e) == 0
 
 
 def test_canonical_labels_deterministic(spark):

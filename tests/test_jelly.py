@@ -60,6 +60,26 @@ def test_file_write_read_probe(spark, triples, tmp_path):
     _assert_equal_sets(triples, back)
 
 
+def test_write_jelly_file_one_job(spark, tmp_path):
+    """The frames are collected unordered and sorted on the driver, so
+    writing frames that a Python pass produces runs that pass once: one
+    Spark job, where ``orderBy(...).collect()`` ran three (range-bounds
+    sample, shuffle, sort). The rewritten stream equals the input."""
+    from cli_spark.manifest import job_group
+
+    src = os.path.join(
+        os.path.dirname(__file__), "fixtures", "encoder", "quads_pt0_n4096_ns.jelly"
+    )
+    frames = J.read_jelly_file(spark, src)  # mapInPandas frame split
+    p = str(tmp_path / "copy.jelly")
+    tracker = spark.sparkContext.statusTracker()
+    with job_group(spark, "write_jelly_file job count"):
+        J.write_jelly_file(frames, p)
+    assert len(tracker.getJobIdsForGroup("write_jelly_file job count")) == 1
+    with open(src, "rb") as a, open(p, "rb") as b:
+        assert a.read() == b.read()
+
+
 def test_nondelimited_single_frame(spark, tmp_path):
     small = spark.createDataFrame(
         [("kg:a", "kg:p", "kg:b", 0), ("kg:a", "kg:p", "kg:c", 0)],
@@ -158,12 +178,12 @@ def test_stream_totals_names_each_counter_once(spark, triples):
 def test_varint_edge_values():
     import io
 
-    from cli_spark.jelly import _read_varint, _write_varint
+    from cli_spark.jellywire import read_varint, write_varint
 
     for v in (0, 1, 127, 128, 300, 2**31 - 1, 2**60):
         buf = io.BytesIO()
-        _write_varint(buf, v)
-        out, pos = _read_varint(buf.getvalue(), 0)
+        write_varint(buf, v)
+        out, pos = read_varint(buf.getvalue(), 0)
         assert out == v and pos == len(buf.getvalue())
 
 
