@@ -15,9 +15,9 @@ result is stable even though RangePartitioner samples boundaries.
 
 A result bound for the driver anyway (a ``.jelly`` file, a report) is
 collected unordered and sorted there (:func:`collect_sorted`):
-``orderBy(...).collect()`` makes Spark run the whole upstream plan twice,
-once to sample the range bounds and once to sort, Python UDF passes
-included.
+``orderBy(...).collect()`` makes Spark run the plan below the sort, back
+to its last shuffle, twice: once to sample the range bounds and once to
+sort, Python UDF passes included.
 """
 
 from __future__ import annotations

@@ -40,9 +40,6 @@ def _assignments(node):
             for t in n.targets:
                 if isinstance(t, ast.Name):
                     out.setdefault(t.id, []).append(n.value)
-        elif isinstance(n, (ast.AnnAssign, ast.NamedExpr)) and n.value is not None:
-            if isinstance(n.target, ast.Name):
-                out.setdefault(n.target.id, []).append(n.value)
     return out
 
 
