@@ -1,136 +1,123 @@
-"""Stage 3 — IRI canonicalization via iterative hash-min connected
-components (SURVEY.md §4 custom machinery #1; north rule: "checkpointed
+"""Stage 3 — IRI canonicalization via connected components by local
+contraction (SURVEY.md §4 custom machinery #1; north rule: "checkpointed
 DataFrame loop, no GraphFrames dependency").
 
 Given sameAs edges, computes per-node component = min IRI reachable,
 then rewrites triple subjects/objects through the component map.
 
-Algorithm (hash-min / label propagation):
-    label(v) ← v
-    repeat: label(v) ← min(label(v), min_{(u,v)∈E} label(u))
-until no label changes. Converges in O(diameter) rounds; each round is
-one join + one groupBy-min. ``localCheckpoint()`` truncates lineage per
-round so plans don't grow exponentially — the fixpoint Catalyst cannot
-express (SURVEY.md §4).
-
-Scale: labels table is (node, label) — far smaller than the triple
-table; the expensive join is labels⋈edges on node, hash-partitioned
-once and reused. The final rewrite joins the (usually tiny) non-trivial
-component map against triples — broadcast when it fits.
+Algorithm (local contraction, Łącki et al., *Connected Components at
+Scale via Local Contractions*, 2018): each round runs union-find over
+each task's share of the edges in one Arrow kernel; a node seen in
+several tasks gets one root per task, and the next round joins those
+roots. Under AQE coalescing an edge set below about 1 MB lands in one
+task and closes in one round. ``localCheckpoint()`` truncates lineage
+per round — the fixpoint Catalyst cannot express (SURVEY.md §4). The
+final rewrite joins the (usually tiny) non-trivial component map
+against triples — broadcast when it fits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 MAX_ITERATIONS = 50
 
 
-def connected_components(edges: DataFrame, max_iter: int = MAX_ITERATIONS) -> DataFrame:
-    """edges(src, dst) undirected → (node, component) with component =
-    lexicographic min node id in the component.
+def _union_find(batches):
+    """mapInArrow kernel: the task's (src, dst) edges → (node, root) for
+    each node in them, root = the smallest IRI of its task-local set.
 
-    The fixpoint loop runs on **order-preserving dense long ids**, not
-    the IRI strings: every round shuffles the label table O(rounds)
-    times, and 8-byte keys shuffle ~8× less than ~60-char IRIs (and
-    hash/compare without allocation). The ids come from
-    :func:`cli_spark.order.global_row_number` (range-partition + local
-    rank + partition offsets — no single-task sort), so id order ==
-    string order. Order preservation is not cosmetic: with ids assigned
-    in key order, the pointer-jump step doubles the propagation distance
-    every round (label(v) always points at an id whose own label is at
-    least as far along), keeping convergence at O(log diameter). With
-    randomly-ordered ids (e.g. hashes) the jump target's label is
-    uncorrelated with progress and the loop degrades to O(diameter) —
-    measured 60+ rounds on a 64-node chain. Strings surface only in the
-    one-time encode joins and the final decode.
-    """
-    sym_str = edges.select(F.col("src"), F.col("dst")).unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    from .order import global_row_number
+    Ids are ranks in byte order, Spark's string order, so a set's
+    smallest id is its smallest IRI. Each pass hooks the larger root of
+    every edge onto the smaller, then pointer-jumps to the roots; every
+    set with an edge to another set merges, so such sets at least halve
+    per pass."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    # node_map is NOT re-materialized here: global_row_number already
-    # persists its ranked partitions, so the map/decode projections
-    # below are cheap scans over those cached blocks. (An extra
-    # localCheckpoint doubled the setup barrier count for no lineage
-    # benefit — node_map never iterates.)
-    node_map = global_row_number(
-        sym_str.select(F.col("src").alias("node")).distinct(), ["node"], rn_col="nid"
-    )
-    src_ids = node_map.select(F.col("node").alias("src"), F.col("nid").alias("src_id"))
-    dst_ids = node_map.select(F.col("node").alias("dst"), F.col("nid").alias("dst_id"))
-    sym = (
-        sym_str.join(src_ids, "src")
-        .join(dst_ids, "dst")
-        .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
-        .localCheckpoint()
-    )
-    # labels round 0 is a projection of the persisted rank table; only
-    # per-round outputs need checkpointing (they are what iterates)
-    labels = node_map.select(F.col("nid").alias("node")).withColumn(
-        "label", F.col("node")
-    )
-
-    for _ in range(max_iter):
-        # (1) hash-min: candidate labels flowing along edges
-        neighbor_min = (
-            sym.join(labels, sym.src == labels.node)
-            .select(F.col("dst").alias("node"), F.col("label"))
-            .groupBy("node")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = labels.join(neighbor_min, "node", "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias(
-                "cand"
-            ),
-            "label",
-        )
-        # (2) pointer jump: label(label(v)) — shortcut through the current
-        # label table so chains converge in O(log diameter) rounds instead
-        # of O(diameter) (plain min-propagation walks one hop per round).
-        lookup = labels.select(
-            F.col("node").alias("cand"), F.col("label").alias("cand_label")
-        )
-        # The convergence count rides INSIDE the checkpoint job as an
-        # observed metric — one action per round, not checkpoint+count.
-        # (The eager localCheckpoint is the round's single execution;
-        # CollectMetrics folds the changed-row count into that same
-        # pass, so convergence detection costs zero extra jobs.)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_labels = stepped.join(lookup, "cand", "left").select(
-            "node",
-            F.least(F.col("cand"), F.coalesce(F.col("cand_label"), F.col("cand"))).alias(
-                "new_label"
-            ),
-            "label",
-        ).observe(
-            obs,
-            F.sum(
-                (F.col("new_label") != F.col("label")).cast("long")
-            ).alias("changed"),
-        ).localCheckpoint()
-        changed = obs.get["changed"] or 0
-        labels = new_labels.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    ends = pa.chunked_array(t.column("src").chunks + t.column("dst").chunks)
+    enc = ends.combine_chunks().dictionary_encode()
+    order = pc.array_sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    ids = rank[enc.indices.to_numpy()]
+    src, dst = ids[: t.num_rows], ids[t.num_rows :]
+    parent = np.arange(len(order))
+    while True:
+        rs, rd = parent[src], parent[dst]
+        if np.array_equal(rs, rd):
             break
-    # Decode: ids are order-preserving, so min id == lexicographic-min
-    # IRI — two joins against the id map, no extra aggregation.
-    names = node_map.select(F.col("nid"), F.col("node").alias("name"))
-    return (
-        labels.join(names.withColumnRenamed("nid", "node"), "node")
-        .join(
-            names.select(
-                F.col("nid").alias("label"), F.col("name").alias("component")
-            ),
-            "label",
-        )
-        .select(F.col("name").alias("node"), "component")
+        lo = np.minimum(rs, rd)
+        np.minimum.at(parent, rs, lo)
+        np.minimum.at(parent, rd, lo)
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    names = enc.dictionary.take(order)
+    yield pa.RecordBatch.from_arrays([names, names.take(parent)], ["node", "root"])
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) undirected → (node, component) with component =
+    lexicographic min node IRI in the component.
+
+    A round is one ``localCheckpoint``: the union-find kernel over the
+    edges shuffled by ``src``, then ``groupBy("node")`` for each node's
+    smallest root and set of roots, counting the nodes with several roots
+    as an ``observe()`` metric of the same job. Those roots are one
+    component: the next round's edges are a star between them, centred
+    on the root with the smallest per-round ``xxhash64``, a random
+    priority that the IRI order cannot defeat. The first round likewise
+    points each edge from its endpoint with the smaller hash, so edges
+    meeting at a low-priority node share its task. At the end, left
+    joins compose each round's (node, root) map into the previous one.
+    Raises if nodes still have several roots after
+    :data:`MAX_ITERATIONS` rounds.
+    """
+    first = F.xxhash64("src") <= F.xxhash64("dst")
+    edges = edges.select(
+        F.when(first, F.col("src")).otherwise(F.col("dst")).alias("src"),
+        F.when(first, F.col("dst")).otherwise(F.col("src")).alias("dst"),
     )
+    maps = []
+    for rnd in range(1, MAX_ITERATIONS + 1):
+        obs = Observation()
+        roots = (
+            edges.repartition("src")
+            .mapInArrow(_union_find, "node string, root string")
+            .groupBy("node")
+            .agg(F.min("root").alias("root"), F.collect_set("root").alias("roots"))
+            .observe(obs, F.count_if(F.size("roots") > 1).alias("split"))
+            .localCheckpoint()
+        )
+        maps.append(roots.select("node", "root"))
+        if not obs.get["split"]:
+            break
+        center = F.array_min(
+            F.transform("roots", lambda r: F.struct(F.xxhash64(F.lit(rnd), r), r.alias("r")))
+        )["r"]
+        edges = roots.where(F.size("roots") > 1).select(
+            center.alias("src"), F.explode(F.array_remove("roots", center)).alias("dst")
+        )
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {MAX_ITERATIONS} rounds"
+        )
+    comps = maps.pop()
+    for labels in reversed(maps):
+        later = comps.select(F.col("node").alias("root"), F.col("root").alias("final"))
+        comps = labels.join(later, "root", "left").select(
+            "node", F.coalesce(F.col("final"), F.col("root")).alias("root")
+        )
+    return comps.select("node", F.col("root").alias("component"))
 
 
 def canonical_map(same_as: DataFrame) -> DataFrame:

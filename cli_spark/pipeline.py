@@ -9,7 +9,8 @@ workdir it runs fully pipelined in memory (bench path).
 
 Cluster notes: stage boundaries are also the shuffle boundaries —
 extraction shuffles once (dedup), linking twice (signature agg +
-banding join), canonicalization iterates on the (small) label table,
+banding join), canonicalization twice per contraction round on the
+(small) sameAs edge set, usually one round,
 materialization is a bucketed write clustered by subject.
 """
 

@@ -44,8 +44,8 @@ def test_rewrite_preserves_literals(spark):
 
 
 def test_convergence_on_long_chain(spark):
-    # 64-node chain: converges in O(log n)-ish rounds of min propagation,
-    # well under MAX_ITERATIONS; all collapse to node 00.
+    # 64-node chain: one task's union-find closes it in one round under
+    # AQE coalescing, well under MAX_ITERATIONS; all collapse to node 00.
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(63)], "src string, dst string"
     )
