@@ -482,7 +482,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="input Jelly files; omitted or '-' reads stdin")
     tc.add_argument("--to", default=None,
                     help="output file; omitted writes to stdout")
-    tc.add_argument("--rows-per-frame", type=int, default=256)
     tc.add_argument("--max-name-table", "--opt.max-name-table-size",
                     dest="max_name_table", type=int, default=None,
                     help="output table size; must be >= the entries the "
@@ -1219,7 +1218,6 @@ def _dispatch(spark, args) -> int:
         frames = J.transcode_frames(
             spark,
             [J.read_jelly_file(spark, p) for p in args.inputs],
-            rows_per_frame=args.rows_per_frame,
             max_name_table=args.max_name_table,
             max_prefix_table=args.max_prefix_table,
             stream_name=args.stream_name,

@@ -42,6 +42,14 @@ Spark shape:
   table carries fully-resolved terms, so downstream decode is a pure
   filter+select — no dictionary joins, no shuffles.
 
+- transcode: frames of N streams → one stream by integer id remap.
+  Each (stream, seg) block is walked twice through
+  :meth:`~cli_spark.jellywire.StreamState.explicit_row`, the same
+  sequencing rules the decoder resolves with, at the id level: pass 1
+  collects the block's id maxima and options, pass 2 shifts its ids by
+  the block's offsets and re-emits its frames 1:1. No term string is
+  decoded.
+
 Quoted triples (RDF-star) are atomized in the segment task on encode
 (their component IRIs/datatypes feed the same dictionaries) and
 reassembled into ``"<< ... >>"`` source text on decode.
@@ -1414,8 +1422,10 @@ def roundtrip_quads(spark: SparkSession, quads: DataFrame, **kw) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Jelly-text format (S10): REAL protobuf TextFormat of the frames —
 # what the reference's TextFormat printer/parser speaks
-# (RdfFromJellySpec.scala:150-163 shows the expected text; parse chunks
-# rows at lines starting '}', RdfToJelly.scala:261-291).
+# (RdfFromJellySpec.scala:150-163 shows the expected text; the
+# reference's parser, RdfToJelly.scala:261-291, chunks rows at lines
+# starting '}', which drops rows written one per line — this one parses
+# the whole text).
 # ---------------------------------------------------------------------------
 
 
@@ -1469,218 +1479,125 @@ def write_jelly_text_file(frames: DataFrame, path: str) -> None:
             fh.write(r.text + "\n")
 
 
-def read_jelly_text_file(
-    spark: SparkSession, path: str, rows_per_frame: int = ROWS_PER_FRAME
-) -> DataFrame:
-    """Jelly-text source → frames table. Mirrors the reference's parser
-    (RdfToJelly.scala:261-291): rows chunk at lines starting '}',
-    comments are TextFormat-legal, and rows regroup into frames of
-    ``rows_per_frame``."""
+def read_jelly_text_file(spark: SparkSession, path: str) -> DataFrame:
+    """Jelly-text source → frames table: the whole text parses as one
+    run of ``rows`` blocks (comments, such as the sink's ``# Frame N``
+    headers, are TextFormat-legal), and the rows regroup into frames of
+    ``ROWS_PER_FRAME``."""
     with open(path, encoding="utf-8") as fh:
-        text = fh.read()
-    buf: list[str] = []
-    row_blocks: list[str] = []
-    for line in text.splitlines():
-        buf.append(line)
-        if line.startswith("}"):
-            row_blocks.append("\n".join(buf))
-            buf = []
-    rows = [JW.parse_frame_text(b) for b in row_blocks if b.strip()]
-    rows = [r[0] for r in rows if r]
+        rows = JW.parse_frame_text(fh.read())
     frames = []
-    for i in range(0, len(rows), rows_per_frame):
-        chunk = rows[i : i + rows_per_frame]
+    for i in range(0, len(rows), ROWS_PER_FRAME):
+        chunk = rows[i : i + ROWS_PER_FRAME]
         frames.append(
-            (0, i // rows_per_frame, len(chunk), bytearray(JW.encode_frame(chunk)))
+            (0, i // ROWS_PER_FRAME, len(chunk), bytearray(JW.encode_frame(chunk)))
         )
     return spark.createDataFrame(frames, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # transcode fast path (§2.11, RdfTranscode.scala:57-82): pure integer
-# dictionary-id remap — no term decode, no string joins anywhere
+# dictionary-id remap — no term decode, no string joins anywhere. Each
+# (stream, seg) block is walked twice through StreamState.explicit_row,
+# which holds the wire's sequencing rules: once for its id maxima, once
+# to shift its ids and re-emit its frames.
 # ---------------------------------------------------------------------------
 
-
-def _explicitize_rows(rows: list[dict]) -> tuple[list[dict], dict]:
-    """Raw wire rows (one stream, in order) → rows with every implicit
-    id made explicit and every elided term filled in, WITHOUT resolving
-    values — the id-level normalization that makes blocks safely
-    concatenable (a block boundary must not inherit sequencing state
-    from another stream). Returns (rows, maxima)."""
-    last = {KIND_NAME: 0, KIND_PREFIX: 0, KIND_DATATYPE: 0}
-    maxima = {KIND_NAME: 0, KIND_PREFIX: 0, KIND_DATATYPE: 0}
-    last_nid = 0
-    last_pid = 0
-    prev_terms: dict[str, dict | None] = {"s": None, "p": None, "o": None, "g": None}
-    out = []
-
-    def fix_term(t):
-        nonlocal last_nid, last_pid
-        if t is None:
-            return None
-        k = t["k"]
-        if k == JW.T_IRI:
-            nid = t.get("nid") or (last_nid + 1)
-            pid = t.get("pid") or last_pid
-            last_nid, last_pid = nid, pid
-            return {"k": k, "nid": nid, "pid": pid}
-        if k == JW.T_QUOTED:
-            return {
-                "k": k,
-                "s": fix_term(t.get("s")),
-                "p": fix_term(t.get("p")),
-                "o": fix_term(t.get("o")),
-            }
-        return t
-
-    options = None
-    for row in rows:
-        kind = row["kind"]
-        if kind == KIND_OPTIONS:
-            options = row
-            last = {KIND_NAME: 0, KIND_PREFIX: 0, KIND_DATATYPE: 0}
-            last_nid = last_pid = 0
-            prev_terms = {"s": None, "p": None, "o": None, "g": None}
-            out.append(row)
-        elif kind in (KIND_NAME, KIND_PREFIX, KIND_DATATYPE):
-            eid = row["id"] or (last[kind] + 1)
-            last[kind] = eid
-            maxima[kind] = max(maxima[kind], eid)
-            out.append({"kind": kind, "id": eid, "value": row["value"]})
-        elif kind in (KIND_TRIPLE, KIND_QUAD):
-            new = {"kind": kind}
-            for key in ("s", "p", "o") + (("g",) if kind == KIND_QUAD else ()):
-                t = row.get(key)
-                if t is None:
-                    new[key] = prev_terms[key]
-                else:
-                    new[key] = fix_term(t)
-                    prev_terms[key] = new[key]
-            out.append(new)
-        elif kind == KIND_GRAPH_START:
-            out.append({"kind": kind, "g": fix_term(row["g"])})
-        elif kind == KIND_NAMESPACE:
-            out.append({**row, "iri": fix_term(row.get("iri") or {"k": JW.T_IRI})})
-        else:
-            out.append(row)
-
-    # A residual pid 0 means "no prefix" in ITS stream, but in the merged
-    # stream (prefix table enabled) pid 0 would mean "same as previous
-    # IRI" and leak a neighbor block's prefix. Rewrite pid-0 IRIs to an
-    # explicit empty-prefix entry, injected right after the options row.
-    def has_zero_pid(t):
-        if t is None:
-            return False
-        if t["k"] == JW.T_IRI:
-            return t.get("pid", 0) == 0
-        if t["k"] == JW.T_QUOTED:
-            return any(has_zero_pid(t.get(x)) for x in ("s", "p", "o"))
+def _has_zero_pid(t: dict | None) -> bool:
+    if t is None:
         return False
-
-    def any_zero(row):
-        return any(
-            has_zero_pid(row.get(x)) for x in ("s", "p", "o", "g", "iri")
-        )
-
-    if any(r["kind"] in (KIND_TRIPLE, KIND_QUAD, KIND_GRAPH_START, KIND_NAMESPACE)
-           and any_zero(r) for r in out):
-        empty_pid = maxima[KIND_PREFIX] + 1
-        maxima[KIND_PREFIX] = empty_pid
-
-        def fill_pid(t):
-            if t is None:
-                return None
-            if t["k"] == JW.T_IRI and t.get("pid", 0) == 0:
-                return {**t, "pid": empty_pid}
-            if t["k"] == JW.T_QUOTED:
-                return {
-                    "k": t["k"],
-                    "s": fill_pid(t.get("s")),
-                    "p": fill_pid(t.get("p")),
-                    "o": fill_pid(t.get("o")),
-                }
-            return t
-
-        fixed_out = []
-        injected = False
-        entry = {"kind": KIND_PREFIX, "id": empty_pid, "value": ""}
-        for r in out:
-            if not injected and r["kind"] != KIND_OPTIONS:
-                fixed_out.append(entry)
-                injected = True
-            if r["kind"] in (KIND_TRIPLE, KIND_QUAD):
-                new = {"kind": r["kind"]}
-                for x in ("s", "p", "o", "g"):
-                    if x in r:
-                        new[x] = fill_pid(r[x])
-                fixed_out.append(new)
-            elif r["kind"] == KIND_GRAPH_START:
-                fixed_out.append({"kind": r["kind"], "g": fill_pid(r["g"])})
-            elif r["kind"] == KIND_NAMESPACE:
-                fixed_out.append({**r, "iri": fill_pid(r.get("iri"))})
-            else:
-                fixed_out.append(r)
-        if not injected:
-            fixed_out.append(entry)
-        out = fixed_out
-    maxima["options"] = options
-    return out, maxima
+    if t["k"] == JW.T_IRI:
+        return not t["pid"]
+    if t["k"] == JW.T_QUOTED:
+        return any(_has_zero_pid(t[x]) for x in ("s", "p", "o"))
+    return False
 
 
-def _shift_ids(rows: list[dict], name_off: int, prefix_off: int, dt_off: int):
-    """Explicitized rows → rows with table ids shifted by the block
-    offsets (statement refs follow the same arithmetic)."""
+def _block_stats(blobs: list[bytes]) -> tuple[dict, dict, bool, tuple | None]:
+    """Pass 1 over one block's frames, in order: the largest id of each
+    table, the last options row, whether an IRI keeps prefix id 0 (no
+    earlier IRI of its sub-stream had a prefix), and the first wire or
+    sequencing fault as (frame position, message), or None."""
+    state = JW.StreamState()
+    top = {KIND_NAME: 0, KIND_PREFIX: 0, KIND_DATATYPE: 0}
+    options: dict = {}
+    zero_pid = False
+    for i, blob in enumerate(blobs):
+        try:
+            for row in JW.decode_frame(blob):
+                # a residual prefix id 0 only occurs before its
+                # sub-stream's first prefixed IRI
+                scan = not (zero_pid or state.last_iri_pid)
+                x = state.explicit_row(row)
+                kind = x["kind"]
+                if kind in top:
+                    top[kind] = max(top[kind], x["id"])
+                elif kind == KIND_OPTIONS:
+                    options = x
+                elif scan:
+                    zero_pid = any(
+                        _has_zero_pid(x.get(key)) for key in ("s", "p", "o", "g", "iri")
+                    )
+        except ValueError as e:
+            return top, options, zero_pid, (i, str(e))
+        except IndexError:
+            return top, options, zero_pid, (i, "truncated or malformed frame")
+    return top, options, zero_pid, None
 
-    def shift_term(t):
-        if t is None:
-            return None
+
+def _block_frames(
+    blobs: list[bytes], offsets: tuple, first_frame: int, out_opts: dict
+) -> list[tuple[int, list[dict], list]]:
+    """Pass 2 over one block's frames: (output frame index, rows,
+    metadata) per input frame, 1:1. Each row goes through the same
+    explicit walk as pass 1; its table ids shift by the block's
+    ``offsets`` (name, prefix, datatype, empty-prefix id), a residual
+    prefix id 0 becomes the block's empty-prefix entry (declared ahead
+    of the block's first row, so it cannot inherit a neighbour block's
+    prefix), and input options rows are dropped. The merged options row
+    heads output frame 0."""
+    n_off, p_off, d_off, empty_pid = offsets
+    pending = [{"kind": KIND_PREFIX, "id": empty_pid, "value": ""}] if empty_pid else []
+
+    def shift(t: dict) -> dict:
         k = t["k"]
         if k == JW.T_IRI:
-            return {
-                "k": k,
-                "nid": t["nid"] + name_off if t["nid"] else 0,
-                "pid": t["pid"] + prefix_off if t["pid"] else 0,
-            }
-        if k == JW.T_LITERAL:
-            return {**t, "dt": t["dt"] + dt_off if t.get("dt") else 0}
+            pid = t["pid"]
+            return {"k": k, "nid": t["nid"] + n_off, "pid": pid + p_off if pid else empty_pid}
+        if k == JW.T_LITERAL and t.get("dt"):
+            return {**t, "dt": t["dt"] + d_off}
         if k == JW.T_QUOTED:
-            return {
-                "k": k,
-                "s": shift_term(t.get("s")),
-                "p": shift_term(t.get("p")),
-                "o": shift_term(t.get("o")),
-            }
+            return {"k": k, "s": shift(t["s"]), "p": shift(t["p"]), "o": shift(t["o"])}
         return t
 
+    id_off = {KIND_NAME: n_off, KIND_PREFIX: p_off, KIND_DATATYPE: d_off}
+    state = JW.StreamState()
     out = []
-    for row in rows:
-        kind = row["kind"]
-        if kind == KIND_NAME:
-            out.append({**row, "id": row["id"] + name_off})
-        elif kind == KIND_PREFIX:
-            out.append({**row, "id": row["id"] + prefix_off})
-        elif kind == KIND_DATATYPE:
-            out.append({**row, "id": row["id"] + dt_off})
-        elif kind in (KIND_TRIPLE, KIND_QUAD):
-            new = {"kind": kind}
-            for key in ("s", "p", "o", "g"):
-                if key in row:
-                    new[key] = shift_term(row[key])
-            out.append(new)
-        elif kind == KIND_GRAPH_START:
-            out.append({"kind": kind, "g": shift_term(row["g"])})
-        elif kind == KIND_NAMESPACE:
-            out.append({**row, "iri": shift_term(row.get("iri"))})
-        elif kind != KIND_OPTIONS:  # input options rows are dropped
-            out.append(row)
+    for i, blob in enumerate(blobs):
+        rows = [out_opts] if first_frame + i == 0 else []
+        for row in JW.decode_frame(blob):
+            x = state.explicit_row(row)
+            kind = x["kind"]
+            if kind == KIND_OPTIONS:
+                continue
+            rows.extend(pending)
+            pending = []
+            if kind in id_off:
+                x["id"] += id_off[kind]
+            else:
+                for key in ("s", "p", "o", "g", "iri"):
+                    if x.get(key) is not None:
+                        x[key] = shift(x[key])
+            rows.append(x)
+        # frame metadata rides the 1:1 frame mapping untouched (opaque
+        # frame-level payload, not dictionary state)
+        out.append((first_frame + i, rows, JW.decode_frame_metadata(blob)))
     return out
 
 
 def transcode_frames(
     spark: SparkSession,
     frames_list: list[DataFrame],
-    rows_per_frame: int = ROWS_PER_FRAME,
     max_name_table: int | None = None,
     max_prefix_table: int | None = None,
     stream_name: str | None = None,
@@ -1689,15 +1606,16 @@ def transcode_frames(
     """Concatenate N Jelly streams into ONE output stream by remapping
     lookup-table ids — the reference's transcode fast path
     (RdfTranscode.scala:57-82): no term strings are ever decoded or
-    joined. Each input (stream, seg) block is id-explicitized (a pure
-    integer pass per segment, parallel across segments), output ids are
-    ``old_id + block_offset`` per table, and one merged options row
-    heads the stream.
+    joined. Each input (stream, seg) block is walked through
+    ``StreamState.explicit_row`` (a pure integer pass per segment,
+    parallel across segments), output ids are ``old_id + block_offset``
+    per table, and one merged options row heads the stream.
 
     The output declares ``max(required, max_name_table)`` table sizes;
     an explicit ``max_name_table`` smaller than required raises,
     mirroring the output-size ≥ input-size precondition
-    (RdfTranscodeSpec.scala:86)."""
+    (RdfTranscodeSpec.scala:86). A malformed input raises ValueError
+    naming the input and the frame."""
     tagged = None
     for i, frames in enumerate(frames_list):
         t = frames.withColumn("stream", F.lit(i))
@@ -1705,23 +1623,24 @@ def transcode_frames(
     # read by the maxima pass here and by the returned shift pass
     tagged = tagged.localCheckpoint()
 
-    # pass 1: per-block maxima + frame counts + options (id-level parse)
+    # pass 1: per-block maxima + frame counts + options (id-level walk)
     def maxima_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
         pdf = pdf.sort_values("frame_index")
-        rows = []
-        for blob in pdf["frame_bytes"]:
-            rows.extend(JW.decode_frame(bytes(blob)))
-        _, mx = _explicitize_rows(rows)
-        opt = mx["options"] or {}
+        top, opt, zero_pid, fault = _block_stats([bytes(b) for b in pdf["frame_bytes"]])
+        error = None
+        if fault is not None:
+            error = f"frame {int(pdf['frame_index'].iloc[fault[0]])}: {fault[1]}"
         return pd.DataFrame(
             {
                 "stream": [int(pdf["stream"].iloc[0])],
                 "seg": [int(pdf["seg"].iloc[0])],
-                "mn": [mx[KIND_NAME]],
-                "mp": [mx[KIND_PREFIX]],
-                "md": [mx[KIND_DATATYPE]],
+                "mn": [top[KIND_NAME]],
+                # a residual prefix id 0 takes one more prefix slot
+                "mp": [top[KIND_PREFIX] + zero_pid],
+                "md": [top[KIND_DATATYPE]],
+                "zero_pid": [zero_pid],
                 "n_frames": [len(pdf)],
                 "physical": [opt.get("physical", 0)],
                 "flags": [
@@ -1729,6 +1648,7 @@ def transcode_frames(
                     + (2 if opt.get("rdf_star") else 0)
                 ],
                 "logical": [opt.get("logical", 0)],
+                "error": [error],
             }
         )
 
@@ -1737,11 +1657,16 @@ def transcode_frames(
         for r in tagged.groupBy("stream", "seg")
         .applyInPandas(
             maxima_fn,
-            "stream int, seg long, mn long, mp long, md long, n_frames int, "
-            "physical int, flags int, logical int",
+            "stream int, seg long, mn long, mp long, md long, zero_pid boolean, "
+            "n_frames int, physical int, flags int, logical int, error string",
         )
         .collect()
     }
+    for (stream, _), r in sorted(stats.items()):
+        if r["error"] is not None:
+            raise ValueError(
+                f"transcode input {stream + 1} of {len(frames_list)}, {r['error']}"
+            )
     phys = {r["physical"] for r in stats.values()} - {0}
     if len(phys) > 1:
         raise ValueError(
@@ -1756,7 +1681,8 @@ def transcode_frames(
     name_off = prefix_off = dt_off = frame_off = 0
     for key in sorted(stats):
         r = stats[key]
-        offsets[key] = (name_off, prefix_off, dt_off, frame_off)
+        empty_pid = prefix_off + r["mp"] if r["zero_pid"] else 0
+        offsets[key] = ((name_off, prefix_off, dt_off, empty_pid), frame_off)
         name_off += r["mn"]
         prefix_off += r["mp"]
         dt_off += r["md"]
@@ -1793,61 +1719,20 @@ def transcode_frames(
     }
     bc = spark.sparkContext.broadcast((offsets, out_opts))
 
-    # pass 2: explicitize + shift + re-emit frames (1:1 frame mapping,
+    # pass 2: walk + shift + re-emit frames (1:1 frame mapping,
     # renumbered; the merged options row heads frame 0)
     def shift_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
         offs, opts_row = bc.value
         pdf = pdf.sort_values("frame_index")
-        key = (int(pdf["stream"].iloc[0]), int(pdf["seg"].iloc[0]))
-        n_off, p_off, d_off, f_off = offs[key]
-        rows = []
-        bounds = []
-        metas = []
-        for blob in pdf["frame_bytes"]:
-            data = bytes(blob)
-            parsed = JW.decode_frame(data)
-            bounds.append(len(parsed))
-            # frame metadata rides the 1:1 frame mapping through the
-            # id-remap untouched (it is opaque frame-level payload,
-            # not dictionary state)
-            metas.append(JW.decode_frame_metadata(data))
-            rows.extend(parsed)
-        fixed, _ = _explicitize_rows(rows)
-        shifted = _shift_ids(fixed, n_off, p_off, d_off)  # drops options rows
-        # rebuild frames 1:1 with the input, using per-frame
-        # non-options row counts (input options rows were dropped; an
-        # injected empty-prefix entry goes to the first non-empty frame)
-        takes, in_pos = [], 0
-        for n in bounds:
-            takes.append(
-                sum(
-                    1 for row in rows[in_pos : in_pos + n]
-                    if row["kind"] != KIND_OPTIONS
-                )
+        block_offsets, f_off = offs[(int(pdf["stream"].iloc[0]), int(pdf["seg"].iloc[0]))]
+        out = [
+            (0, fi, len(rows), bytearray(JW.encode_frame(rows, metadata=md)))
+            for fi, rows, md in _block_frames(
+                [bytes(b) for b in pdf["frame_bytes"]], block_offsets, f_off, opts_row
             )
-            in_pos += n
-        extra = len(shifted) - sum(takes)
-        if extra:
-            for j, t in enumerate(takes):
-                if t > 0 or j == len(takes) - 1:
-                    takes[j] += extra
-                    break
-        out, out_pos = [], 0
-        for i, non_opt in enumerate(takes):
-            chunk = shifted[out_pos : out_pos + non_opt]
-            out_pos += non_opt
-            if f_off + i == 0:
-                chunk = [opts_row] + chunk
-            out.append(
-                (
-                    0,
-                    f_off + i,
-                    len(chunk),
-                    bytearray(JW.encode_frame(chunk, metadata=metas[i])),
-                )
-            )
+        ]
         return pd.DataFrame(
             out, columns=["seg", "frame_index", "n_rows", "frame_bytes"]
         )

@@ -43,8 +43,9 @@ Schema (field numbers; proto3 semantics — zero/empty omitted):
   Rdf{Name,Prefix,Datatype}Entry := { 1: id, 2: value }
   RdfNamespaceDeclaration        := { 1: name, 2: RdfIri }
 
-Stateful compression (handled by :class:`StreamState` on decode; the
-Spark encoder always writes the explicit forms, which is legal):
+Stateful compression (handled by :class:`StreamState`, on decode and in
+transcode's id walk; the Spark encoder always writes the explicit forms,
+which is legal):
   - entry id 0            = previous entry id + 1 (per table)
   - RdfIri.name_id 0      = previous name_id + 1 (shared across all IRIs
                             in stream order, depth-first through quoted
@@ -665,20 +666,30 @@ class StreamError(ValueError):
 
 
 class StreamState:
-    """Sequential decoder state for ONE stream (= one segment / file).
-
-    Feed rows in stream order; :meth:`resolve_row` returns the resolved
-    form: statements with term tuples ``(value, kind, dt, lang)`` where
-    IRI refs are joined through the name/prefix tables, datatype refs
-    through the datatype table, quoted triples rendered to
-    ``"<< ... >>"`` text, elided terms filled from the previous
-    statement, and implicit ids sequenced. An options row RESETS the
-    state (each options row starts an independent sub-stream — the
+    """Sequential state for ONE stream (= one segment / file), and the
+    one place that holds the wire's sequencing rules: an implicit entry
+    id is the table's previous id + 1; IRI name id 0 is the previous
+    name id + 1; IRI prefix id 0 repeats the previous prefix id; an
+    elided statement term repeats the previous statement's term; an
+    options row resets the state (a new sub-stream — the
     concatenated-streams contract, RdfTranscodeSpec.scala:53).
+
+    Feed rows in stream order to ONE of two walks, which share those
+    rules: :meth:`resolve_row` (decode) joins ids through the tables
+    into term tuples ``(value, kind, dt, lang)``, quoted triples
+    rendered to ``"<< ... >>"`` text; :meth:`explicit_row` (transcode)
+    stays at the id level and looks up no table.
 
     ``strict`` additionally enforces the declared table bounds
     (entry id must be within max size — the P8 conformance check).
     """
+
+    # slots: faster attribute access, ~2% of resolve time
+    __slots__ = (
+        "strict", "options", "names", "prefixes", "datatypes", "tables",
+        "last_entry", "last_iri_nid", "last_iri_pid", "prev_terms",
+        "current_graph", "clock", "written", "set_at",
+    )
 
     def __init__(self, strict: bool = False):
         self.strict = strict
@@ -689,134 +700,129 @@ class StreamState:
         self.names: dict[int, str] = {}
         self.prefixes: dict[int, str] = {}
         self.datatypes: dict[int, str] = {}
-        self.last_name_entry = 0
-        self.last_prefix_entry = 0
-        self.last_dt_entry = 0
+        self.tables = {K_NAME: self.names, K_PREFIX: self.prefixes, K_DATATYPE: self.datatypes}
+        self.last_entry = {K_NAME: 0, K_PREFIX: 0, K_DATATYPE: 0}
         self.last_iri_nid = 0
         self.last_iri_pid = 0
-        self.prev_terms: dict[str, tuple | None] = {
+        self.prev_terms: dict[str, object] = {
             "s": None, "p": None, "o": None, "g": None
         }
         self.current_graph: tuple | None = None  # GRAPHS physical type
+        # explicit walk only: statements seen, and the count when each
+        # (kind, id) entry and each statement position was last written
+        self.clock = 0
+        self.written: dict[tuple[int, int], int] = {}
+        self.set_at: dict[str, int] = {}
 
-    # -- entries ----------------------------------------------------------
+    # -- sequencing rules (shared by both walks) --------------------------
 
-    def _entry(self, row: dict, table: dict, last: int, max_size: int, label: str) -> int:
-        eid = row["id"] or (last + 1)
-        if self.strict and max_size and eid > max_size:
+    def _start(self, row: dict) -> None:
+        version = row.get("version") or 0
+        if version > 2:
             raise StreamError(
-                f"{label} entry id {eid} exceeds declared table size {max_size}"
+                f"unsupported stream version {version} (this decoder "
+                f"supports Jelly protocol versions 1-2)"
             )
-        table[eid] = row["value"]
+        self._reset()
+        self.options = row
+
+    def _entry_id(self, kind: int, eid: int) -> int:
+        last = self.last_entry
+        eid = eid or last[kind] + 1
+        last[kind] = eid
+        if self.strict:
+            key, label = _ENTRY_BOUND[kind]
+            max_size = (self.options or {}).get(key) or 0
+            if max_size and eid > max_size:
+                raise StreamError(
+                    f"{label} entry id {eid} exceeds declared table size {max_size}"
+                )
         return eid
 
-    # -- terms ------------------------------------------------------------
-
-    def _resolve_iri(self, term: dict) -> str:
-        nid = term.get("nid") or (self.last_iri_nid + 1)
-        pid = term.get("pid") or self.last_iri_pid
-        self.last_iri_nid = nid
-        self.last_iri_pid = pid
-        local = self.names.get(nid)
-        if local is None:
-            raise StreamError(f"IRI references undefined name id {nid}")
+    def _iri_ids(self, term: dict) -> None:
+        self.last_iri_nid = term.get("nid") or self.last_iri_nid + 1
+        pid = term.get("pid")
         if pid:
-            prefix = self.prefixes.get(pid)
-            if prefix is None:
-                raise StreamError(f"IRI references undefined prefix id {pid}")
-            return prefix + local
-        return local
+            self.last_iri_pid = pid
+
+    def _statement(self, row: dict, term_fn) -> dict:
+        """Each present term through ``term_fn``, each elided one from
+        the previous statement (unrolled: a loop cost 3-4% of resolve)."""
+        kind = row["kind"]
+        prev = self.prev_terms
+        raw = row.get("s")
+        s = prev["s"] = prev["s"] if raw is None else term_fn(raw)
+        raw = row.get("p")
+        p = prev["p"] = prev["p"] if raw is None else term_fn(raw)
+        raw = row.get("o")
+        o = prev["o"] = prev["o"] if raw is None else term_fn(raw)
+        out = {"kind": kind, "s": s, "p": p, "o": o}
+        g = s
+        if kind == K_QUAD:
+            raw = row.get("g")
+            g = out["g"] = prev["g"] = prev["g"] if raw is None else term_fn(raw)
+        if s is None or p is None or o is None or g is None:
+            key = next(k for k, v in out.items() if v is None)
+            raise StreamError(
+                f"statement elides the {key} term with no previous statement"
+            )
+        return out
+
+    # -- resolve walk -----------------------------------------------------
 
     def _resolve_term(self, term: dict) -> tuple:
         """raw term dict → (value, kind, dt, lang)."""
         k = term["k"]
         if k == T_IRI:
-            return self._resolve_iri(term), T_IRI, None, None
+            self._iri_ids(term)
+            local = self.names.get(self.last_iri_nid)
+            if local is None:
+                raise StreamError(f"IRI references undefined name id {self.last_iri_nid}")
+            pid = self.last_iri_pid
+            if pid:
+                prefix = self.prefixes.get(pid)
+                if prefix is None:
+                    raise StreamError(f"IRI references undefined prefix id {pid}")
+                return prefix + local, T_IRI, None, None
+            return local, T_IRI, None, None
         if k == T_BNODE:
             return term.get("v") or "", T_BNODE, None, None
         if k == T_LITERAL:
-            dt_id = term.get("dt") or 0
-            dt = None
-            if dt_id:
-                dt = self.datatypes.get(dt_id)
-                if dt is None:
-                    raise StreamError(f"literal references undefined datatype id {dt_id}")
+            dt_id = term.get("dt")
+            dt = self.datatypes.get(dt_id) if dt_id else None
+            if dt_id and dt is None:
+                raise StreamError(f"literal references undefined datatype id {dt_id}")
             return term.get("v") or "", T_LITERAL, dt, term.get("lang") or None
         if k == T_QUOTED:
-            parts = []
-            for key in ("s", "p", "o"):
-                sub = term.get(key)
-                if sub is None:
-                    raise StreamError("quoted triple with elided term")
-                parts.append(render_resolved_term(*self._resolve_term(sub)))
-            return f"<< {parts[0]} {parts[1]} {parts[2]} >>", T_QUOTED, None, None
+            s, p, o = (
+                render_resolved_term(*self._resolve_term(sub))
+                for sub in _quoted_parts(term)
+            )
+            return f"<< {s} {p} {o} >>", T_QUOTED, None, None
         if k == T_DEFAULT_GRAPH:
             return None, T_DEFAULT_GRAPH, None, None
         raise StreamError(f"unknown term kind {k}")
 
-    def _statement_term(self, row: dict, key: str) -> tuple:
-        raw = row.get(key)
-        if raw is None:
-            prev = self.prev_terms[key]
-            if prev is None:
-                raise StreamError(
-                    f"statement elides the {key} term with no previous statement"
-                )
-            return prev
-        resolved = self._resolve_term(raw)
-        self.prev_terms[key] = resolved
-        return resolved
-
-    # -- public -----------------------------------------------------------
-
     def resolve_row(self, row: dict) -> dict:
-        """One raw row → resolved row dict.
-
-        Resolved statements: {"kind", "s"|"p"|"o"|"g": (value, kind, dt,
-        lang)}; GRAPHS-stream triples additionally carry "g" from the
-        enclosing graph_start. Entries/options/namespace rows pass
-        through (namespace IRIs resolved)."""
+        """One raw row → resolved row dict: statements as {"kind",
+        "s"|"p"|"o"|"g": (value, kind, dt, lang)}, GRAPHS-stream triples
+        with "g" from the enclosing graph_start; entry, options and
+        namespace rows pass through (namespace IRIs resolved)."""
         kind = row["kind"]
-        if kind == K_OPTIONS:
-            version = row.get("version") or 0
-            if version > 2:
-                raise StreamError(
-                    f"unsupported stream version {version} (this decoder "
-                    f"supports Jelly protocol versions 1-2)"
-                )
-            self._reset()
-            self.options = row
-            return dict(row)
-        opts = self.options or {}
-        if kind == K_NAME:
-            self.last_name_entry = self._entry(
-                row, self.names, self.last_name_entry, opts.get("max_name") or 0, "name"
-            )
-            return {"kind": kind, "id": self.last_name_entry, "value": row["value"]}
-        if kind == K_PREFIX:
-            self.last_prefix_entry = self._entry(
-                row, self.prefixes, self.last_prefix_entry,
-                opts.get("max_prefix") or 0, "prefix",
-            )
-            return {"kind": kind, "id": self.last_prefix_entry, "value": row["value"]}
-        if kind == K_DATATYPE:
-            self.last_dt_entry = self._entry(
-                row, self.datatypes, self.last_dt_entry,
-                opts.get("max_dt") or 0, "datatype",
-            )
-            return {"kind": kind, "id": self.last_dt_entry, "value": row["value"]}
-        if kind in (K_TRIPLE, K_QUAD):
-            out = {
-                "kind": kind,
-                "s": self._statement_term(row, "s"),
-                "p": self._statement_term(row, "p"),
-                "o": self._statement_term(row, "o"),
-            }
-            if kind == K_QUAD:
-                out["g"] = self._statement_term(row, "g")
-            elif self.current_graph is not None:
+        if kind == K_TRIPLE or kind == K_QUAD:
+            out = self._statement(row, self._resolve_term)
+            if kind == K_TRIPLE and self.current_graph is not None:
                 out["g"] = self.current_graph
             return out
+        table = self.tables.get(kind)
+        if table is not None:
+            value = row["value"]
+            eid = self._entry_id(kind, row["id"])
+            table[eid] = value
+            return {"kind": kind, "id": eid, "value": value}
+        if kind == K_OPTIONS:
+            self._start(row)
+            return dict(row)
         if kind == K_GRAPH_START:
             g = self._resolve_term(row["g"])
             self.current_graph = g
@@ -825,16 +831,87 @@ class StreamState:
             self.current_graph = None
             return {"kind": kind}
         if kind == K_NAMESPACE:
-            iri = self._resolve_iri(row.get("iri") or {})
+            iri = self._resolve_term(row.get("iri") or _IRI)[0]
             return {"kind": kind, "name": row.get("name") or "", "iri": iri}
         raise StreamError(f"unknown row kind {kind}")
+
+    # -- explicit walk ----------------------------------------------------
+
+    def _explicit_term(self, term: dict) -> dict:
+        k = term["k"]
+        if k == T_IRI:
+            self._iri_ids(term)
+            return {"k": k, "pid": self.last_iri_pid, "nid": self.last_iri_nid}
+        if k == T_QUOTED:
+            s, p, o = (self._explicit_term(sub) for sub in _quoted_parts(term))
+            return {"k": k, "s": s, "p": p, "o": o}
+        if k in (T_BNODE, T_LITERAL, T_DEFAULT_GRAPH):
+            return term
+        raise StreamError(f"unknown term kind {k}")
+
+    def _overwritten(self, term: dict, since: int) -> bool:
+        """Whether an entry the explicit ``term`` references was written
+        at or after statement ``since``."""
+        if term["k"] == T_QUOTED:
+            return any(self._overwritten(term[x], since) for x in ("s", "p", "o"))
+        refs = (
+            ((K_NAME, term["nid"]), (K_PREFIX, term["pid"])) if term["k"] == T_IRI
+            else ((K_DATATYPE, term.get("dt")),)
+        )
+        return any(self.written.get(r, -1) >= since for r in refs)
+
+    def explicit_row(self, row: dict) -> dict:
+        """One raw row → the same row with every id explicit and every
+        elided term filled in. An IRI keeps prefix id 0 only where no
+        earlier IRI of its sub-stream had a prefix; an elided term stays
+        None when an entry it references was overwritten since it was
+        written (its ids would name the new value)."""
+        kind = row["kind"]
+        if kind == K_TRIPLE or kind == K_QUAD:
+            self.clock += 1
+            out = self._statement(row, self._explicit_term)
+            set_at = self.set_at
+            for key in ("s", "p", "o", "g") if kind == K_QUAD else ("s", "p", "o"):
+                if row.get(key) is not None:
+                    set_at[key] = self.clock
+                elif self._overwritten(out[key], set_at[key]):
+                    out[key] = None
+            return out
+        if kind in _ENTRY_BOUND:
+            eid = self._entry_id(kind, row["id"])
+            self.written[kind, eid] = self.clock
+            return {"kind": kind, "id": eid, "value": row["value"]}
+        if kind == K_OPTIONS:
+            self._start(row)
+            return row
+        if kind == K_GRAPH_START:
+            return {"kind": kind, "g": self._explicit_term(row["g"])}
+        if kind == K_GRAPH_END:
+            return row
+        if kind == K_NAMESPACE:
+            return {**row, "iri": self._explicit_term(row.get("iri") or _IRI)}
+        raise StreamError(f"unknown row kind {kind}")
+
+
+_ENTRY_BOUND = {
+    K_NAME: ("max_name", "name"),
+    K_PREFIX: ("max_prefix", "prefix"),
+    K_DATATYPE: ("max_dt", "datatype"),
+}
+_IRI = {"k": T_IRI}  # a namespace row's missing IRI: both ids implicit
+
+
+def _quoted_parts(term: dict) -> tuple:
+    parts = (term.get("s"), term.get("p"), term.get("o"))
+    if None in parts:
+        raise StreamError("quoted triple with elided term")
+    return parts
 
 
 # ---------------------------------------------------------------------------
 # Jelly-text: protobuf TextFormat rendering of frames (the reference's
 # jelly-text format — RdfFromJellySpec.scala:150-163 shows the expected
-# output; RdfToJelly.scala:261-291 parses it back chunked at lines
-# starting '}').
+# output; RdfToJelly.scala:261-291 parses it back).
 # ---------------------------------------------------------------------------
 
 PHYSICAL_ENUM = {
@@ -979,10 +1056,9 @@ def render_frame_text(rows: Iterable[dict]) -> str:
 
 # --- TextFormat subset parser ---------------------------------------------
 
-# one compiled alternation instead of a char-by-char scan (the parse
-# side of the jelly-text roundtrip was 37 us/row, ~90% tokenization):
-# strings (escape-aware), punct, comments, atoms; whitespace is simply
-# never matched and finditer skips it
+# tokens of hand-wrapped input, for _relay_text: strings (escape-aware),
+# punct, comments, atoms; whitespace is never matched, so findall
+# skips it
 _TOKEN_RX = re.compile(
     r'"(?:\\.|[^"\\])*"'      # string literal, escapes opaque here
     r"|[{}:]"                  # punctuation
@@ -1017,37 +1093,6 @@ def _unquote_text(tok: str) -> str:
 
 
 _ENUM_BY_NAME = {**_PHYSICAL_BY_NAME, **_LOGICAL_BY_NAME}
-
-
-def _parse_block(toks: list[str], i: int) -> tuple[dict, int]:
-    """``toks[i]`` = first token after ``{`` → (field dict, index past the
-    closing ``}``). Specialized flat walk of a TextFormat message body —
-    scalar fields are ``name : value``, submessages ``name [:] {`` — that
-    replaced the r4 generic dict-of-lists recursion (the parse side was
-    29 us/row, ~50% of it here; singular fields don't repeat in this
-    schema, so plain last-wins assignment is both correct per protobuf's
-    singular-field rule and half the dict traffic)."""
-    msg: dict = {}
-    while True:
-        t = toks[i]
-        if t == "}":
-            return msg, i + 1
-        i += 1
-        nxt = toks[i]
-        if nxt == "{":
-            msg[t], i = _parse_block(toks, i + 1)
-        elif nxt == ":":
-            if toks[i + 1] == "{":
-                # optional colon before a submessage ("field: { ... }",
-                # valid TextFormat)
-                msg[t], i = _parse_block(toks, i + 2)
-            else:
-                # escape-free strings (the vast majority) skip the regex
-                # sub AND the latin-1/utf-8 redecode in _scalar_value
-                msg[t] = _scalar_value(toks[i + 1])
-                i += 2
-        else:
-            raise ValueError(f"expected ':' or '{{' after field {t!r}")
 
 
 def _term_from_msg(prefix: str, msg: dict) -> dict | None:
@@ -1117,9 +1162,9 @@ def parse_row_text_msg(name: str, msg: dict) -> dict:
 
 
 def _scalar_value(v: str):
-    """Scalar TextFormat value text → python value (shared by the line
-    and token parsers). Check order = observed frequency: table/term ids
-    (ints), then strings, then bools/enum names."""
+    """Scalar TextFormat value text → python value. Check order =
+    observed frequency: table/term ids (ints), then strings, then
+    bools/enum names."""
     c = v[0]
     if c == '"':
         return _unquote_text(v) if "\\" in v else v[1:-1]
@@ -1145,7 +1190,7 @@ def _parse_frame_text_lines(text: str) -> list[dict]:
     so splitting on newlines replaces the regex tokenizer wholesale
     (the tokenizer alone was ~9 us/row, a third of the r4 parse cost).
     Raises ValueError on any line that breaks the shape; the caller
-    falls back to the token parser for hand-wrapped input."""
+    re-lays hand-wrapped input and parses it again."""
     rows: list[dict] = []
     stack: list[dict] = []
     cur: dict | None = None
@@ -1190,8 +1235,8 @@ def _parse_frame_text_lines(text: str) -> list[dict]:
         v = line[i + 1 :].lstrip()
         # a one-line submessage ("s_iri { name_id: 5 }") is NOT the
         # printer shape: the key or an unquoted value would carry
-        # braces/spaces — raise so the token parser handles it instead
-        # of silently storing a bogus scalar under a bogus key
+        # braces/spaces — raise so the input is re-laid instead of
+        # silently storing a bogus scalar under a bogus key
         if not key.replace("_", "").isalnum():
             raise ValueError(f"not a field line: {line!r}")
         if not v or (v[0] == '"' and (len(v) < 2 or v[-1] != '"')):
@@ -1200,52 +1245,45 @@ def _parse_frame_text_lines(text: str) -> list[dict]:
             raise ValueError(f"unsupported value layout: {line!r}")
         cur[key] = _scalar_value(v)
     if stack:
-        raise ValueError("unterminated block")
+        raise ValueError("truncated or unbalanced jelly-text input")
     return rows
+
+
+def _relay_text(text: str) -> str:
+    """Hand-wrapped TextFormat (several fields on a line, one-line
+    submessages, ``name: {`` blocks) → the printer's one-field-per-line
+    shape, rebuilt from the tokens."""
+    toks = [t for t in _TOKEN_RX.findall(text) if t[0] != "#"]
+    lines = []
+    i, n = 0, len(toks)
+    while i < n:
+        t = toks[i]
+        if t == "}":
+            lines.append(t)
+            i += 1
+            continue
+        nxt = toks[i + 1] if i + 1 < n else None
+        if t in "{:" or nxt not in ("{", ":") or (nxt == ":" and i + 2 == n):
+            raise ValueError("truncated or unbalanced jelly-text input")
+        if nxt == ":" and toks[i + 2] != "{":
+            lines.append(f"{t}: {toks[i + 2]}")
+            i += 3
+        else:  # a block, with or without the optional colon
+            lines.append(f"{t} {{")
+            i += 2 if nxt == "{" else 3
+    return "\n".join(lines)
 
 
 def parse_frame_text(text: str) -> list[dict]:
     """TextFormat frame text (one or more `rows { ... }` blocks, comments
-    allowed) → row dicts. Printer-shaped input takes the line-split fast
-    path; anything else falls back to one C-level tokenizer scan plus a
-    flat walk — either way each row dict is built in place, no
+    allowed) → row dicts. Printer-shaped input parses line by line;
+    anything else is first re-laid into that shape by
+    :func:`_relay_text`. Each row dict is built in place, with no
     intermediate message tree."""
     try:
         return _parse_frame_text_lines(text)
     except ValueError:
-        pass
-    try:
-        return _parse_frame_text_tokens(text)
-    except IndexError:
-        # running off the token list = truncated/unbalanced input; keep
-        # the CLI's typed exit-1 contract instead of a raw traceback
-        raise ValueError("truncated or unbalanced jelly-text input") from None
-
-
-def _parse_frame_text_tokens(text: str) -> list[dict]:
-    toks = [t for t in _TOKEN_RX.findall(text) if t[0] != "#"]
-    rows = []
-    i, n = 0, len(toks)
-    while i < n:
-        if toks[i] != "rows":
-            raise ValueError(f"expected 'rows' block, got {toks[i]!r}")
-        i += 1
-        if toks[i] == ":":  # optional colon before the block
-            i += 1
-        if toks[i] != "{":
-            raise ValueError("expected '{' after 'rows'")
-        name = toks[i + 1]
-        i += 2
-        if toks[i] == ":":
-            i += 1
-        if toks[i] != "{":
-            raise ValueError(f"expected '{{' after row field {name!r}")
-        body, i = _parse_block(toks, i + 1)
-        rows.append(parse_row_text_msg(name, body))
-        if toks[i] != "}":
-            raise ValueError("expected '}' closing the rows block")
-        i += 1
-    return rows
+        return _parse_frame_text_lines(_relay_text(text))
 
 
 def resolve_frames(

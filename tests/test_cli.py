@@ -1396,6 +1396,77 @@ def test_cli_transcode_job_budget(spark, tmp_path):
     assert len(jobs) == 5, len(jobs)
 
 
+def _bad_transcode_input(case):
+    from cli_spark import jellywire as JW
+
+    opts = {"kind": JW.K_OPTIONS, "physical": 1, "logical": 1,
+            "version": 1, "max_name": 8}
+    name = {"kind": JW.K_NAME, "id": 1, "value": "http://e/a"}
+    a = {"k": 0, "pid": 0, "nid": 1}
+    tri = {"kind": JW.K_TRIPLE, "s": a, "p": a, "o": a}
+    if case == "unknown_kind_20_in_frame_1":
+        return [JW.encode_frame([opts, name, tri]),
+                JW.encode_frame([tri]) + b"\x0a\x03\xa2\x01\x00"]
+    if case == "version_3":
+        return [JW.encode_frame([{**opts, "version": 3}, name, tri])]
+    return [JW.encode_frame([opts, name, {**tri, "s": None}])]
+
+
+@pytest.mark.parametrize(
+    "case, message",
+    [
+        ("unknown_kind_20_in_frame_1", "frame 1: unknown RdfStreamRow field 20"),
+        ("version_3", "frame 0: unsupported stream version 3"),
+        ("first_statement_elides_subject", "frame 0: statement elides the s term"),
+    ],
+)
+def test_cli_transcode_bad_input_typed_error(spark, tmp_path, capsys, case, message):
+    """A malformed input ends `rdf transcode` in the typed-error
+    contract: `error: …` naming the input and the frame, exit 1, no
+    traceback. The first pass over each block reports the fault as
+    data, so no job is added."""
+    good = os.path.join(
+        os.path.dirname(__file__), "fixtures", "encoder", "triples_pt1_n64.jelly"
+    )
+    from cli_spark import jellywire as JW
+
+    bad = tmp_path / "bad.jelly"
+    bad.write_bytes(JW.write_delimited(_bad_transcode_input(case)))
+    capsys.readouterr()
+    assert main(["rdf", "transcode", good, str(bad), "--to", str(tmp_path / "o.jelly")]) == 1
+    err = capsys.readouterr().err
+    assert f"error: transcode input 2 of 2, {message}" in err, err
+    assert "Traceback" not in err and "Unknown error" not in err
+
+
+def test_cli_to_jelly_reads_one_row_per_line_jelly_text(spark, tmp_path):
+    """Jelly-text with each `rows { … }` block on one line is read
+    whole: every row reaches the binary stream (a reader that cut the
+    text at lines starting `}` found no row in it)."""
+    from cli_spark import jellywire as JW
+
+    opts = {"kind": JW.K_OPTIONS, "stream_name": "", "physical": 1,
+            "generalized": False, "rdf_star": False, "logical": 1,
+            "version": 1, "max_name": 8, "max_prefix": 0, "max_dt": 0}
+    a = {"k": 0, "pid": 0, "nid": 1}
+    rows = [
+        opts,
+        {"kind": JW.K_NAME, "id": 1, "value": "http://e/a"},
+        {"kind": JW.K_NAME, "id": 2, "value": "http://e/b"},
+        {"kind": JW.K_TRIPLE, "s": a, "p": a, "o": a},
+        {"kind": JW.K_TRIPLE, "s": a, "p": {**a, "nid": 2}, "o": a},
+    ]
+    text = tmp_path / "flat.jelly.txt"
+    text.write_text("".join(
+        " ".join(line.strip() for line in JW.render_row_text(r).split("\n")) + "\n"
+        for r in rows
+    ))
+    out = tmp_path / "flat.jelly"
+    assert main(["--quiet", "rdf", "to-jelly", str(text), "--to", str(out)]) == 0
+    _, blobs = JW.split_delimited(out.read_bytes())
+    assert [row for b in blobs for row in JW.decode_frame(b)] == rows
+
+
 def test_cli_validate_job_budget(spark, tmp_path):
     """`rdf validate` labels its Spark jobs with the command and runs a
     fixed handful of them: the structural checks are one aggregate, both

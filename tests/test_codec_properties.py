@@ -283,3 +283,201 @@ def test_jelly_frame_row_codec_roundtrip(rows):
     decoded = JW.decode_frame(JW.encode_frame(rows))
     assert decoded == rows
 
+
+
+# --------------------------------------------- Jelly stream sequencing
+
+
+@st.composite
+def _raw_jelly_stream(draw):
+    """A random raw Jelly stream that uses the wire's stateful
+    compression — implicit entry ids, name id 0 and prefix id 0 in IRIs,
+    elided statement terms, entry slots overwritten in small tables,
+    prefix id 0 before a sub-stream's first prefixed IRI, RDF-star,
+    QUADS, GRAPHS and namespace rows — in one or two sub-streams, cut
+    into random frames (empty and 1-row frames included). Returns the
+    frame blobs."""
+    from cli_spark import jellywire as JW
+
+    physical = draw(st.sampled_from([1, 2, 3]))
+    rows: list[dict] = []
+    for _ in range(draw(st.integers(1, 2))):
+        rdf_star = draw(st.booleans())
+        rows.append({
+            "kind": JW.K_OPTIONS, "stream_name": "", "physical": physical,
+            "generalized": False, "rdf_star": rdf_star, "logical": 0,
+            "version": 1, "max_name": 8, "max_prefix": 4, "max_dt": 4,
+        })
+        last = {JW.K_NAME: 0, JW.K_PREFIX: 0, JW.K_DATATYPE: 0}
+        defined: dict[int, set] = {k: set() for k in last}
+        iri_ids = {"nid": 0, "pid": 0}
+        seen: set[str] = set()
+        in_graph = False
+
+        def entry(kind):
+            eid = draw(st.integers(1, min(last[kind] + 1, 5)))
+            implicit = eid == last[kind] + 1 and draw(st.booleans())
+            last[kind] = eid
+            defined[kind].add(eid)
+            rows.append({
+                "kind": kind, "id": 0 if implicit else eid,
+                "value": draw(st.sampled_from(["a", "b", "c/", "d#"])),
+            })
+
+        def iri():
+            if not defined[JW.K_NAME]:
+                entry(JW.K_NAME)
+            nid = draw(st.sampled_from(sorted(defined[JW.K_NAME])))
+            if iri_ids["pid"] == 0 and (not defined[JW.K_PREFIX] or draw(st.booleans())):
+                pid = 0
+            else:
+                pid = draw(st.sampled_from(sorted(defined[JW.K_PREFIX])))
+            term = {
+                "k": JW.T_IRI,
+                "pid": 0 if pid == iri_ids["pid"] and draw(st.booleans()) else pid,
+                "nid": 0 if nid == iri_ids["nid"] + 1 and draw(st.booleans()) else nid,
+            }
+            iri_ids["nid"] = nid
+            iri_ids["pid"] = pid or iri_ids["pid"]
+            return term
+
+        def term(depth=0):
+            kind = draw(st.integers(0, 3 if rdf_star and depth < 2 else 2))
+            if kind == 0:
+                return iri()
+            if kind == 1:
+                return {"k": JW.T_BNODE, "v": draw(st.sampled_from(["x", "y"]))}
+            if kind == 2:
+                dts = sorted(defined[JW.K_DATATYPE])
+                dt = draw(st.sampled_from([0] + dts))
+                lang = None if dt else draw(st.sampled_from([None, "en"]))
+                return {"k": JW.T_LITERAL, "v": draw(st.sampled_from(["", "v"])),
+                        "lang": lang, "dt": dt}
+            s = term(depth + 1)
+            p = iri()
+            return {"k": JW.T_QUOTED, "s": s, "p": p, "o": term(depth + 1)}
+
+        def graph():
+            kind = draw(st.integers(0, 2))
+            if kind == 0:
+                return iri()
+            if kind == 1:
+                return {"k": JW.T_BNODE, "v": "g"}
+            return {"k": JW.T_DEFAULT_GRAPH}
+
+        for action in draw(st.lists(st.integers(0, 8), min_size=1, max_size=24)):
+            if action <= 2:
+                entry((JW.K_NAME, JW.K_NAME, JW.K_PREFIX)[action] if action < 2
+                      else draw(st.sampled_from([JW.K_PREFIX, JW.K_DATATYPE])))
+            elif action == 3:
+                rows.append({"kind": JW.K_NAMESPACE, "name": "ns", "iri": iri()})
+            elif physical == 3 and action == 4:
+                if in_graph:
+                    rows.append({"kind": JW.K_GRAPH_END})
+                else:
+                    rows.append({"kind": JW.K_GRAPH_START, "g": graph()})
+                in_graph = not in_graph
+            else:
+                kind = JW.K_QUAD if physical == 2 else JW.K_TRIPLE
+                row = {"kind": kind}
+                for key in ("s", "p", "o", "g") if kind == JW.K_QUAD else ("s", "p", "o"):
+                    if key in seen and draw(st.integers(0, 2)) == 0:
+                        row[key] = None
+                    else:
+                        row[key] = iri() if key == "p" else graph() if key == "g" else term()
+                        seen.add(key)
+                rows.append(row)
+        if in_graph:
+            rows.append({"kind": JW.K_GRAPH_END})
+
+    frames: list[list[dict]] = [[]]
+    for row in rows:
+        frames[-1].append(row)
+        cut = draw(st.integers(0, 5))
+        if cut <= 1:
+            frames.append([])
+        if cut == 0:
+            frames.append([])
+    return [JW.encode_frame(f) for f in frames]
+
+
+def _statements(blobs) -> list[dict]:
+    from cli_spark import jellywire as JW
+
+    return [
+        row for _, _, row in JW.resolve_frames(blobs)
+        if row["kind"] in (JW.K_TRIPLE, JW.K_QUAD)
+    ]
+
+
+def _no_prefix_entry(rows: list[dict]) -> list[dict]:
+    """Explicit rows with each IRI's prefix id 0 (no prefix) pointed at
+    an empty prefix entry declared after each options row: in explicit
+    rows prefix id 0 means "no prefix", which the wire can only say
+    this way once an earlier IRI had a prefix (transcode does the
+    same)."""
+    from cli_spark import jellywire as JW
+
+    def fill(t):
+        if t is None or t["k"] not in (JW.T_IRI, JW.T_QUOTED):
+            return t
+        if t["k"] == JW.T_IRI:
+            return {**t, "pid": t["pid"] or 99}
+        return {**t, **{x: fill(t[x]) for x in ("s", "p", "o")}}
+
+    out = []
+    for x in rows:
+        out.append({k: fill(v) if isinstance(v, dict) else v for k, v in x.items()})
+        if x["kind"] == JW.K_OPTIONS:
+            out.append({"kind": JW.K_PREFIX, "id": 99, "value": ""})
+    return out
+
+
+@settings(max_examples=200, deadline=None)
+@given(_raw_jelly_stream())
+def test_explicit_rows_resolve_like_raw_rows(blobs):
+    """StreamState.explicit_row drops no information: resolving its
+    output gives the statements and entries that resolving the raw rows
+    gives, and it leaves no implicit id behind."""
+    from cli_spark import jellywire as JW
+
+    raw = [row for b in blobs for row in JW.decode_frame(b)]
+    oracle = JW.StreamState()
+    expected = [oracle.resolve_row(r) for r in raw]
+    walk = JW.StreamState()
+    explicit = [walk.explicit_row(r) for r in raw]
+    again = JW.StreamState()
+    got = [again.resolve_row(x) for x in _no_prefix_entry(explicit)]
+    assert [r for r in got if r.get("id") != 99] == expected
+
+    def iris(t):
+        if t is None or t["k"] not in (JW.T_IRI, JW.T_QUOTED):
+            return []
+        if t["k"] == JW.T_IRI:
+            return [t]
+        return [i for x in ("s", "p", "o") for i in iris(t[x])]
+
+    for x in explicit:
+        if x["kind"] in (JW.K_NAME, JW.K_PREFIX, JW.K_DATATYPE):
+            assert x["id"] > 0
+        for key in ("s", "p", "o", "g", "iri"):
+            assert all(i["nid"] > 0 for i in iris(x.get(key)))
+
+
+@settings(max_examples=8, deadline=None)
+@given(_raw_jelly_stream())
+def test_transcode_twice_resolves_to_twice_the_statements(spark, blobs):
+    """Transcoding a stream concatenated with itself resolves to its
+    statements twice, in order. Each example runs one transcode (a few
+    Spark jobs), so the budget is small."""
+    from cli_spark import jelly as J
+    from cli_spark import jellywire as JW
+
+    frames = spark.createDataFrame(
+        [(0, i, -1, bytearray(b)) for i, b in enumerate(blobs)], J.FRAME_SCHEMA
+    )
+    out = sorted(
+        J.transcode_frames(spark, [frames, frames]).collect(),
+        key=lambda r: (r["seg"], r["frame_index"]),
+    )
+    assert _statements([bytes(r["frame_bytes"]) for r in out]) == 2 * _statements(blobs)

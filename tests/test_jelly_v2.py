@@ -341,7 +341,7 @@ def test_transcode_fast_path(spark, iri_triples, quads):
     )
     fa = J.encode_triples(spark, a, prefix_table=True)
     fb = J.encode_triples(spark, b)
-    out = J.transcode_frames(spark, [fa, fb], rows_per_frame=64)
+    out = J.transcode_frames(spark, [fa, fb])
     back = J.decode_triples(J.decode_frames(out))
     key = ["subj", "pred", "obj", "obj_kind"]
     assert _set(back, key) == _set(a, key) | _set(b, key)
@@ -503,7 +503,7 @@ def test_transcode_upstream_golden_fixtures(spark):
     ]
     frames = J.read_jelly_file(spark, f"{base}/everythingTriple.jelly")
     direct = J.decode_triples(J.decode_frames(frames))
-    out = J.transcode_frames(spark, [frames], rows_per_frame=7)
+    out = J.transcode_frames(spark, [frames])
     back = J.decode_triples(J.decode_frames(out))
     assert _set(back, tkey) == _set(direct, tkey)
     assert direct.count() > 0
@@ -511,7 +511,7 @@ def test_transcode_upstream_golden_fixtures(spark):
     qkey = tkey + ["graph", "graph_kind", "graph_dt", "graph_lang"]
     qframes = J.read_jelly_file(spark, f"{base}/everythingQuad.jelly")
     qdirect = J.decode_quads(J.decode_frames(qframes))
-    qout = J.transcode_frames(spark, [qframes, qframes], rows_per_frame=5)
+    qout = J.transcode_frames(spark, [qframes, qframes])
     qback = J.decode_quads(J.decode_frames(qout))
     assert _set(qback, qkey) == _set(qdirect, qkey)
     assert qdirect.count() > 0
@@ -631,7 +631,7 @@ def test_frame_metadata_wire_roundtrip_and_transcode(spark, iri_triples):
         for i, r in enumerate(rows)
     ]
     fa_md = spark.createDataFrame(tagged, J.FRAME_SCHEMA)
-    out = J.transcode_frames(spark, [fa_md], rows_per_frame=64)
+    out = J.transcode_frames(spark, [fa_md])
     got = {
         int(r["frame_index"]): JW.decode_frame_metadata(bytes(r["frame_bytes"]))
         for r in out.collect()

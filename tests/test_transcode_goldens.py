@@ -341,6 +341,37 @@ def test_transcode_encoder_fixtures_golden(spark, tmp_path):
         assert _digest(data) == goldens[name], name
 
 
+def test_transcode_keeps_elision_over_overwritten_entry(spark, tmp_path):
+    """An elided term whose name, prefix or datatype slot was
+    overwritten after the term was written stays elided in the output:
+    filled in with its ids, it would name the slot's new value (subject
+    a would become z)."""
+    stream = [
+        ([
+            _opts(1, logical=1),
+            _prefix("http://e/"), _name("a"), _name("p"),
+            _entry(JW.K_DATATYPE, XSD_INT),
+            _triple(_iri(1, 1), _iri(2, 1), _lit("1", dt=1)),
+        ], None),
+        ([
+            _name("z", 1),
+            _triple(None, _iri(2, 1), None),
+            _entry(JW.K_DATATYPE, "http://e/dt", 1),
+            _triple(None, None, None),
+            _triple(_iri(1, 1), None, _lit("2", dt=1)),
+        ], None),
+    ]
+    blobs = _blobs(stream)
+    data = _transcode_file(spark, [blobs], str(tmp_path / "out.jelly"))
+    _, out = JW.split_delimited(data)
+    got = _statements(out)
+    assert got == _statements(blobs)
+    assert [st["s"][0] for st in got] == ["http://e/a"] * 3 + ["http://e/z"]
+    raw = [r for b in out for r in JW.decode_frame(b) if r["kind"] == JW.K_TRIPLE]
+    assert [r["s"] is None for r in raw] == [False, True, True, False]
+    assert [r["o"] is None for r in raw] == [False, False, True, False]
+
+
 if __name__ == "__main__":
     import tempfile
 
