@@ -7,6 +7,9 @@ silently corrupts data at scale:
   langtags, named graphs, quoted triples)
 - the N-Triples escape/unescape pair
 - the pure-numpy media codecs (PNG/BMP/PPM/WAV) over randomized arrays
+- the Jelly stream-state walks over random raw streams that use the
+  wire's stateful compression: ``StreamState.explicit_row`` against
+  ``resolve_row``, and transcode against resolution
 
 Example-based tests cover the known shapes; these sweep the input space
 the examples can't."""
@@ -367,8 +370,7 @@ def _raw_jelly_stream(draw):
 
         for action in draw(st.lists(st.integers(0, 8), min_size=1, max_size=24)):
             if action <= 2:
-                entry((JW.K_NAME, JW.K_NAME, JW.K_PREFIX)[action] if action < 2
-                      else draw(st.sampled_from([JW.K_PREFIX, JW.K_DATATYPE])))
+                entry(draw(st.sampled_from([JW.K_NAME, JW.K_NAME, JW.K_PREFIX, JW.K_DATATYPE])))
             elif action == 3:
                 rows.append({"kind": JW.K_NAMESPACE, "name": "ns", "iri": iri()})
             elif physical == 3 and action == 4:
